@@ -615,9 +615,10 @@ def main() -> None:
         },
     }
 
-    # Republish the ann_lsh / ann_pq knob sweeps (tools_lsh_sweep.py,
-    # tools_pq_sweep.py) next to the chosen points so the published
-    # recalls always carry the grids that justified them.
+    # Republish the ann_lsh / ann_pq knob sweeps next to the chosen
+    # points so the published recalls always carry the grids that
+    # justified them. lsh_sweep.json and pq_sweep.json are frozen
+    # records: the per-call operators that produced them are gone.
     def _load_sweep(fname):
         p = os.path.join(os.path.dirname(os.path.abspath(__file__)), fname)
         if os.path.exists(p):

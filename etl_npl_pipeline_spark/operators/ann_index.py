@@ -1,9 +1,9 @@
-"""Persisted ANN index lifecycle: build once, query many.
+"""Persisted ANN index lifecycle: build once, query many — the one
+search path for every approximate ANN family (IVF, PQ, LSH).
 
-The r6-era ANN operators retrained their models per invocation —
-correct, but the wrong production shape: at 100 TB you cannot
-collect a training sample, re-run k-means, and re-encode the corpus
-for every query batch. This module splits each ANN family into
+At 100 TB you cannot collect a training sample, re-run k-means, and
+re-encode the corpus for every query batch, so each family splits
+into
 
 - ``build_ann_index``: train the coarse quantizer (IVF k-means
   centroids), the PQ per-subspace codebooks, and materialize the
@@ -15,13 +15,16 @@ for every query batch. This module splits each ANN family into
   re-encode — the only per-query work is the candidate join and the
   exact re-rank, which is the part that should scale with |Q|.
 
-Determinism contract: the builders delegate to the same seeded
-trainers/encoders the per-call operators used (`ivf._centroids`,
-`pq.train_pq_codebooks`, `pq.pq_encode`,
+Determinism contract: the builders run the seeded trainers/encoders
+(`ivf._centroids`, `pq.train_pq_codebooks`, `pq.pq_encode`,
 `similarity._lsh_table_signatures`), and the normalized corpus
-vectors are persisted from the same Catalyst `l2_normalize`
-expression — parquet round-trips doubles exactly — so query results
-(and bench recall@5) are bit-identical to the retrain-per-call path.
+vectors are persisted from the Catalyst `l2_normalize` expression —
+parquet round-trips doubles exactly. Every exact score comes from
+the ascending-dim fold (`pair_dot` row-wise, the shared
+`similarity` block kernel in the cogroup paths), so full-probe IVF
+and PQ with k' >= |corpus| equal `brute_force_topk` bit for bit,
+and the sf0.001 rows of ann_ivf / ann_pq / ann_lsh are pinned by
+digest in tests/test_ann_index.py.
 
 Scale notes:
 - The vectors artifact is written ``partitionBy("cell")`` so an IVF
@@ -57,7 +60,15 @@ from etl_npl_pipeline_spark.operators.pq import (
     train_pq_codebooks,
 )
 from etl_npl_pipeline_spark.operators.similarity import (
+    _block_frame,
+    _block_topk,
+    _chunk_grid,
+    _emit_topk,
+    _empty_result,
     _lsh_table_signatures,
+    _matrix,
+    _norm_dim_ordered,
+    _topk,
     l2_normalize,
     pair_dot,
 )
@@ -295,14 +306,6 @@ def _check_knobs(index_dir: str, **caller: int) -> dict:
     return man
 
 
-def _empty_result(spark: SparkSession) -> DataFrame:
-    # empty query set: the answer is the empty relation in the
-    # normal output schema (mirrors similarity.brute_force_topk)
-    return spark.createDataFrame(
-        [], "query_id long, rank int, neighbor_id long, cos_sim double"
-    )
-
-
 def build_ann_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -426,8 +429,8 @@ def build_ann_index(
         os.path.join(build_dir, "pq_codes")
     )
 
-    # --- LSH: bucket postings (t, sig, neighbor_id) — exactly the
-    # exploded index side of lsh_topk_multi, built once. The planes
+    # --- LSH: bucket postings (t, sig, neighbor_id) — the exploded
+    # corpus side of the multi-table probe join, built once. The planes
     # are seed-derived (stateless), so only the postings persist.
     sig_udf = _lsh_table_signatures(lsh_planes, lsh_tables)
     (
@@ -756,17 +759,6 @@ def _vectors(spark: SparkSession, index_dir: str) -> DataFrame:
     )
 
 
-def _topk(cand: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
-
-
 def ivf_query(
     spark: SparkSession,
     index_dir: str,
@@ -854,54 +846,17 @@ def ivf_query(
         )
 
         def _score_cell(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cos_sim": []}
-            ).astype(
-                {
-                    "query_id": np.int64,
-                    "neighbor_id": np.int64,
-                    "cos_sim": np.float64,
-                }
-            )
             if not len(qpdf) or not len(cpdf):
-                return empty
-            qids = qpdf["query_id"].to_numpy()
-            qm = np.concatenate(qpdf["qv_raw"].to_numpy()).astype(
-                np.float64
-            ).reshape(len(qpdf), -1)
-            # dim-ordered normalization — bit-identical to the JVM
-            # l2_normalize fold (the brute_force_topk contract)
-            nn = np.zeros(len(qm))
-            for d in range(qm.shape[1]):
-                nn = nn + qm[:, d] * qm[:, d]
-            qm = qm / np.sqrt(np.where(nn == 0.0, 1.0, nn))[:, None]
-            # corpus vectors come PRE-normalized from the artifact —
-            # used as stored, exactly like the row-wise pair_dot path
-            cids = cpdf["neighbor_id"].to_numpy()
-            cm = np.concatenate(cpdf["cv"].to_numpy()).astype(
-                np.float64
-            ).reshape(len(cpdf), -1)
-            out_q, out_n, out_s = [], [], []
-            for lo in range(0, len(qids), 256):
-                qs = qm[lo : lo + 256]
-                scores = np.zeros((len(cids), len(qs)))
-                for d in range(qm.shape[1]):
-                    scores = scores + np.outer(cm[:, d], qs[:, d])
-                for j in range(len(qs)):
-                    col = scores[:, j]
-                    mask = cids != qids[lo + j]
-                    cid, cs = cids[mask], col[mask]
-                    top = min(k, len(cid))
-                    order = np.lexsort((cid, -cs))[:top]
-                    out_q.append(np.full(top, qids[lo + j]))
-                    out_n.append(cid[order])
-                    out_s.append(cs[order])
-            return pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cos_sim": np.concatenate(out_s),
-                }
+                return _block_frame([])
+            # queries normalize with the l2_normalize fold; corpus
+            # vectors come PRE-normalized from the artifact — used as
+            # stored, exactly like the row-wise pair_dot path
+            return _block_topk(
+                qpdf["query_id"].to_numpy(),
+                _norm_dim_ordered(_matrix(qpdf["qv_raw"])),
+                cpdf["neighbor_id"].to_numpy(),
+                _matrix(cpdf["cv"]),
+                k,
             )
 
         sims = (
@@ -1010,37 +965,22 @@ def pq_query(
         codes = codes.join(
             allowed_ids.select("neighbor_id"), "neighbor_id", "left_semi"
         )
-    n_c = codes.count()
-    n_qc = max(1, -(-n_q // query_chunk_rows))
-    n_cc = max(1, -(-n_c // code_chunk_rows))
-
-    # Exploded chunk ids cast to long: pmod(xxhash64) is bigint, and a
-    # cogroup with int-vs-bigint key types on opposite sides partitions
-    # the same (qc, cc) cell differently, silently unpairing blocks
-    # (same bug class as brute_force_topk, fixed r11).
-    q_rep = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv_raw"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_qc)).alias("qc"),
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), F.lit(n_cc - 1).cast("long"))
-        ).alias("cc"),
-    )
-    c_rep = codes.select(
+    q_rep, c_rep = _chunk_grid(
+        queries,
+        [F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv_raw")],
+        id_col,
+        n_q,
+        query_chunk_rows,
+        codes,
+        ["neighbor_id", "codes"],
         "neighbor_id",
-        "codes",
-        F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(n_cc)).alias("cc"),
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), F.lit(n_qc - 1).cast("long"))
-        ).alias("qc"),
+        codes.count(),
+        code_chunk_rows,
     )
 
     def adc_block(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "adc": []}
-        ).astype({"query_id": np.int64, "neighbor_id": np.int64, "adc": np.float64})
         if not len(qpdf) or not len(cpdf):
-            return empty
+            return _block_frame([], "adc")
         q_ids = qpdf["query_id"].to_numpy()
         q_mat = np.vstack(qpdf["qv_raw"].to_numpy()).astype(np.float64)
         q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
@@ -1052,29 +992,17 @@ def pq_query(
         cm = np.vstack(cpdf["codes"].to_numpy()).astype(np.int64)
         nid = cpdf["neighbor_id"].to_numpy()
         sub_idx = np.arange(m_sub)
-        rows_q, rows_n, rows_s = [], [], []
+        parts = []
         for qi in range(len(q_ids)):
             adc = lut[qi][sub_idx[None, :], cm].sum(axis=1)
-            # deterministic top-k': adc desc, neighbor_id asc.
-            # Self matches are excluded INSIDE the block (r10, r9
-            # ADVICE): filtering after the cogroup let the block
-            # holding the query's own code row spend one of its k'
-            # slots on the self match, making the candidate set
-            # depend on the chunk grid — now every block emits
-            # exactly its top-k' NON-SELF rows and the grid
-            # decomposition is exact.
-            keep = np.lexsort((nid, -adc))
-            keep = keep[nid[keep] != q_ids[qi]][:k_prime]
-            rows_q.append(np.full(len(keep), q_ids[qi]))
-            rows_n.append(nid[keep])
-            rows_s.append(adc[keep])
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(rows_q),
-                "neighbor_id": np.concatenate(rows_n),
-                "adc": np.concatenate(rows_s),
-            }
-        )
+            # deterministic top-k' (adc desc, neighbor_id asc) with
+            # self matches excluded INSIDE the block (r10, r9 ADVICE):
+            # filtering after the cogroup let the block holding the
+            # query's own code row spend one of its k' slots on the
+            # self match, making the candidate set depend on the
+            # chunk grid.
+            parts += _emit_topk(q_ids[qi : qi + 1], nid, adc[:, None], k_prime)
+        return _block_frame(parts, "adc")
 
     partials = (
         q_rep.groupby("qc", "cc")

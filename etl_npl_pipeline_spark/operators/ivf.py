@@ -1,26 +1,24 @@
-"""IVF (inverted-file) approximate nearest neighbor search.
+"""IVF (inverted-file) coarse-quantizer training.
 
-The scale path for ANN beyond hyperplane LSH: partition the corpus
-into coarse cells with k-means, then search only the ``n_probe``
-cells nearest each query.
+The seeded trainer behind the persisted IVF index
+(``ann_index.build_ann_index``), the PQ codebooks (``pq``) and
+``similarity.semantic_near_dups``' cell assignment:
 
 - Training is seeded numpy k-means on a driver-collected sample
   (capped) — the model is a tiny centroid matrix that ships to
   executors inside a pandas_udf closure.
-- Cell assignment and probe-list computation are numpy-vectorized
-  (centroid matrix × Arrow batch), map-only.
-- The search is an equi-join on cell id: cost is
-  |Q| x n_probe x avg_cell_size instead of |Q| x |corpus|.
+- ``_sq_dists`` is the vectorized squared-L2 kernel that cell
+  assignment and probe-list computation run per Arrow batch.
+
+Search itself (probe lists, cell join, exact re-rank) lives in
+``ann_index.ivf_query``.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
-
-from etl_npl_pipeline_spark.operators.similarity import l2_normalize, pair_dot
+from pyspark.sql import DataFrame
 
 
 TRAIN_SAMPLE_CAP = 100_000
@@ -88,61 +86,3 @@ def _centroids(corpus: DataFrame, vec_col: str, n_clusters: int, seed: int) -> n
     m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
     return _kmeans_lloyd(m, n_clusters, seed)
 
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_clusters: int = 8,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k via IVF cells (k-means coarse quantizer).
-
-    Recall knob: n_probe (cells per query). n_probe == n_clusters
-    degenerates to exact brute force.
-    """
-    cents = _centroids(corpus, vec_col, n_clusters, seed)
-
-    def _norm_rows(vs: pd.Series) -> np.ndarray:
-        m = np.concatenate(vs.to_numpy()).astype(np.float64).reshape(len(vs), -1)
-        return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-
-    @F.pandas_udf("long")
-    def assign_cell(vs: pd.Series) -> pd.Series:
-        d = _sq_dists(_norm_rows(vs), cents)
-        return pd.Series(d.argmin(axis=1).astype(np.int64))
-
-    @F.pandas_udf("array<long>")
-    def probe_cells(vs: pd.Series) -> pd.Series:
-        d = _sq_dists(_norm_rows(vs), cents)
-        order = np.argsort(d, axis=1)[:, :n_probe].astype(np.int64)
-        return pd.Series(list(order))
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        l2_normalize(F.col(vec_col)).alias("cv"),
-        assign_cell(F.col(vec_col)).alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        l2_normalize(F.col(vec_col)).alias("qv"),
-        F.explode(probe_cells(F.col(vec_col))).alias("cell"),
-    )
-    cand = (
-        q.join(c, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            pair_dot(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )

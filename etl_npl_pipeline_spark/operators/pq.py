@@ -1,4 +1,4 @@
-"""Product-quantization (PQ) approximate nearest neighbor search.
+"""Product-quantization (PQ) training and encoding.
 
 The memory-scale path for ANN: each corpus vector is compressed to
 ``m`` one-byte codes (one per dimension subspace, each quantized
@@ -11,20 +11,15 @@ codes that fit executor memory where raw vectors never would
 (Jégou et al., "Product Quantization for Nearest Neighbor Search",
 IEEE TPAMI 2011 — public method, clean-room implementation).
 
-Spark shape:
+This module holds the seeded pieces the persisted index is built
+from:
 - Training: driver-side numpy k-means per subspace on a bounded
   sample (reuses the IVF trainer); the codebook is a tiny
   (m, k, d/m) tensor that ships inside pandas_udf closures.
 - Encoding: one map-only Arrow pass — argmin against each subspace
   codebook, vectorized over the batch.
-- Search: the query set (bounded by contract) collects to the
-  driver, its per-subspace lookup tables broadcast in a closure;
-  ``mapInPandas`` over the CODES (not the vectors) emits per-batch
-  partial top-k, so the only shuffle is candidates
-  (|Q| × k′ × partitions rows), never the corpus.
-- Optional exact re-rank: the ADC top-k′ candidates join back to
-  the full-precision vectors (broadcast of a tiny id set) and the
-  true cosine re-orders them — the standard IVFADC+R refinement.
+
+The ADC search and its exact re-rank run in ``ann_index.pq_query``.
 """
 
 from __future__ import annotations
@@ -32,13 +27,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from etl_npl_pipeline_spark.operators.ivf import (
     TRAIN_SAMPLE_CAP,
     _kmeans_lloyd,
 )
-from etl_npl_pipeline_spark.operators.similarity import l2_normalize, pair_dot
 
 
 def _norm_rows(vs: pd.Series) -> np.ndarray:
@@ -104,98 +98,3 @@ def pq_encode(
         F.col(id_col).alias("neighbor_id"), encode(F.col(vec_col)).alias("codes")
     )
 
-
-def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    m_subspaces: int = 16,
-    k_codes: int = 16,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k cosine via PQ codes + ADC, exact re-rank of
-    the top ``k * rerank_factor`` ADC candidates.
-
-    Recall knobs: m_subspaces × k_codes (code resolution) and
-    rerank_factor (how deep the exact pass looks). ADC scores only
-    CHOOSE candidates; the emitted cos_sim is exact."""
-    books = train_pq_codebooks(corpus, vec_col, m_subspaces, k_codes, seed)
-    codes = pq_encode(corpus, books, id_col, vec_col)
-
-    # Bounded by contract: the query side of ANN search is small
-    # (here ANN_N_QUERIES); LUTs are (|Q|, m, k) floats in a closure.
-    qrows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("v")
-    ).collect()
-    q_ids = np.array([r["query_id"] for r in qrows])
-    q_mat = np.array([r["v"] for r in qrows], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
-    d_sub = books.shape[2]
-    # lut[q, s, c] = dot(query_q subspace_s, codebook_s code_c)
-    lut = np.einsum(
-        "qsd,skd->qsk",
-        q_mat.reshape(len(q_mat), m_subspaces, d_sub),
-        books,
-    )
-    k_prime = k * rerank_factor
-
-    def partial_topk(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            cm = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)  # (B, m)
-            nid = pdf["neighbor_id"].to_numpy()
-            rows_q, rows_n, rows_s = [], [], []
-            sub_idx = np.arange(m_subspaces)
-            for qi in range(len(q_ids)):
-                adc = lut[qi][sub_idx[None, :], cm].sum(axis=1)  # (B,)
-                top = np.argpartition(-adc, min(k_prime, len(adc) - 1))[:k_prime]
-                rows_q.append(np.full(len(top), q_ids[qi]))
-                rows_n.append(nid[top])
-                rows_s.append(adc[top])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(rows_q),
-                    "neighbor_id": np.concatenate(rows_n),
-                    "adc": np.concatenate(rows_s),
-                }
-            )
-
-    partials = codes.mapInPandas(
-        partial_topk, schema="query_id long, neighbor_id long, adc double"
-    ).where(F.col("query_id") != F.col("neighbor_id"))
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("neighbor_id")
-    )
-    cand = (
-        partials.withColumn("r", F.row_number().over(w_adc))
-        .where(F.col("r") <= k_prime)
-        .select("query_id", "neighbor_id")
-    )
-
-    # exact re-rank: tiny candidate set joins back to true vectors
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), l2_normalize(F.col(vec_col)).alias("qv")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        l2_normalize(F.col(vec_col)).alias("cv"),
-    )
-    exact = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id", pair_dot(F.col("qv"), F.col("cv")).alias("cos_sim")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )

@@ -7,13 +7,15 @@
   Chunk-block cogroup decomposition (r10): both sides stay
   distributed, so corpus-as-queries sweeps verify at any |Q|. Cost
   is inherently |Q| x |corpus| x dim, spread across executors.
-- ``lsh_topk``: single-table random-hyperplane LSH baseline.
-  Signatures come from seed-derived hyperplanes recomputed per
-  Arrow batch (no stored model — any executor can regenerate the
-  projection). Candidates = full-signature bucket collisions;
-  top-k within candidates. At 100 TB the bucket join replaces the
-  |Q| x |corpus| product with |Q| x bucket_size. Production recall
-  needs ``lsh_topk_multi`` (L tables + multiprobe).
+- The exact block top-k kernel (``_chunk_grid``, ``_norm_dim_ordered``,
+  ``_dim_ordered_scores``, ``_emit_topk``, ``_block_topk``, ``_topk``)
+  is shared by ``brute_force_topk``, ``embedding_near_dups_blocked``
+  and the index-served searches in ``ann_index`` (IVF's large-batch
+  cell cogroup, PQ's ADC block emit), so every exact score in the
+  ANN layer comes from one dim-ordered fold.
+- Approximate search (IVF, PQ, multi-table LSH) is served from the
+  persisted index in ``ann_index``; ``_lsh_table_signatures`` here
+  is the stateless signature UDF its LSH postings are built from.
 """
 
 from __future__ import annotations
@@ -21,10 +23,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
-
-N_PLANES = 16
-
+from pyspark.sql import DataFrame, SparkSession, Window
 
 def dot(a: F.Column, b: F.Column) -> F.Column:
     """Left-to-right dot product of two array<double> columns —
@@ -69,10 +68,7 @@ def pair_dot(a: F.Column, b: F.Column) -> F.Column:
     def _pair_dot(pa: pd.Series, pb: pd.Series) -> pd.Series:
         if len(pa) == 0:
             return pd.Series([], dtype=float)
-        n = len(pa)
-        # concat+reshape: ~2x faster than a per-row python listcomp
-        ma = np.concatenate(pa.to_numpy()).astype(np.float64).reshape(n, -1)
-        mb = np.concatenate(pb.to_numpy()).astype(np.float64).reshape(n, -1)
+        ma, mb = _matrix(pa), _matrix(pb)
         acc = np.zeros(len(ma))
         for d in range(ma.shape[1]):
             acc = acc + ma[:, d] * mb[:, d]
@@ -91,6 +87,138 @@ def cosine(a: F.Column, b: F.Column) -> F.Column:
         F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
     )
     return dot(a, b) / (na * nb)
+
+
+def _empty_result(spark: SparkSession) -> DataFrame:
+    # empty query set or empty index: the answer is the empty
+    # relation in the normal top-k output schema
+    return spark.createDataFrame(
+        [], "query_id long, rank int, neighbor_id long, cos_sim double"
+    )
+
+
+def _topk(cand: DataFrame, k: int) -> DataFrame:
+    """Global top-k per query under the (cos_sim desc, neighbor_id
+    asc) total order — the merge step over block partials or
+    candidate pairs."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.asc("neighbor_id")
+    )
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "cos_sim")
+    )
+
+
+def _chunk_grid(
+    q: DataFrame,
+    q_cols: list,
+    q_key: str,
+    n_q: int,
+    q_chunk_rows: int,
+    c: DataFrame,
+    c_cols: list,
+    c_key: str,
+    n_c: int,
+    c_chunk_rows: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Replicated (qc, cc) block grid for a cogroup top-k: the query
+    side (``q_cols`` of ``q``) gets a chunk id qc hashed from
+    ``q_key`` and is exploded across every corpus chunk cc; the
+    corpus side is the mirror image — the unavoidable all-pairs
+    transfer, at chunk granularity. Any grid is exact, so the row
+    counts only size it."""
+    n_qc = max(1, -(-n_q // q_chunk_rows))
+    n_cc = max(1, -(-n_c // c_chunk_rows))
+
+    # Both grouping keys MUST be bigint on BOTH sides: pmod(xxhash64)
+    # yields bigint while explode(sequence(int literals)) yields int,
+    # and a cogroup whose sides disagree on key types hash-partitions
+    # the "same" (qc, cc) cell to different partitions — blocks arrive
+    # unpaired and the empty-side guard silently drops them (r10 bug:
+    # 1,194/1,299 cells lost at a forced 13x29 grid).
+    def replicate(df, cols, key, own, n_own, other, n_other):
+        return df.select(
+            *cols,
+            F.pmod(F.xxhash64(F.col(key)), F.lit(n_own)).alias(own),
+            F.explode(
+                F.sequence(F.lit(0).cast("long"), F.lit(n_other - 1).cast("long"))
+            ).alias(other),
+        )
+
+    return (
+        replicate(q, q_cols, q_key, "qc", n_qc, "cc", n_cc),
+        replicate(c, c_cols, c_key, "cc", n_cc, "qc", n_qc),
+    )
+
+
+def _matrix(vs: pd.Series) -> np.ndarray:
+    """Stack an Arrow array<double> column into a float64 matrix
+    (concat+reshape: ~2x faster than a per-row python listcomp)."""
+    return np.concatenate(vs.to_numpy()).astype(np.float64).reshape(len(vs), -1)
+
+
+def _norm_dim_ordered(m: np.ndarray) -> np.ndarray:
+    """Row-normalize with the norm folded in ascending dim order —
+    bit-identical to the Catalyst ``l2_normalize`` expression."""
+    nn = np.zeros(len(m))
+    for d in range(m.shape[1]):
+        nn = nn + m[:, d] * m[:, d]
+    # zero-vector guard (mirrors l2_normalize): keep all-zero
+    return m / np.sqrt(np.where(nn == 0.0, 1.0, nn))[:, None]
+
+
+def _dim_ordered_scores(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """S[i, j] = a[i] · b[j], accumulated S += outer(a[:,d], b[:,d])
+    in ascending dim order: for every pair the exact FP operation
+    sequence of the scalar left-to-right fold (`dot`, `pair_dot`,
+    the DuckDB oracle). np.dot/matmul use SIMD/pairwise summation
+    and would drift in the last bits."""
+    s = np.zeros((len(a), len(b)))
+    for d in range(a.shape[1]):
+        s += np.outer(a[:, d], b[:, d])
+    return s
+
+
+def _emit_topk(
+    qids: np.ndarray, cids: np.ndarray, scores: np.ndarray, k: int
+) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Per query column j of ``scores`` (|cids| x |qids|): drop the
+    self match, order by (score desc, id asc) and keep the first k.
+    That is the global window's total order, so any global top-k row
+    is in its block's top-k and a block decomposition is exact for
+    any grid. Returns one (query_id, neighbor_id, score) array
+    triple per query."""
+    out = []
+    for j, qid in enumerate(qids):
+        keep = np.lexsort((cids, -scores[:, j]))
+        keep = keep[cids[keep] != qid][:k]
+        out.append((np.full(len(keep), qid), cids[keep], scores[keep, j]))
+    return out
+
+
+_NO_ROWS = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
+
+
+def _block_frame(parts: list, score_col: str = "cos_sim") -> pd.DataFrame:
+    """One cogroup block's output frame from ``_emit_topk`` triples
+    (typed and empty when there are none)."""
+    q, n, s = (np.concatenate(col) for col in zip(_NO_ROWS, *parts))
+    return pd.DataFrame({"query_id": q, "neighbor_id": n, score_col: s})
+
+
+def _block_topk(
+    qids: np.ndarray, qm: np.ndarray, cids: np.ndarray, cm: np.ndarray, k: int
+) -> pd.DataFrame:
+    """Exact per-query top-k cosine of one block; ``qm`` and ``cm``
+    are already row-normalized. Queries score 256 at a time, which
+    bounds peak memory at 256 x |corpus block|."""
+    parts = []
+    for lo in range(0, len(qids), 256):
+        scores = _dim_ordered_scores(cm, qm[lo : lo + 256])
+        parts += _emit_topk(qids[lo : lo + 256], cids, scores, k)
+    return _block_frame(parts)
 
 
 def brute_force_topk(
@@ -138,90 +266,30 @@ def brute_force_topk(
     # yields the empty result through the cogroup.
     n_q = n_q_hint if n_q_hint is not None else queries.count()
     if n_q == 0:
-        # empty query set (0-row embeddings build): the answer is
-        # the empty relation in the normal output schema
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, cos_sim double"
-        )
+        return _empty_result(spark)
     n_c = n_c_hint if n_c_hint is not None else corpus.count()
-    n_qc = max(1, -(-n_q // query_chunk_rows))
-    n_cc = max(1, -(-n_c // corpus_chunk_rows))
-
-    # Both grouping keys MUST be bigint on BOTH sides: pmod(xxhash64)
-    # yields bigint while explode(sequence(int literals)) yields int,
-    # and a cogroup whose sides disagree on key types hash-partitions
-    # the "same" (qc, cc) cell to different partitions — blocks arrive
-    # unpaired and the empty-side guard silently drops them (r10 bug:
-    # 1,194/1,299 cells lost at a forced 13x29 grid).
-    q_rep = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv_raw"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_qc)).alias("qc"),
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), F.lit(n_cc - 1).cast("long"))
-        ).alias("cc"),
+    q_rep, c_rep = _chunk_grid(
+        queries,
+        [F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv_raw")],
+        id_col,
+        n_q,
+        query_chunk_rows,
+        corpus,
+        [F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv_raw")],
+        id_col,
+        n_c,
+        corpus_chunk_rows,
     )
-    c_rep = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv_raw"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_cc)).alias("cc"),
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), F.lit(n_qc - 1).cast("long"))
-        ).alias("qc"),
-    )
-
-    def _norm_dim_ordered(m: np.ndarray) -> np.ndarray:
-        # dim-ordered normalization — bit-identical to l2_normalize
-        nn = np.zeros(len(m))
-        for d in range(m.shape[1]):
-            nn = nn + m[:, d] * m[:, d]
-        return m / np.sqrt(np.where(nn == 0.0, 1.0, nn))[:, None]
 
     def score_block(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "cos_sim": []}
-        ).astype(
-            {"query_id": np.int64, "neighbor_id": np.int64, "cos_sim": np.float64}
-        )
         if not len(qpdf) or not len(cpdf):
-            return empty
-        qids = qpdf["query_id"].to_numpy()
-        qm = _norm_dim_ordered(
-            np.concatenate(qpdf["qv_raw"].to_numpy())
-            .astype(np.float64)
-            .reshape(len(qpdf), -1)
-        )
-        cids = cpdf["neighbor_id"].to_numpy()
-        cm = _norm_dim_ordered(
-            np.concatenate(cpdf["cv_raw"].to_numpy())
-            .astype(np.float64)
-            .reshape(len(cpdf), -1)
-        )
-        dim = qm.shape[1]
-        out_q, out_n, out_s = [], [], []
-        # sub-block over queries bounds peak memory at 256x|c_block|
-        for lo in range(0, len(qids), 256):
-            qs = qm[lo : lo + 256]
-            scores = np.zeros((len(cids), len(qs)))
-            for d in range(dim):
-                scores = scores + np.outer(cm[:, d], qs[:, d])
-            for j in range(len(qs)):
-                col = scores[:, j]
-                mask = cids != qids[lo + j]
-                cid, cs = cids[mask], col[mask]
-                top = min(k, len(cid))
-                # total order (score desc, id asc) — same as the
-                # final window, so block pruning is exact
-                order = np.lexsort((cid, -cs))[:top]
-                out_q.append(np.full(top, qids[lo + j]))
-                out_n.append(cid[order])
-                out_s.append(cs[order])
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cos_sim": np.concatenate(out_s),
-            }
+            return _block_frame([])
+        return _block_topk(
+            qpdf["query_id"].to_numpy(),
+            _norm_dim_ordered(_matrix(qpdf["qv_raw"])),
+            cpdf["neighbor_id"].to_numpy(),
+            _norm_dim_ordered(_matrix(cpdf["cv_raw"])),
+            k,
         )
 
     sims = (
@@ -232,98 +300,7 @@ def brute_force_topk(
             schema="query_id long, neighbor_id long, cos_sim double",
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
-
-
-def lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = N_PLANES,
-) -> DataFrame:
-    """Approximate top-k: candidates share the full hyperplane
-    signature bucket; exact cosine re-ranks within the bucket.
-
-    Bucket equi-join scales as sum of bucket sizes, not |Q|x|C|.
-    Recall trades off with n_planes (more planes → smaller buckets).
-    Signatures use the same one-matmul-per-batch Arrow UDF as the
-    multi-table variant (n_tables=1) — Catalyst HOF folds evaluate
-    interpreted per element and are ~100x slower here.
-    """
-    sig_udf = _lsh_table_signatures(n_planes, 1)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        l2_normalize(F.col(vec_col)).alias("qv"),
-        sig_udf(F.col(vec_col)).getItem(0).alias("sig"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        l2_normalize(F.col(vec_col)).alias("cv"),
-        sig_udf(F.col(vec_col)).getItem(0).alias("sig"),
-    )
-    cand = (
-        q.join(c, "sig")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            pair_dot(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
-
-
-def embedding_near_dups(
-    df: DataFrame,
-    block_col: str,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Near-duplicate pairs by cosine within blocking-key groups.
-
-    The block key (a label, a cluster id, an LSH bucket) bounds the
-    pairwise product per group — the difference between O(n²) and
-    O(sum of group²) at corpus scale.
-    """
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(block_col).alias("blk_a"),
-        l2_normalize(F.col(vec_col)).alias("va"),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(block_col).alias("blk_b"),
-        l2_normalize(F.col(vec_col)).alias("vb"),
-    )
-    return (
-        a.join(
-            b,
-            (F.col("blk_a") == F.col("blk_b")) & (F.col("id_a") < F.col("id_b")),
-        )
-        .select(
-            "id_a",
-            "id_b",
-            pair_dot(F.col("va"), F.col("vb")).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-    )
+    return _topk(sims, k)
 
 
 def _lsh_table_signatures(n_planes: int, n_tables: int, seed: int = 7):
@@ -334,8 +311,8 @@ def _lsh_table_signatures(n_planes: int, n_tables: int, seed: int = 7):
     stateless (no model to ship), and one BLAS matmul replaces
     n_tables*n_planes interpreted HOF folds per row (measured:
     Catalyst HOF lambdas evaluate interpreted per element; see
-    minhash_signatures). Shared by lsh_topk (n_tables=1) and
-    lsh_topk_multi.
+    minhash_signatures). The index build hashes the corpus postings
+    with it and ``ann_index.lsh_query`` the query side.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -349,81 +326,11 @@ def _lsh_table_signatures(n_planes: int, n_tables: int, seed: int = 7):
         rng = np.random.default_rng(seed)
         dim = len(emb.iloc[0])
         planes = rng.standard_normal((total, dim))
-        x = np.concatenate(emb.to_numpy()).astype(np.float64).reshape(len(emb), -1)
-        bits = (x @ planes.T) > 0  # (batch, total)
+        bits = (_matrix(emb) @ planes.T) > 0  # (batch, total)
         packed = bits.reshape(len(emb), n_tables, n_planes).astype(np.int64) @ weights
         return pd.Series(list(packed))
 
     return sigs
-
-
-def lsh_topk_multi(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    n_tables: int = 12,
-    probe_bits: int = 1,
-) -> DataFrame:
-    """Multi-table, multiprobe hyperplane LSH top-k.
-
-    Single-table LSH recall collapses when true neighbors sit at
-    wide angles (θ≈65° ⇒ P[8-bit signature match] ≈ 0.02 — measured
-    on the synthetic embeddings). Standard fixes, both applied:
-
-    - L independent tables: recall 1-(1-p)^L for per-table collision
-      probability p — union of candidates over tables.
-    - Hamming-1 multiprobe (probe_bits=1): each query also probes
-      the n_planes buckets one bit-flip away, boosting p per table
-      by ~n_planes * p_bit without growing the corpus index.
-
-    Cost model at scale: the corpus index is L rows per vector
-    (explode), candidates = sum over (table, probed bucket) of
-    bucket size. Vectors do NOT travel through the explode — the
-    bucket join carries ids only, and exact cosine re-rank joins
-    vectors back by id afterward, so the wide array column is
-    shuffled once per side, not L*(1+probes) times.
-    """
-    sig_udf = _lsh_table_signatures(n_planes, n_tables)
-    c_idx = corpus.select(
-        F.col(id_col).alias("neighbor_id"), sig_udf(F.col(vec_col)).alias("sigs")
-    ).select("neighbor_id", F.posexplode("sigs").alias("t", "sig"))
-    q_sig = queries.select(
-        F.col(id_col).alias("query_id"), sig_udf(F.col(vec_col)).alias("sigs")
-    ).select("query_id", F.posexplode("sigs").alias("t", "sig"))
-    probes = [F.col("sig")]
-    if probe_bits >= 1:
-        probes += [
-            F.col("sig").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)
-        ]
-    q_idx = q_sig.select(
-        "query_id", "t", F.explode(F.array(*probes)).alias("sig")
-    )
-    cand = (
-        q_idx.join(c_idx, ["t", "sig"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), l2_normalize(F.col(vec_col)).alias("qv")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), l2_normalize(F.col(vec_col)).alias("cv")
-    )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", pair_dot(F.col("qv"), F.col("cv")).alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
 
 
 DEFAULT_MAX_BLOCK = 2000
@@ -437,17 +344,16 @@ def embedding_near_dups_blocked(
     vec_col: str = "embedding",
     max_block: int = DEFAULT_MAX_BLOCK,
 ) -> DataFrame:
-    """Vectorized twin of embedding_near_dups: one applyInPandas
-    call per block computes the whole block's pairwise cosine in
-    numpy instead of an interpreted HOF fold per pair (measured ~3x
-    on 2k vectors; the HOF dot evaluates per element).
+    """Near-duplicate pairs by cosine within blocking-key groups:
+    one applyInPandas call per block computes the whole block's
+    pairwise cosine in numpy instead of an interpreted HOF fold per
+    pair (measured ~3x on 2k vectors; the HOF dot evaluates per
+    element). The block key (a label, a cluster id) bounds the
+    pairwise product per group.
 
-    Determinism contract: the DuckDB oracle folds dot products
-    left-to-right starting at 0.0. np.dot/matmul use SIMD/pairwise
-    summation and would drift in the last bits, so this accumulates
-    S += outer(X[:,d], X[:,d]) in ascending dim order — for every
-    pair that is the exact same FP operation sequence as the scalar
-    fold, bit-identical to the oracle.
+    Determinism contract: scores come from ``_dim_ordered_scores``
+    over ``_norm_dim_ordered`` rows — the scalar left-to-right fold's
+    exact FP operation sequence, bit-identical to the DuckDB oracle.
 
     Scale: state is an n_block x n_block similarity matrix, so block
     size is the bound — O(sum over blocks of n_block^2) total work.
@@ -457,7 +363,7 @@ def embedding_near_dups_blocked(
     LSH's DEFAULT_MAX_BUCKET. The check runs inside the per-block
     function, so an oversize block costs its linear shuffle but never
     materializes its quadratic matrix. Route hub blocks to minhash /
-    lsh_topk_multi instead of raising the cap.
+    LSH search (``ann_index.lsh_query``) instead of raising the cap.
     """
     fields = df.select(id_col, block_col).schema
     id_t = fields[0].dataType.simpleString()
@@ -473,21 +379,8 @@ def embedding_near_dups_blocked(
                 {"id_a": [], "id_b": [], "blk": [], "cos_sim": []}
             )
         ids = pdf[id_col].to_numpy()
-        x = (
-            np.concatenate(pdf[vec_col].to_numpy())
-            .astype(np.float64)
-            .reshape(len(pdf), -1)
-        )
-        dim = x.shape[1]
-        nrm = np.zeros(n)
-        for d in range(dim):
-            nrm += x[:, d] * x[:, d]
-        # zero-vector guard (mirrors l2_normalize): keep all-zero
-        nrm = np.where(nrm == 0.0, 1.0, nrm)
-        xn = x / np.sqrt(nrm)[:, None]
-        sim = np.zeros((n, n))
-        for d in range(dim):
-            sim += np.outer(xn[:, d], xn[:, d])
+        xn = _norm_dim_ordered(_matrix(pdf[vec_col]))
+        sim = _dim_ordered_scores(xn, xn)
         ia, ib = np.nonzero(sim >= threshold)
         keep = ids[ia] < ids[ib]
         ia, ib = ia[keep], ib[keep]
@@ -549,11 +442,7 @@ def semantic_near_dups(
             # park everything in a sentinel cell — with a 0-row
             # corpus no rows exist to park anyway
             return pd.Series([-1] * len(vs), dtype=np.int64)
-        m = (
-            np.concatenate(vs.to_numpy())
-            .astype(np.float64)
-            .reshape(len(vs), -1)
-        )
+        m = _matrix(vs)
         m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
         return pd.Series(_sq_dists(m, cents).argmin(axis=1).astype(np.int64))
 

@@ -143,12 +143,6 @@ def _series_from(seg: DataFrame) -> DataFrame:
     )
 
 
-def flowrate_by_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global quarterly flowrate = returned / total revenue
-    (ref: flowrate_transform, src:238-261)."""
-    return quarter_series(spark, sf_dir).select("quarter", "flowrate_ratio")
-
-
 def macro_by_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stand-in macro series: per-quarter avg order value ('gdp')
     and order count, from orders alone
@@ -160,12 +154,6 @@ def macro_by_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
         davg(money("o_totalprice")).alias("avg_order_value"),
         F.count(F.lit(1)).alias("n_orders"),
     )
-
-
-def discount_by_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second macro series: a per-quarter price index, mirroring the
-    groupby-mean in inflation_transformation (ref src:353)."""
-    return quarter_series(spark, sf_dir).select("quarter", "price_index")
 
 
 def npl_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -136,13 +136,6 @@ def cache_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def uncache_tables() -> None:
-    """Unpersist and forget every pinned table."""
-    for df in _PINNED.values():
-        df.unpersist()
-    _PINNED.clear()
-
-
 def _adapt_timestamps(name: str, df: DataFrame) -> DataFrame:
     """Per-vintage timestamp physical adaptations, applied before
     the canonical cast."""

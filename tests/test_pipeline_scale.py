@@ -1,5 +1,5 @@
-"""End-to-end pipeline run, skew salting, IVF ANN, and bucketed
-co-located joins."""
+"""End-to-end pipeline run, skew salting, and bucketed co-located
+joins."""
 
 from __future__ import annotations
 
@@ -62,26 +62,6 @@ def test_salting_spreads_hot_key(spark):
     assert out.count() == 991
 
 
-def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
-    from etl_npl_pipeline_spark.operators.ivf import ivf_topk
-    from etl_npl_pipeline_spark.operators.similarity import brute_force_topk
-
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    queries = emb.where(F.col("vec_id") < 10)
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(queries, emb, k=5).collect()
-    }
-    approx = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk(queries, emb, k=5, n_clusters=8, n_probe=4).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.5, f"IVF recall too low: {recall}"
-
-
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     """Bucketing both sides on the join key co-locates the join:
     the physical plan must contain no Exchange — at 100 TB this is
@@ -136,30 +116,6 @@ def test_connected_components_labels_clusters(spark):
         (10, 10), (11, 10),
         (20, 20), (21, 20), (22, 20),
     }
-
-
-def test_multitable_lsh_recall_vs_brute_force(spark, sf_dir):
-    from etl_npl_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        lsh_topk_multi,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    queries = emb.where(F.col("vec_id") < 10)
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(queries, emb, k=5).collect()
-    }
-    approx = {
-        (r.query_id, r.neighbor_id)
-        for r in lsh_topk_multi(
-            queries, emb, k=5, n_planes=6, n_tables=12, probe_bits=1
-        ).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.8, f"multi-table LSH recall too low: {recall}"
 
 
 def test_sketch_profile_tracks_exact(spark, sf_dir):

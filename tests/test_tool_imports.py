@@ -1,0 +1,56 @@
+"""The top-level scripts (tools_*.py, bench.py) are not imported by
+any other test, so a deleted or renamed package name would break them
+silently. Parse each script — never run it — and check that every
+name it imports from the package, and every attribute it reads off
+an imported package module, still resolves."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import importlib
+import os
+import types
+
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "etl_npl_pipeline_spark"
+SCRIPTS = sorted(
+    os.path.basename(p) for p in glob.glob(os.path.join(ROOT, "tools_*.py"))
+) + ["bench.py"]
+
+
+@pytest.mark.parametrize("script", SCRIPTS)
+def test_script_package_imports_resolve(script):
+    with open(os.path.join(ROOT, script)) as fh:
+        tree = ast.parse(fh.read(), script)
+    missing = []
+    modules = {}  # local alias -> imported package module
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PKG):
+            mod = importlib.import_module(node.module)
+            for a in node.names:
+                obj = getattr(mod, a.name, None)
+                if obj is None:
+                    try:
+                        obj = importlib.import_module(f"{node.module}.{a.name}")
+                    except ImportError:
+                        missing.append(f"{node.module}.{a.name}")
+                        continue
+                if isinstance(obj, types.ModuleType):
+                    modules[a.asname or a.name] = obj
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.startswith(PKG) and a.asname:
+                    modules[a.asname] = importlib.import_module(a.name)
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.ctx, ast.Load)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in modules
+            and not hasattr(modules[node.value.id], node.attr)
+        ):
+            missing.append(f"{modules[node.value.id].__name__}.{node.attr}")
+    assert not missing, f"{script}: unresolved package names {missing}"
