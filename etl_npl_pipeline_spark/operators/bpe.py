@@ -36,57 +36,18 @@ Spark shape:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_npl_pipeline_spark.session import scoped_conf
+
 SEP = "\x01"
 
-
-@contextmanager
-def _round_confs(spark: SparkSession, shuffle_partitions: int = 4):
-    """Scoped session confs for the per-round jobs of the training
-    loop (r14; the drain_confs doctrine applied to the trainer):
-
-    - whole-stage codegen OFF: every round plans a FRESH query (the
-      merge literals are embedded in the generated code), so janino
-      compiles two new stages per round and the compile never
-      amortizes — same argument as the one-shot streaming drains.
-      Measured at sf0.1: ~0.17 s/round compiled vs ~0.07 s
-      interpreted, identical results. A long-lived trainer variant
-      that re-executes one plan many times should keep codegen on.
-    - shuffle partitions pinned small: the per-round exchange carries
-      the DISTINCT SYMBOL-PAIR table — bounded by the (Zipf-bounded)
-      vocab, not the corpus — so corpus scale never needs the batch
-      partition count here. The initial corpus aggregation runs
-      BEFORE this scope opens, at the session's own setting.
-
-    Both confs are restored on exit; the returned merges/state
-    frames are consumed outside the scope at session settings.
-    """
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_cg = spark.conf.get("spark.sql.codegen.wholeStage")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        # AQE OFF for the round jobs (r14): each round's statement is
-        # 3 fixed stages over a small vocab-bounded frame —
-        # nothing to re-plan — but AQE executes it as 3 SEPARATE jobs
-        # with a driver re-planning pause between each (measured: 162
-        # jobs / 50 rounds, inter-job gaps > job wall). One job per
-        # round with the static 8-partition layout halves the
-        # per-round constant; batch-scale queries outside this scope
-        # keep AQE.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_cg)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+# Shuffle partitions of the per-round jobs: the per-round exchange
+# carries the DISTINCT SYMBOL-PAIR table — bounded by the
+# (Zipf-bounded) vocab, not the corpus — so corpus scale never needs
+# the batch partition count there.
+ROUND_PARTITIONS = 4
 
 
 def _initial_segmentation(word_col: F.Column) -> F.Column:
@@ -152,14 +113,14 @@ def bpe_train(
     collect; see _best_pair_sql) — so wall-clock is latency-bound at
     small vocab: fresh-plan Catalyst analysis + scheduling, with the
     per-round constant cut by the r14 restructure (static SQL text
-    instead of ~30 py4j plan-building calls; interpreted eval via
-    _round_confs since a run-once plan never amortizes codegen;
-    4-partition working frame). That constant does NOT grow with
-    corpus size: the per-round data volume is the DISTINCT-WORD
-    table, so at 100 TB the same 50 rounds cost 50 × (one small
-    shuffle over the vocab) — the iterative-algorithm shape MLlib
-    k-means has, not a scan-per-round. The corpus is read exactly
-    once.
+    instead of ~30 py4j plan-building calls; interpreted eval in
+    the scoped round confs since a run-once plan never amortizes
+    codegen; 4-partition working frame). That constant does NOT
+    grow with corpus size: the per-round data volume is the
+    DISTINCT-WORD table, so at 100 TB the same 50 rounds cost 50 ×
+    (one small shuffle over the vocab) — the iterative-algorithm
+    shape MLlib k-means has, not a scan-per-round. The corpus is
+    read exactly once.
     """
     import uuid as _uuid
 
@@ -170,9 +131,9 @@ def bpe_train(
     # rows at any corpus scale), and every round launches one stage
     # over its partitions — 32 near-empty tasks per round was pure
     # scheduler latency (guide §2.2); 4 matches the round jobs'
-    # scoped shuffle parallelism (width sweep at sf0.1: 8 -> 13.3s,
-    # 4 -> 7.0s, 2 -> 6.9s; production trainers over larger vocabs
-    # pass a wider shuffle_partitions).
+    # scoped shuffle parallelism, ROUND_PARTITIONS (width sweep at
+    # sf0.1: 8 -> 13.3s, 4 -> 7.0s, 2 -> 6.9s; production trainers
+    # over larger vocabs raise both).
     vocab = (
         word_freq.select(
             _initial_segmentation(F.col("w")).alias("s"), F.col("freq")
@@ -183,7 +144,29 @@ def bpe_train(
     merges: list[tuple[int, str, str, str, int]] = []
     view = f"bpe_vocab_{_uuid.uuid4().hex[:12]}"
     best_sql = _best_pair_sql(view)
-    with _round_confs(spark):
+    # Scoped confs for the vocab-bounded round jobs, restored on exit;
+    # the returned merges/state frames are consumed outside the scope
+    # at session settings.
+    # - whole-stage codegen OFF: every round plans a FRESH query (the
+    #   merge literals are embedded in the generated code), so janino
+    #   compiles two new stages per round and the compile never
+    #   amortizes — same argument as the one-shot streaming drains.
+    #   Measured at sf0.1: ~0.17 s/round compiled vs ~0.07 s
+    #   interpreted, identical results. A long-lived trainer variant
+    #   that re-executes one plan many times should keep codegen on.
+    # - AQE OFF: each round's statement is 3 fixed stages over a small
+    #   vocab-bounded frame — nothing to re-plan — but AQE executes it
+    #   as 3 SEPARATE jobs with a driver re-planning pause between
+    #   each (measured: 162 jobs / 50 rounds, inter-job gaps > job
+    #   wall). One job per round with the static layout halves the
+    #   per-round constant; batch-scale queries outside this scope
+    #   keep AQE.
+    round_confs = {
+        "spark.sql.shuffle.partitions": str(ROUND_PARTITIONS),
+        "spark.sql.codegen.wholeStage": "false",
+        "spark.sql.adaptive.enabled": "false",
+    }
+    with scoped_conf(spark, round_confs):
         for i in range(n_merges):
             vocab.createOrReplaceTempView(view)
             m = spark.sql(best_sql).collect()[0]["m"]

@@ -31,14 +31,14 @@ components are shallow and the simpler loop wins on constants.
 
 from __future__ import annotations
 
-import contextlib
 import warnings
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from etl_npl_pipeline_spark.session import scoped_conf
 
-@contextlib.contextmanager
+
 def _loop_shuffle_pin(df: DataFrame, n_edges: int):
     """Scope ``spark.sql.shuffle.partitions`` to an iterative loop,
     sized to the EDGE TABLE instead of the session default.
@@ -53,13 +53,9 @@ def _loop_shuffle_pin(df: DataFrame, n_edges: int):
     do this for us here — localCheckpoint materializes each round
     through the static partition number before AQE re-plans."""
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    parts = max(4, min(int(prev), n_edges // 1_000_000 + 4))
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = max(4, min(cap, n_edges // 1_000_000 + 4))
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(parts)})
 
 
 def connected_components(

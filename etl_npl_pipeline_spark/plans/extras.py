@@ -2,9 +2,10 @@
 §2.4 L12, §2.5 ST1-ST2).
 
 The streaming queries drain a real Structured Streaming query
-(availableNow trigger → memory sink) and return the materialized
-table — the driver's oracle then checks the streaming result equals
-the batch semantics (windowed agg / sessionization) exactly.
+through ``streaming.events.drain`` (availableNow trigger → memory
+sink) and return the materialized table — the driver's oracle then
+checks the streaming result equals the batch semantics (windowed
+agg / sessionization) exactly.
 """
 
 from __future__ import annotations
@@ -115,18 +116,13 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id, event_type) key once on first arrival. The oracle is
     the batch DISTINCT — which row wins is arrival-dependent, so
     only the (deterministic) key set is emitted."""
-    from etl_npl_pipeline_spark.streaming.events import (
-        events_stream,
-        run_stream_to_memory,
-    )
+    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
 
     ev = events_stream(spark, sf_dir).select("user_id", "event_type", "ts")
     deduped = ev.withWatermark("ts", "10 minutes").dropDuplicates(
         ["user_id", "event_type"]
     )
-    mem = run_stream_to_memory(
-        deduped, output_mode="append", label="stream_dedup_events"
-    )
+    mem = drain(deduped, "stream_dedup_events")
     return mem.select("user_id", "event_type").orderBy("user_id", "event_type")
 
 
@@ -143,10 +139,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical enrichment shape: the static side broadcasts into
     every micro-batch). Aggregated per segment; oracle = batch
     join."""
-    from etl_npl_pipeline_spark.streaming.events import (
-        events_stream,
-        run_stream_to_memory,
-    )
+    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
 
     ev = events_stream(spark, sf_dir).select("user_id", "value")
     cust = load_table(spark, sf_dir, "customer").select(
@@ -157,9 +150,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("value_sum"),
     )
-    mem = run_stream_to_memory(
-        agg, output_mode="complete", label="stream_static_join"
-    )
+    mem = drain(agg, "stream_static_join", output_mode="complete")
     return mem.orderBy("c_mktsegment")
 
 
@@ -547,10 +538,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-key state scan quadratic (see
     _bucketed_click_purchase_join). Oracle = the equivalent batch
     self-join."""
-    from etl_npl_pipeline_spark.streaming.events import (
-        events_stream,
-        run_stream_to_memory,
-    )
+    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
 
     clicks = (
         events_stream(spark, sf_dir)
@@ -575,9 +563,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = _bucketed_click_purchase_join(
         spark, sf_dir, "inner", clicks, purchases
     )
-    mem = run_stream_to_memory(
-        joined, output_mode="append", label="stream_stream_join"
-    )
+    mem = drain(joined, "stream_stream_join")
     return mem.orderBy("user_id", "click_id", "purchase_id")
 
 
@@ -1265,10 +1251,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     bridged. Session range is [first_event, last_event + gap): an
     event at exactly gap distance starts a NEW session, which the
     oracle mirrors with a >= gap break condition."""
-    from etl_npl_pipeline_spark.streaming.events import (
-        events_stream,
-        run_stream_to_memory,
-    )
+    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
 
     max_ts = (
         load_table(spark, sf_dir, "events")
@@ -1292,9 +1275,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(
         F.session_window("ts", "5 minutes"), "user_id"
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    mem = run_stream_to_memory(
-        agg, output_mode="append", label="stream_session_window"
-    )
+    mem = drain(agg, "stream_session_window")
     return mem.select(
         "user_id",
         F.col("session_window.start").alias("session_start"),
@@ -1339,10 +1320,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     that EVERY click's eviction deadline passes inside the bounded
     drain — making the emitted set exactly the batch LEFT JOIN and
     the oracle deterministic."""
-    from etl_npl_pipeline_spark.streaming.events import (
-        events_stream,
-        run_stream_to_memory,
-    )
+    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
 
     # Each side's watermark stalls at ITS OWN last event (Catalyst
     # pushes the type predicate below the watermark node, so the
@@ -1392,9 +1370,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = _bucketed_click_purchase_join(
         spark, sf_dir, "left_outer", clicks, purchases
     )
-    mem = run_stream_to_memory(
-        joined, output_mode="append", label="stream_stream_left_join"
-    )
+    mem = drain(joined, "stream_stream_left_join")
     return mem.orderBy("user_id", "click_id", "purchase_id")
 
 
@@ -1439,10 +1415,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the rank input is the aggregate, never raw events;
     state never outlives the watermark. Oracle replays the identical
     cutoff in batch SQL."""
-    from etl_npl_pipeline_spark.streaming.events import (
-        events_stream,
-        run_stream_to_memory,
-    )
+    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
 
     max_ts = (
         load_table(spark, sf_dir, "events")
@@ -1463,9 +1436,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    drained = run_stream_to_memory(
-        agg, output_mode="append", label="stream_windowed_topk"
-    )
+    drained = drain(agg, "stream_windowed_topk")
     rk = Window.partitionBy("win_start").orderBy(
         F.col("n").desc(), F.col("event_type")
     )
@@ -1715,10 +1686,7 @@ def stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical cutoff."""
     from pyspark.sql.functions import broadcast
 
-    from etl_npl_pipeline_spark.streaming.events import (
-        events_stream,
-        run_stream_to_memory,
-    )
+    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
 
     max_ts = (
         load_table(spark, sf_dir, "events")
@@ -1739,9 +1707,7 @@ def stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    drained = run_stream_to_memory(
-        agg, output_mode="append", label="stream_anomaly_alerts"
-    )
+    drained = drain(agg, "stream_anomaly_alerts")
     stats = (
         drained.groupBy(F.col("event_type").alias("et"))
         .agg(
@@ -1813,10 +1779,7 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     numRowsDroppedByWatermark == 1 and no duplicate bar emission
     (incl. the SPARK-40925 one-batch lag between the late-events
     and eviction watermarks)."""
-    from etl_npl_pipeline_spark.streaming.events import (
-        events_stream,
-        run_stream_to_memory,
-    )
+    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
 
     ev = events_stream(spark, sf_dir)
     pick = F.struct(F.col("ts"), F.col("event_id"))
@@ -1840,6 +1803,6 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    return run_stream_to_memory(
-        agg, output_mode="complete", label="stream_ohlc_bars"
-    ).orderBy("event_type", "bucket_epoch")
+    return drain(agg, "stream_ohlc_bars", output_mode="complete").orderBy(
+        "event_type", "bucket_epoch"
+    )

@@ -27,6 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_npl_pipeline_spark.sources.tables import load_table
+from etl_npl_pipeline_spark.streaming.events import drain
 
 _DIFF_TMP = "/root/repo/.tmp/snapshot_diff"
 _IVM_TMP = "/root/repo/.tmp/agg_incremental"
@@ -276,6 +277,46 @@ GROUP BY ship_month ORDER BY ship_month
 _STREAM_IVM_TMP = "/root/repo/.tmp/stream_agg_incremental"
 
 
+def _four_slice_stream(
+    frame: DataFrame, key: str, in_dir: str, schema: str
+) -> DataFrame:
+    """Re-shard ``frame`` into four single-file slices under
+    ``in_dir`` (slice = ``key % 4``) and return a file stream that
+    delivers them as four micro-batches (maxFilesPerTrigger=1; one
+    parquet would be one batch).
+
+    ONE partitioned write instead of 4 filtered writes: the loop form
+    scanned the input four times and paid four write commits;
+    hash-partitioning the slice key into 4 tasks lands each slice in
+    exactly one task, so every s=i dir holds exactly one data file.
+    A valueless slice emits NO s=i dir under partitionBy, and with
+    zero data files the drain would run fewer micro-batches, so
+    missing slices are backfilled with an empty single-file dir: the
+    4-micro-batch drain shape is input-independent (empty-tables
+    parity — the drain then emits empty deltas, same as the batch
+    oracle).
+    """
+    import os
+
+    (
+        frame.withColumn("s", F.col(key) % 4)
+        .repartition(4, "s")
+        .write.partitionBy("s")
+        .parquet(in_dir)
+    )
+    empty_slice = frame.limit(0).coalesce(1)
+    for i in range(4):
+        if not os.path.exists(f"{in_dir}/s={i}"):
+            empty_slice.write.parquet(f"{in_dir}/s={i}")
+    return (
+        frame.sparkSession.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(in_dir)
+    )
+
+
 def stream_agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST12: STREAMING incremental view maintenance — the streaming
     twin of ``agg_incremental``. Events arrive as four micro-batches
@@ -296,38 +337,11 @@ def stream_agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", F.col("value").cast("double").alias("value")
     )
     shutil.rmtree(_STREAM_IVM_TMP, ignore_errors=True)
-    # re-shard into 4 files so the file stream delivers 4 real
-    # micro-batches (one parquet in sf_dir = one batch otherwise).
-    # ONE partitioned write instead of 4 filtered writes (r14, the
-    # ST17 fix applied here too): the loop form scanned events four
-    # times and paid four write commits; hash-partitioning the slice
-    # key into 4 tasks lands each slice in exactly one task, so every
-    # s=i dir still holds exactly one data file and the drain still
-    # sees 4 single-file micro-batches.
-    (
-        ev_batch.withColumn("s", F.col("event_id") % 4)
-        .repartition(4, "s")
-        .write.partitionBy("s")
-        .parquet(f"{_STREAM_IVM_TMP}/in")
-    )
-    # A valueless slice emits NO s=i dir under partitionBy (the old
-    # per-slice loop always wrote one file per slice, empty or not),
-    # and with zero data files the drain runs zero micro-batches and
-    # the deltas dir is never created. Backfill missing slices with
-    # an empty single-file dir so the 4-micro-batch drain shape is
-    # input-independent (empty-tables parity: the drain then emits 4
-    # empty deltas, and the refreshed rollup is the empty relation,
-    # same as the batch oracle).
-    _empty_slice = ev_batch.limit(0).coalesce(1)
-    for _i in range(4):
-        if not os.path.exists(f"{_STREAM_IVM_TMP}/in/s={_i}"):
-            _empty_slice.write.parquet(f"{_STREAM_IVM_TMP}/in/s={_i}")
-    stream = (
-        spark.readStream.schema("event_id bigint, event_type string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(f"{_STREAM_IVM_TMP}/in")
+    stream = _four_slice_stream(
+        ev_batch,
+        "event_id",
+        f"{_STREAM_IVM_TMP}/in",
+        "event_id bigint, event_type string, value double",
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -337,13 +351,12 @@ def stream_agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{_STREAM_IVM_TMP}/deltas/b={batch_id}"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{_STREAM_IVM_TMP}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream,
+        "stream_agg_incremental",
+        sink=sink,
+        checkpoint=f"{_STREAM_IVM_TMP}/ckpt",
     )
-    q.awaitTermination()
     n_batches = len(
         [d for d in os.listdir(f"{_STREAM_IVM_TMP}/deltas") if d.startswith("b=")]
     )
@@ -509,13 +522,7 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         _apply_cdc_batch(spark, batch_df)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{_CDC_TMP}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, "stream_cdc_scd2", sink=sink, checkpoint=f"{_CDC_TMP}/ckpt")
     final = max(
         int(d.rsplit("state_seq", 1)[1])
         for d in os.listdir(_CDC_TMP)
@@ -739,36 +746,13 @@ def stream_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the materialized base view + the one-time dim-backfill delta
     j(a, b).write.parquet(f"{tmp}/state")
     j(a, F.broadcast(db)).write.parquet(f"{tmp}/dim_backfill")
-    # fact tail re-sharded into 4 files => 4 real micro-batches.
-    # ONE partitioned write instead of 4 filtered writes (r13): the
-    # loop form scanned the orders tail four times and paid four
-    # write commits; hash-partitioning the slice key into 4 tasks
-    # lands each slice key in exactly one task, so every s=i dir
-    # still holds exactly one data file and the drain still sees 4
-    # single-file micro-batches.
-    (
-        da.withColumn("s", F.col("o_orderkey") % 4)
-        .repartition(4, "s")
-        .write.partitionBy("s")
-        .parquet(f"{tmp}/in")
-    )
-    # backfill valueless slices with an empty single-file dir so the
-    # 4-micro-batch drain shape (and the deltas read-back below) is
-    # input-independent — the ST12 guard, applied here too (the r13
-    # one-write form left this as a documented caveat)
-    _empty_slice = da.limit(0).coalesce(1)
-    for _i in range(4):
-        if not _os.path.exists(f"{tmp}/in/s={_i}"):
-            _empty_slice.write.parquet(f"{tmp}/in/s={_i}")
-    stream = (
-        spark.readStream.schema(
-            "o_orderkey bigint, o_custkey bigint, o_totalprice double,"
-            " o_orderstatus string, od string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(f"{tmp}/in")
+    # fact tail re-sharded into 4 files => 4 real micro-batches
+    stream = _four_slice_stream(
+        da,
+        "o_orderkey",
+        f"{tmp}/in",
+        "o_orderkey bigint, o_custkey bigint, o_totalprice double,"
+        " o_orderstatus string, od string",
     )
     # B ∪ ΔB materialized ONCE (r14, guide §2.4): each of the four
     # micro-batches broadcasts the full dimension, and without the
@@ -782,18 +766,9 @@ def stream_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(f"{tmp}/deltas/b={batch_id}")
 
-    from etl_npl_pipeline_spark.streaming.events import drain_confs
-
-    # one-shot drain: per-micro-batch codegen never amortizes (ST15
-    # pattern, r13)
-    with drain_confs(spark):
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
+    drain(
+        stream, "stream_join_incremental", sink=sink, checkpoint=f"{tmp}/ckpt"
+    )
     view = (
         spark.read.parquet(f"{tmp}/state")
         .unionByName(spark.read.parquet(f"{tmp}/dim_backfill"))

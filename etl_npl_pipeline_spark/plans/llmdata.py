@@ -3905,21 +3905,14 @@ def stream_quality_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         # own slot instead of double-adding
         per_batch[int(batch_id)] = _qp_moments(bdf)
 
-    from etl_npl_pipeline_spark.streaming.events import drain_confs
+    from etl_npl_pipeline_spark.streaming.events import drain
 
-    # one-shot drain: codegen never amortizes over 4 single-run
-    # micro-batch plans (the run_stream_to_memory doctrine, r13)
-    with drain_confs(spark):
-        q = (
-            feats.writeStream.foreachBatch(_fold)
-            .option(
-                "checkpointLocation",
-                _os.path.join(src_dir, "_ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
+    drain(
+        feats,
+        "stream_quality_probe",
+        sink=_fold,
+        checkpoint=_os.path.join(src_dir, "_ckpt"),
+    )
     if not per_batch:
         return spark.createDataFrame([], "term string, value double")
     mids = sorted(per_batch)
@@ -7417,17 +7410,14 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _fold(bdf, batch_id: int) -> None:
         per_batch[int(batch_id)] = _dm_moments(bdf)
 
-    from etl_npl_pipeline_spark.streaming.events import drain_confs
+    from etl_npl_pipeline_spark.streaming.events import drain
 
-    # one-shot drain: skip per-micro-batch codegen (ST15 pattern)
-    with drain_confs(spark):
-        q = (
-            xq.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", _os.path.join(src_dir, "_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
+    drain(
+        xq,
+        "stream_drift_monitor",
+        sink=_fold,
+        checkpoint=_os.path.join(src_dir, "_ckpt"),
+    )
     acc: dict = {}
     for b in sorted(per_batch):
         acc = _dm_add(acc, per_batch[b])

@@ -17,6 +17,7 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_npl_pipeline_spark.session import scoped_conf
 from etl_npl_pipeline_spark.sources.tables import load_table
 
 _TMP = "/root/repo/.tmp"
@@ -266,9 +267,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .saveAsTable(tname)
             )
         _BUCKETED_BUILT.add(tag)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         out = (
             spark.table(t_li)
             .join(
@@ -288,8 +287,6 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpointed frame — returning the lazy plan would re-plan
         # (and possibly broadcast) after the conf is restored
         return out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 JOIN_BUCKETED_SQL = """

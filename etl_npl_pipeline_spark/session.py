@@ -9,6 +9,8 @@ Arrow batching). Nothing here is machine-specific.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -49,3 +51,18 @@ def get_spark(app_name: str = "etl-npl-pipeline-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body of the ``with`` and
+    restore every previous value on exit, also when the body raises.
+    The one way the package changes a session conf temporarily."""
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)

@@ -1,5 +1,5 @@
 from etl_npl_pipeline_spark.streaming.events import (  # noqa: F401
-    run_stream_to_memory,
+    drain,
     stream_sessionize,
     stream_windowed_counts,
 )

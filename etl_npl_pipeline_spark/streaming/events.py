@@ -1,10 +1,11 @@
 """Structured Streaming over the events table.
 
 The stream source is the events parquet read incrementally
-(``readStream``); tests and the driver run with
-``trigger(availableNow=True)`` so the stream drains the backlog and
-stops — semantically the production shape (watermark + windowed
-state) with a bounded run.
+(``readStream``). Every stream in the package runs through
+``drain``, the one availableNow drain: the stream drains the backlog
+and stops — semantically the production shape (watermark + windowed
+state) with a bounded run — under scoped drain confs, and records
+its micro-batch progress in ``DRAIN_PROGRESS``.
 
 - ``stream_windowed_counts``: event-time tumbling window + watermark.
   With availableNow over a bounded input it produces exactly the
@@ -25,6 +26,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Callable
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -38,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from etl_npl_pipeline_spark.functions.exact import MONEY
+from etl_npl_pipeline_spark.session import scoped_conf
 
 _RAW_SCHEMA_TMPL = (
     "event_id BIGINT, ts {ts_type}, user_id BIGINT, event_type STRING, "
@@ -89,9 +92,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_sum",
         )
     )
-    return run_stream_to_memory(
-        agg, output_mode="complete", label="stream_events_window"
-    )
+    return drain(agg, "stream_events_window", output_mode="complete")
 
 
 _SESSION_STATE = StructType(
@@ -151,14 +152,12 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # 8 state partitions (the drain default since r4): each partition
-    # is a parallel applyInPandasWithState Python worker, and the
+    # DRAIN_PARTITIONS (8) state partitions: each partition is a
+    # parallel applyInPandasWithState Python worker, and the
     # extra parallelism outweighs the per-partition state-commit cost
     # (measured: 1.5 s at 8 vs 2.2 s at 4, sf0.1 — and the same
     # sweep moved stream_user_totals 1.8 s -> 1.4 s steady-state).
-    return run_stream_to_memory(
-        sessions, output_mode="update", label="stream_sessionize"
-    )
+    return drain(sessions, "stream_sessionize", output_mode="update")
 
 
 _TWS_OUT = StructType(
@@ -273,9 +272,7 @@ def stream_user_totals(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    mem = run_stream_to_memory(
-        out, output_mode="update", label="stream_user_totals"
-    )
+    mem = drain(out, "stream_user_totals", output_mode="update")
     # Update mode emits one row per user per micro-batch; keep the
     # LAST emitted state per user. n_events grows monotonically, so
     # max over struct(n_events, cents) picks both fields from that
@@ -294,60 +291,42 @@ def stream_user_totals(
 
 
 # StreamingQueryProgress summaries of every drain this process ran,
-# keyed by the caller's label (unlabeled drains key by the memory
-# sink's generated name). bench.py publishes this to
+# keyed by the drain's label. bench.py publishes this to
 # bench_detail.json["streaming_progress"]; tests gate state bounds
-# on it. Each entry: batches, input_rows, duration_ms, and the MAX
-# stateOperators numRowsTotal across batches — the number that must
-# stay bounded for the watermark-eviction story to be real.
+# on it. Each entry: batches, input rows, trigger time, late rows
+# dropped, and the MAX stateOperators numRowsTotal across batches —
+# the number that must stay bounded for the watermark-eviction story
+# to be real.
 DRAIN_PROGRESS: dict[str, dict] = {}
 
 
 # recentProgress is a ring buffer capped by
 # spark.sql.streaming.numRecentProgressUpdates (default 100); a drain
 # longer than the cap would silently under-count batches and could
-# miss the true state_rows_max peak. The drain harnesses raise the
-# cap to this value for the query's lifetime, and _progress_summary
-# records a truncation flag if a drain ever hits it anyway.
+# miss the true state_rows_max peak. drain raises the cap to this
+# value for the query's lifetime, and _progress_summary records a
+# truncation flag if a drain ever hits it anyway.
 PROGRESS_BUFFER = 10_000
 
+# Shuffle (and so state-store) partitions of every drain.
+DRAIN_PARTITIONS = 8
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def drain_confs(spark: SparkSession, state_partitions: int = 8):
-    """Scoped session confs for a ONE-SHOT availableNow drain — the
-    discipline run_stream_to_memory/run_stream_to_dir apply inline,
-    factored out so foreachBatch-style drains (ST15/ST16/ST17) get
-    the same treatment:
-
-    - whole-stage codegen OFF: a bounded drain runs each micro-batch
-      plan ONCE, so janino compilation never amortizes and dominates
-      the drain wall-clock (measured at sf0.1: ~1.25 s interpreted
-      vs 1.5-3.4 s compiled, identical results). Long-lived
-      production streams keep codegen on — the pin is scoped to the
-      drain and restored after.
-    - shuffle partitions pinned small: stateful queries open/commit
-      one state-store partition per shuffle partition per batch, and
-      even stateless foreachBatch aggregations plan their exchanges
-      at query start from this conf. On a real cluster size it to
-      ingest parallelism instead.
-    """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_cg = spark.conf.get("spark.sql.codegen.wholeStage")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(state_partitions)
-        )
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_cg)
+_DRAIN_CONFS = {
+    "spark.sql.shuffle.partitions": str(DRAIN_PARTITIONS),
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.streaming.numRecentProgressUpdates": str(PROGRESS_BUFFER),
+}
 
 
 def _progress_summary(q, output_mode: str) -> dict:
+    """Fold a drained query's recentProgress into one DRAIN_PROGRESS
+    entry.
+
+    ``late_rows_dropped`` sums ``numRowsDroppedByWatermark`` over the
+    state operators of every batch. Spark counts these rows AT the
+    state operator, after partial aggregation, so for a windowed
+    aggregation it counts late (window, key) groups, not raw events.
+    """
     import json as _json
 
     progress = list(q.recentProgress)
@@ -358,22 +337,24 @@ def _progress_summary(q, output_mode: str) -> dict:
         "duration_ms": 0,
         "state_rows_max": 0,
         "state_rows_last": 0,
+        "late_rows_dropped": 0,
     }
     if len(progress) >= PROGRESS_BUFFER:  # pragma: no cover - guard
         summary["progress_truncated"] = True
     for p in progress:
         d = _json.loads(p.json) if hasattr(p, "json") else p
+        ops = d.get("stateOperators") or []
         summary["batches"] += 1
         summary["input_rows"] += int(d.get("numInputRows") or 0)
         summary["duration_ms"] += int(
             (d.get("durationMs") or {}).get("triggerExecution") or 0
         )
-        state_total = sum(
-            int(op.get("numRowsTotal") or 0)
-            for op in (d.get("stateOperators") or [])
-        )
+        state_total = sum(int(op.get("numRowsTotal") or 0) for op in ops)
         summary["state_rows_max"] = max(summary["state_rows_max"], state_total)
         summary["state_rows_last"] = state_total
+        summary["late_rows_dropped"] += sum(
+            int(op.get("numRowsDroppedByWatermark") or 0) for op in ops
+        )
     # drain throughput: rows ingested per second of trigger
     # execution — the streaming tier's per-round perf number
     # (whole-drain wall time also includes plan/setup; this is the
@@ -385,141 +366,93 @@ def _progress_summary(q, output_mode: str) -> dict:
     return summary
 
 
-def run_stream_to_memory(
+def drain(
     sdf: DataFrame,
+    label: str,
+    *,
     output_mode: str = "append",
-    state_partitions: int = 8,
-    label: str | None = None,
-) -> DataFrame:
-    """Drain a streaming frame with availableNow into a memory sink
-    and return the materialized result as a batch DataFrame.
+    sink: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
+    fail_at_batch: int | None = None,
+) -> DataFrame | None:
+    """Drain a streaming frame with ``trigger(availableNow=True)``:
+    the backlog runs as bounded micro-batches and the query stops.
+    The one way the package runs a stream.
+
+    With ``sink=None`` the rows land in a memory sink and the drained
+    table comes back as a batch DataFrame. Otherwise every
+    micro-batch goes to ``sink(batch_df, batch_id)`` via foreachBatch,
+    checkpointed at ``checkpoint`` so a killed drain RESUMES from the
+    last committed batch instead of restarting, and drain returns
+    None. foreachBatch is at-least-once; a sink that keys its write
+    by batch_id (e.g. a per-batch overwrite of ``.../batch_id=N``)
+    makes a replayed batch land on its own output, so the effect is
+    exactly-once.
 
     Every drain records a StreamingQueryProgress summary in
-    DRAIN_PROGRESS[label] (batches, input rows, trigger time, max/
-    final state rows) — streaming state growth is observable and
-    gateable instead of asserted.
+    DRAIN_PROGRESS[label] (batches, input rows, trigger time, late
+    rows dropped, max/final state rows), also when the drain fails —
+    streaming state growth is observable and gateable instead of
+    asserted. The wait has no timeout: a timed wait that returns
+    False leaves the query running while the caller reads a partial
+    result.
+
+    The drain runs under three scoped session confs, restored after:
+
+    - ``spark.sql.shuffle.partitions`` = DRAIN_PARTITIONS. Stateful
+      queries pin their state-store partition count to it at query
+      start, and each state partition pays a fixed open/commit cost
+      per micro-batch, so with the batch default (32) a drain spends
+      more time in HDFSBackedStateStore bookkeeping than in the
+      operator; stateless foreachBatch aggregations also plan their
+      exchanges from it. On a real cluster with a long-lived stream,
+      size it to ingest parallelism instead.
+    - whole-stage codegen OFF. A bounded drain runs each micro-batch
+      plan ONCE, so janino compilation never amortizes and dominates
+      the wall-clock (measured at sf0.1: ~1.25 s interpreted vs
+      1.5-3.4 s compiled for the stateful drains, identical results).
+      Long-lived production streams should keep codegen on.
+    - ``spark.sql.streaming.numRecentProgressUpdates`` =
+      PROGRESS_BUFFER, so the progress summary sees every batch.
 
     Engine constraint (pinned in tests/test_streaming_pre_epoch.py):
     Spark's watermark initializes at epoch 0 and only advances, so
     in APPEND/UPDATE mode every event with event time before
-    1970-01-01 UTC is dropped as late in its first micro-batch —
-    the batch twins process such rows fine, and complete mode keeps
-    them (late filtering is disabled there). Pre-epoch event time is
+    1970-01-01 UTC is dropped as late in its first micro-batch — the
+    batch twins process such rows fine, and complete mode keeps them
+    (late filtering is disabled there). Pre-epoch event time is
     therefore outside the watermarked-streaming contract; remap or
     batch-process historical archives that old.
 
-    Stateful streaming queries pin their state-store partition count
-    to ``spark.sql.shuffle.partitions`` at query start; each state
-    partition pays a fixed open/commit cost per micro-batch, so a
-    drain-style run with the batch default (32) spends more time in
-    HDFSBackedStateStore bookkeeping than in the operator. Pin a
-    smaller count for the stream only and restore the session conf
-    after the drain. On a real cluster with a long-lived stream,
-    size this to match ingest parallelism instead.
+    ``fail_at_batch`` injects a crash BEFORE that micro-batch reaches
+    ``sink`` — the recovery-test hook: restart from the same
+    checkpoint, and stateful operators resume from the state store
+    with no row lost or double-counted.
     """
     spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_cg = spark.conf.get("spark.sql.codegen.wholeStage")
-    prev_pb = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates",
-            str(PROGRESS_BUFFER),
-        )
-        # A bounded drain runs each micro-batch plan ONCE — janino
-        # whole-stage compilation never amortizes and dominates the
-        # wall-clock (measured at sf0.1: ~1.25 s interpreted vs
-        # 1.5-3.4 s compiled for the stateful drains, identical
-        # results). Long-lived production streams should keep codegen:
-        # this pin is scoped to the drain harness and restored after.
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        DRAIN_PROGRESS[label or name] = _progress_summary(q, output_mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates", prev_pb
-        )
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_cg)
-    return spark.table(name)
+    writer = sdf.writeStream.outputMode(output_mode).trigger(availableNow=True)
+    if sink is None:
+        name = f"mem_{uuid.uuid4().hex[:12]}"
+        writer = writer.format("memory").queryName(name)
+    else:
 
+        def _batch(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_id == fail_at_batch:
+                raise RuntimeError(
+                    f"injected failure before batch {batch_id} commit"
+                )
+            sink(batch_df, batch_id)
 
-def run_stream_to_dir(
-    sdf: DataFrame,
-    out_root: str,
-    checkpoint: str,
-    output_mode: str = "update",
-    state_partitions: int = 8,
-    label: str | None = None,
-    fail_at_batch: int | None = None,
-) -> None:
-    """Durable drain: foreachBatch writes each micro-batch's rows to
-    ``{out_root}/batch_id=N`` with per-batch overwrite, checkpointed
-    at ``checkpoint`` so a killed drain RESUMES from the last
-    committed batch instead of restarting.
-
-    This is the recoverable twin of run_stream_to_memory (whose
-    memory sink dies with the query). Exactly-once effect under
-    at-least-once foreachBatch: a replayed batch_id overwrites its
-    own directory, so duplicates cannot accumulate; reading
-    ``out_root`` back yields every batch's emission exactly once,
-    with ``batch_id`` recovered as a partition column.
-
-    ``fail_at_batch`` injects a crash BEFORE that micro-batch
-    commits — the test hook tests/test_stream_recovery.py uses to
-    prove the recovery contract: restart from the same checkpoint,
-    and stateful operators resume from the state store with no row
-    lost or double-counted.
-    """
-    spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_cg = spark.conf.get("spark.sql.codegen.wholeStage")
-    prev_pb = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if fail_at_batch is not None and batch_id == fail_at_batch:
-            raise RuntimeError(
-                f"injected failure before batch {batch_id} commit"
-            )
-        batch_df.write.mode("overwrite").parquet(
-            f"{out_root.rstrip('/')}/batch_id={batch_id}"
+        writer = writer.foreachBatch(_batch).option(
+            "checkpointLocation", checkpoint
         )
-
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates",
-            str(PROGRESS_BUFFER),
-        )
-        q = (
-            sdf.writeStream.foreachBatch(_sink)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    with scoped_conf(spark, _DRAIN_CONFS):
+        q = writer.start()
         try:
             q.awaitTermination()
         finally:
-            DRAIN_PROGRESS[label or f"dir_{os.path.basename(out_root)}"] = (
-                _progress_summary(q, "foreachBatch")
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates", prev_pb
-        )
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_cg)
+            DRAIN_PROGRESS[label] = _progress_summary(q, output_mode)
+    return spark.table(name) if sink is None else None
 
 
 # Version stride reserved per stream epoch: every (re)started stream
@@ -534,7 +467,6 @@ def stream_upsert_mor(
     sdf: DataFrame,
     path: str,
     fmt: str = "parquet",
-    state_partitions: int = 4,
     fail_at_batch: int | None = None,
 ) -> None:
     """ST7: continuous upsert sink — drain a stream into a
@@ -577,19 +509,16 @@ def stream_upsert_mor(
     single-writer table format without a transaction log.
 
     Scale: each batch write distributes across executors like any
-    parquet write; the state-partition pin only matters when the
-    upstream has stateful ops (same rationale as
-    run_stream_to_memory). The epoch manifest is one tiny
-    driver-side JSON per checkpoint, touched once per micro-batch.
+    parquet write; drain's state-partition pin only matters when the
+    upstream has stateful ops. The epoch manifest is one tiny
+    driver-side JSON per checkpoint, touched once per micro-batch;
+    ``fail_at_batch`` is drain's recovery-test hook.
     """
     import json
     import os
 
     from etl_npl_pipeline_spark.sinks import _mor_versions
 
-    spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_pb = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")
     root = path.rstrip("/")
     checkpoint = f"{root}/_checkpoint"
 
@@ -610,12 +539,6 @@ def stream_upsert_mor(
     epoch = manifest["epoch"]
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if fail_at_batch is not None and batch_id == fail_at_batch:
-            # recovery test hook: die BEFORE this batch commits —
-            # the restart must resume here from the checkpoint
-            raise RuntimeError(
-                f"injected failure before batch {batch_id} commit"
-            )
         v = epoch + batch_id + 1
         target = f"{ddir}/v={v}"
         if os.path.exists(target) and batch_id not in manifest["written"]:
@@ -629,29 +552,13 @@ def stream_upsert_mor(
             with open(manifest_path, "w") as fh:
                 json.dump(manifest, fh)
 
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates",
-            str(PROGRESS_BUFFER),
-        )
-        q = (
-            sdf.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # foreachBatch drains bypass run_stream_to_memory — record
-        # progress here so ST7 is observable like the other streams
-        DRAIN_PROGRESS["stream_upsert_read"] = _progress_summary(
-            q, "foreachBatch"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates", prev_pb
-        )
+    drain(
+        sdf,
+        "stream_upsert_read",
+        sink=_sink,
+        checkpoint=checkpoint,
+        fail_at_batch=fail_at_batch,
+    )
 
 
 def stream_refresh_index(
@@ -687,10 +594,6 @@ def stream_refresh_index(
     from etl_npl_pipeline_spark.operators.ann_index import refresh_ann_index
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if fail_at_batch is not None and batch_id == fail_at_batch:
-            raise RuntimeError(
-                f"injected failure before batch {batch_id} refresh"
-            )
         if batch_df.isEmpty():
             return
         key = batch_df.agg(
@@ -710,13 +613,10 @@ def stream_refresh_index(
             batch_key=f"content:{key}",
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    DRAIN_PROGRESS["stream_index_refresh"] = _progress_summary(
-        q, "foreachBatch"
+    drain(
+        sdf,
+        "stream_index_refresh",
+        sink=_sink,
+        checkpoint=checkpoint,
+        fail_at_batch=fail_at_batch,
     )

@@ -5,8 +5,9 @@ store), nothing double-counted (committed batches don't replay;
 replayed uncommitted batches land idempotently).
 
 Targets the two production-shaped sinks:
-- ST6 totals (applyInPandasWithState) through run_stream_to_dir —
-  the resumed stateful operator must carry pre-crash state.
+- ST6 totals (applyInPandasWithState) through ``drain`` with a
+  per-batch overwrite sink — the resumed stateful operator must
+  carry pre-crash state.
 - ST7 MOR upsert (foreachBatch + epoch manifest) — the resumed
   drain must complete the table to the batch-upsert oracle.
 """
@@ -22,7 +23,7 @@ from etl_npl_pipeline_spark.sources.tables import load_table
 from etl_npl_pipeline_spark.streaming.events import (
     _TWS_OUT,
     _user_totals_fn,
-    run_stream_to_dir,
+    drain,
     stream_upsert_mor,
 )
 
@@ -67,6 +68,15 @@ def _totals_stream(src):
     )
 
 
+def _overwrite_sink(out_root):
+    # a replayed batch_id overwrites its own dir: exactly-once output
+    def sink(batch_df, batch_id):
+        target = f"{out_root}/batch_id={batch_id}"
+        batch_df.write.mode("overwrite").parquet(target)
+
+    return sink
+
+
 def _fold_totals(spark, out_root):
     # update mode emits a user's running state once per batch it
     # appears in; the max over (n_events, cents) is the final state
@@ -85,17 +95,18 @@ def test_stateful_totals_survive_mid_drain_kill(spark, sf_dir, tmp_path):
 
     # first attempt dies before batch 3 commits
     with pytest.raises(Exception, match="injected failure|Injected|STREAM"):
-        run_stream_to_dir(
+        drain(
             _totals_stream(_multi_file_source(spark, sf_dir, src_dir)),
-            out_root,
-            ckpt,
-            label="recovery_totals_crash",
+            "recovery_totals_crash",
+            output_mode="update",
+            sink=_overwrite_sink(out_root),
+            checkpoint=ckpt,
             fail_at_batch=3,
         )
 
     # restart from the SAME checkpoint: resumes at batch 3 with
     # restored per-user state; earlier committed batches do not rerun
-    run_stream_to_dir(
+    drain(
         _totals_stream(
             spark.readStream.schema(
                 "event_id long, user_id long, event_type string, cents long"
@@ -103,9 +114,10 @@ def test_stateful_totals_survive_mid_drain_kill(spark, sf_dir, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         ),
-        out_root,
-        ckpt,
-        label="recovery_totals_resume",
+        "recovery_totals_resume",
+        output_mode="update",
+        sink=_overwrite_sink(out_root),
+        checkpoint=ckpt,
     )
 
     got = _rows(_fold_totals(spark, out_root))
@@ -129,14 +141,15 @@ def test_resume_skips_committed_batches(spark, sf_dir, tmp_path):
     from etl_npl_pipeline_spark.streaming.events import DRAIN_PROGRESS
 
     with pytest.raises(Exception, match="injected failure|STREAM"):
-        run_stream_to_dir(
+        drain(
             _totals_stream(_multi_file_source(spark, sf_dir, src_dir)),
-            out_root,
-            ckpt,
-            label="recovery_skip_crash",
+            "recovery_skip_crash",
+            output_mode="update",
+            sink=_overwrite_sink(out_root),
+            checkpoint=ckpt,
             fail_at_batch=2,
         )
-    run_stream_to_dir(
+    drain(
         _totals_stream(
             spark.readStream.schema(
                 "event_id long, user_id long, event_type string, cents long"
@@ -144,9 +157,10 @@ def test_resume_skips_committed_batches(spark, sf_dir, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         ),
-        out_root,
-        ckpt,
-        label="recovery_skip_resume",
+        "recovery_skip_resume",
+        output_mode="update",
+        sink=_overwrite_sink(out_root),
+        checkpoint=ckpt,
     )
     # 6 source files → batches 0..5; crash before 2 → resume runs 2..5
     resumed = DRAIN_PROGRESS["recovery_skip_resume"]["batches"]

@@ -21,8 +21,9 @@ import pytest
 import pyspark.sql.functions as F
 
 from etl_npl_pipeline_spark.streaming.events import (
+    DRAIN_PROGRESS,
+    drain,
     events_stream,
-    run_stream_to_memory,
 )
 
 
@@ -80,17 +81,19 @@ def test_append_mode_drops_pre_epoch_events(spark, epoch_dir):
 
     # append-mode stream drops every pre-epoch row as late (initial
     # watermark = 0); no negative window can ever emit
-    drained = run_stream_to_memory(
-        _windowed(events_stream(spark, epoch_dir)),
-        output_mode="append",
-        label="pre_epoch_probe",
+    drained = drain(
+        _windowed(events_stream(spark, epoch_dir)), "pre_epoch_probe"
     )
     assert drained.where(F.col("win_start") < 0).count() == 0
+    # ...and the drain's progress counts the drops (state-operator
+    # rows, i.e. late (window, event_type) groups, not raw events)
+    assert DRAIN_PROGRESS["pre_epoch_probe"]["late_rows_dropped"] > 0
 
     # complete mode disables late filtering and keeps them
-    drained_c = run_stream_to_memory(
+    drained_c = drain(
         _windowed(events_stream(spark, epoch_dir)),
+        "pre_epoch_probe_complete",
         output_mode="complete",
-        label="pre_epoch_probe_complete",
     )
     assert drained_c.where(F.col("win_start") < 0).count() > 0
+    assert DRAIN_PROGRESS["pre_epoch_probe_complete"]["late_rows_dropped"] == 0

@@ -7,15 +7,18 @@ claim — "state expires with the watermark" — from a docstring into
 an assertion: the append-mode windowed aggs (ST8/ST10/ST11) must
 finish their drain with ZERO retained state rows (every window
 emitted and evicted), and the stream-stream joins (ST5/ST9) must
-keep state within the input size (no unbounded buffering).
+keep state within the input size (no unbounded buffering). The
+foreachBatch contracts record progress through the same drain, and
+the drain scopes its session confs.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from etl_npl_pipeline_spark.plans import extras
-from etl_npl_pipeline_spark.streaming.events import DRAIN_PROGRESS
+from etl_npl_pipeline_spark.plans import extras, ivm, llmdata
+from etl_npl_pipeline_spark.session import scoped_conf
+from etl_npl_pipeline_spark.streaming.events import DRAIN_PROGRESS, drain
 
 
 @pytest.mark.parametrize(
@@ -54,13 +57,75 @@ def test_stream_joins_keep_state_bounded(spark, sf_dir, label, fn):
     assert p["state_rows_last"] <= p["state_rows_max"] <= 2 * p["input_rows"], p
 
 
+@pytest.mark.parametrize(
+    "fn, batches",
+    [
+        # the re-sharded IVM inputs are four single-file slices and
+        # the CDC input three ordered files, each read one per batch
+        (ivm.stream_agg_incremental, 4),
+        (ivm.stream_cdc_scd2, 3),
+        (ivm.stream_join_incremental, 4),
+        (llmdata.stream_quality_probe, None),
+        (llmdata.stream_drift_monitor, None),
+    ],
+    ids=lambda v: getattr(v, "__name__", str(v)),
+)
+def test_foreach_batch_contracts_record_progress(spark, sf_dir, fn, batches):
+    label = fn.__name__
+    DRAIN_PROGRESS.pop(label, None)
+    fn(spark, sf_dir).collect()
+    p = DRAIN_PROGRESS[label]
+    assert p["input_rows"] > 0, p
+    if batches is None:
+        assert p["batches"] >= 1, p
+    else:
+        assert p["batches"] == batches, p
+
+
+def test_drain_restores_session_confs(spark, tmp_path):
+    sentinels = {
+        "spark.sql.shuffle.partitions": "13",
+        "spark.sql.codegen.wholeStage": "true",
+        "spark.sql.streaming.numRecentProgressUpdates": "77",
+    }
+
+    def confs():
+        return {k: spark.conf.get(k) for k in sentinels}
+
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+
+    def stream():
+        return spark.readStream.schema("id long").parquet(src)
+
+    with scoped_conf(spark, sentinels):
+        with pytest.raises(Exception, match="injected failure|STREAM"):
+            drain(
+                stream(),
+                "conf_probe_failed",
+                sink=lambda batch_df, batch_id: None,
+                checkpoint=str(tmp_path / "ckpt"),
+                fail_at_batch=0,
+            )
+        assert confs() == sentinels
+        assert "conf_probe_failed" in DRAIN_PROGRESS
+        assert drain(stream(), "conf_probe_memory").count() == 10
+        assert confs() == sentinels
+
+        with pytest.raises(RuntimeError, match="body failed"):
+            with scoped_conf(spark, {"spark.sql.shuffle.partitions": "3"}):
+                assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+                raise RuntimeError("body failed")
+        assert confs() == sentinels
+
+
 def test_progress_summary_shape():
     # at least one drain ran in this session by now
     assert DRAIN_PROGRESS
     for label, p in DRAIN_PROGRESS.items():
         assert set(p) >= {
             "output_mode", "batches", "input_rows", "duration_ms",
-            "state_rows_max", "state_rows_last",
+            "state_rows_max", "state_rows_last", "late_rows_dropped",
         }, label
         # throughput derives whenever trigger time was recorded
         if p["duration_ms"] > 0:

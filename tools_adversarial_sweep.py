@@ -22,7 +22,7 @@ values):
   sessionization, gap-fill, as-of joins and quarter bucketing must
   agree across engines at both extremes. (Watermarked STREAMING
   queries are excluded for the pre-epoch slice by documented
-  contract — see run_stream_to_memory's docstring.)
+  contract — see streaming.events.drain's docstring.)
 - ``extreme_numerics``: money columns near decimal boundaries
   (o_totalprice / l_extendedprice at 9.99e7-ish magnitudes, event
   values at ±99,999,999.99) so decimal(18,2) sums cross 1e12 —
@@ -249,7 +249,7 @@ EXCLUDE = {
         "ann_index_build",
     },
     # pre-epoch event time is outside the watermarked-streaming
-    # contract (run_stream_to_memory docstring) — but this build
+    # contract (streaming.events.drain docstring) — but this build
     # keeps all events post-epoch, so only one exclusion:
     # compat_pandas_quarterly routes through pandas-on-Spark, whose
     # internal Arrow->pandas conversion REQUIRES datetime64[ns]
