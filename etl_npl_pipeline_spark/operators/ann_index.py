@@ -15,16 +15,21 @@ into
   re-encode — the only per-query work is the candidate join and the
   exact re-rank, which is the part that should scale with |Q|.
 
-Determinism contract: the builders run the seeded trainers/encoders
-(`ivf._centroids`, `pq.train_pq_codebooks`, `pq.pq_encode`,
-`similarity._lsh_table_signatures`), and the normalized corpus
-vectors are persisted from the Catalyst `l2_normalize` expression —
-parquet round-trips doubles exactly. Every exact score comes from
-the ascending-dim fold (`pair_dot` row-wise, the shared
-`similarity` block kernel in the cogroup paths), so full-probe IVF
-and PQ with k' >= |corpus| equal `brute_force_topk` bit for bit,
-and the sf0.001 rows of ann_ivf / ann_pq / ann_lsh are pinned by
-digest in tests/test_ann_index.py.
+Determinism contract: build and refresh run the same seeded
+trainers (`ivf._centroids`, `pq.train_pq_codebooks`, both fitting on
+`ivf._train_sample`, normalized by `ivf._unit_rows`) and write
+through the one encoder `_write_corpus_artifacts`: `ivf.cell_assigner`
+for the cell, `pq.pq_encode` for the codes, `_lsh_postings` (over
+`similarity._lsh_table_signatures`) for the buckets, and the Catalyst
+`l2_normalize` expression for the vectors — parquet round-trips
+doubles exactly. Queries load the frozen models through
+`_load_centroids` / `_load_codebooks`, pre-filter through `_allowed`
+and re-rank PQ and LSH candidates through `_exact_rerank`. Every
+exact score comes from the ascending-dim fold (`pair_dot` row-wise,
+the shared `similarity` block kernel in the cogroup paths), so
+full-probe IVF and PQ with k' >= |corpus| equal `brute_force_topk`
+bit for bit, and the sf0.001 rows of ann_ivf / ann_pq / ann_lsh are
+pinned by digest in tests/test_ann_index.py.
 
 Scale notes:
 - The vectors artifact is written ``partitionBy("cell")`` so an IVF
@@ -47,13 +52,19 @@ import json
 import os
 import shutil
 import time
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_npl_pipeline_spark.operators.ivf import _centroids, _sq_dists
+from etl_npl_pipeline_spark.operators.ivf import (
+    _centroids,
+    _sq_dists,
+    _unit_rows,
+    cell_assigner,
+)
 from etl_npl_pipeline_spark.operators.pq import (
     _norm_rows,
     pq_encode,
@@ -140,9 +151,8 @@ def _artifact_paths(index_dir: str, name: str) -> list[str]:
     refresh ADDS a ``<name>_v<N>`` segment dir. Readers consume the
     union of listed segments, so a staged-but-uncommitted refresh
     (crash before the manifest write) is invisible by construction —
-    the manifest is the single commit point. Pre-segment manifests
-    (version-1 layout) default to the bare artifact dir."""
-    segs = read_manifest(index_dir).get("segments", {}).get(name, [name])
+    the manifest is the single commit point."""
+    segs = read_manifest(index_dir)["segments"][name]
     return [os.path.join(index_dir, s) for s in segs]
 
 
@@ -178,10 +188,98 @@ _ARTIFACT_SCHEMAS = {
 }
 
 
-def _write_empty_artifact(spark: SparkSession, path: str, name: str) -> None:
-    spark.createDataFrame([], _ARTIFACT_SCHEMAS[name]).coalesce(
+def _write_small_artifact(
+    spark: SparkSession, path: str, name: str, rows: list | None = None
+) -> None:
+    """Write a driver-side artifact (a model, or any empty artifact)
+    as one schema-first parquet file."""
+    spark.createDataFrame(rows or [], _ARTIFACT_SCHEMAS[name]).coalesce(
         1
     ).write.mode("overwrite").parquet(path)
+
+
+def _write_artifact(df: DataFrame, path: str, name: str) -> None:
+    """Write a corpus-sized artifact; ``vectors`` is partitioned by
+    cell so an IVF probe prunes cells at the scan."""
+    w = df.write.mode("overwrite")
+    (w.partitionBy("cell") if name == "vectors" else w).parquet(path)
+
+
+def _drop_dirs(index_dir: str, names) -> None:
+    """Best-effort removal of index subdirs: discarded staged
+    segments, folded segments, orphans."""
+    for name in names:
+        shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
+
+
+def _lsh_postings(
+    df: DataFrame, id_col: str, vec_col: str, n_planes: int, n_tables: int,
+    id_alias: str,
+) -> DataFrame:
+    """One (id, t, sig) row per LSH table per vector: the bucket
+    postings of the corpus side, and the probe keys of the query
+    side. The planes are seed-derived (stateless)."""
+    sig_udf = _lsh_table_signatures(n_planes, n_tables)
+    return df.select(
+        F.col(id_col).alias(id_alias), sig_udf(F.col(vec_col)).alias("sigs")
+    ).select(id_alias, F.posexplode("sigs").alias("t", "sig"))
+
+
+def _write_corpus_artifacts(
+    batch: DataFrame,
+    cents: np.ndarray,
+    books: np.ndarray,
+    knobs: dict,
+    out_dir: str,
+    suffix: str,
+    id_col: str,
+    vec_col: str,
+) -> None:
+    """Encode ``batch`` against the frozen quantizers and write the
+    three corpus-sized artifacts as ``<name><suffix>`` dirs: the
+    cell-assigned normalized vectors (``partitionBy("cell")``), the
+    PQ codes and the LSH bucket postings. The build writes the base
+    dirs (empty suffix); a refresh stages attempt-unique segments.
+    Overwrite (not append) makes a re-issued refresh reclaim any
+    partial segment a crashed attempt left behind."""
+    frames = {
+        "vectors": batch.select(
+            F.col(id_col).alias("neighbor_id"),
+            l2_normalize(F.col(vec_col)).alias("cv"),
+            cell_assigner(cents)(F.col(vec_col)).alias("cell"),
+        ),
+        "pq_codes": pq_encode(batch, books, id_col, vec_col),
+        "lsh_buckets": _lsh_postings(
+            batch, id_col, vec_col, knobs["lsh_planes"], knobs["lsh_tables"],
+            "neighbor_id",
+        ),
+    }
+    for name, df in frames.items():
+        _write_artifact(df, os.path.join(out_dir, name + suffix), name)
+
+
+def _load_centroids(spark: SparkSession, index_dir: str) -> np.ndarray:
+    """The frozen IVF centroid matrix, row = cell (size 0 for an
+    empty index)."""
+    crows = sorted(
+        _read_artifact(spark, index_dir, "ivf_centroids").collect(),
+        key=lambda r: r["cell"],
+    )
+    return np.array([r["centroid"] for r in crows], dtype=np.float64)
+
+
+def _load_codebooks(spark: SparkSession, index_dir: str) -> np.ndarray:
+    """The frozen PQ codebook tensor (m, k, d/m); (0, 0, 0) for an
+    empty index, whose zero subspaces encode to empty code arrays."""
+    brows = _read_artifact(spark, index_dir, "pq_codebooks").collect()
+    if not brows:
+        return np.zeros((0, 0, 0))
+    m_sub = 1 + max(r["subspace"] for r in brows)
+    k_codes = 1 + max(r["code"] for r in brows)
+    books = np.empty((m_sub, k_codes, len(brows[0]["centroid"])))
+    for r in brows:
+        books[r["subspace"], r["code"]] = r["centroid"]
+    return books
 
 
 def _write_manifest(index_dir: str, manifest: dict) -> None:
@@ -197,6 +295,10 @@ def _write_manifest(index_dir: str, manifest: dict) -> None:
 # attempts used the bare _v{N+1} name and the loser's segments were
 # overwritten before its manifest commit raced)
 _ATTEMPT_SEQ = itertools.count()
+
+# artifacts that grow a segment per committed refresh; the model
+# artifacts (ivf_centroids, pq_codebooks) are frozen at build time
+_SEGMENTED = ("vectors", "pq_codes", "lsh_buckets")
 
 
 class _commit_lock:
@@ -362,86 +464,24 @@ def build_ann_index(
         # every artifact is a schema'd 0-row relation and all query
         # paths return their empty shapes. Same atomic publish.
         for name in ARTIFACTS:
-            _write_empty_artifact(
-                spark, os.path.join(build_dir, name), name
-            )
-        _write_manifest(
-            build_dir,
-            {
-                "corpus_key": corpus_key,
-                "fingerprint": fp,
-                "knobs": knobs,
-                "seed": seed,
-                "version": 1,
-                "appends": [],
-                "segments": {name: [name] for name in ARTIFACTS},
-            },
+            _write_small_artifact(spark, os.path.join(build_dir, name), name)
+    else:
+        # train once: IVF coarse quantizer + PQ per-subspace codebooks
+        cents = _centroids(corpus, vec_col, n_clusters, seed)
+        books = train_pq_codebooks(corpus, vec_col, pq_m, pq_k, seed)
+        models = {
+            "ivf_centroids": [(c, v.tolist()) for c, v in enumerate(cents)],
+            "pq_codebooks": [
+                (s, c, v.tolist())
+                for s, book in enumerate(books)
+                for c, v in enumerate(book)
+            ],
+        }
+        for name, rows in models.items():
+            _write_small_artifact(spark, os.path.join(build_dir, name), name, rows)
+        _write_corpus_artifacts(
+            corpus, cents, books, knobs, build_dir, "", id_col, vec_col
         )
-        try:
-            os.rename(build_dir, root)
-        except OSError:
-            if not os.path.exists(os.path.join(root, MANIFEST)):
-                raise
-            shutil.rmtree(build_dir, ignore_errors=True)
-        _ANN_BUILT[tag] = root
-        return root
-
-    # --- IVF: coarse quantizer + cell-assigned normalized vectors
-    cents = _centroids(corpus, vec_col, n_clusters, seed)
-
-    @F.pandas_udf("long")
-    def assign_cell(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=np.int64)
-        d = _sq_dists(_norm_rows(vs), cents)
-        return pd.Series(d.argmin(axis=1).astype(np.int64))
-
-    vectors = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        l2_normalize(F.col(vec_col)).alias("cv"),
-        assign_cell(F.col(vec_col)).alias("cell"),
-    )
-    vectors.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(build_dir, "vectors")
-    )
-    cent_rows = [
-        (int(c), [float(x) for x in cents[c]]) for c in range(len(cents))
-    ]
-    spark.createDataFrame(
-        cent_rows, "cell long, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(build_dir, "ivf_centroids")
-    )
-
-    # --- PQ: per-subspace codebooks + corpus codes
-    books = train_pq_codebooks(corpus, vec_col, pq_m, pq_k, seed)
-    book_rows = [
-        (s, c, [float(x) for x in books[s, c]])
-        for s in range(books.shape[0])
-        for c in range(books.shape[1])
-    ]
-    spark.createDataFrame(
-        book_rows, "subspace int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(build_dir, "pq_codebooks")
-    )
-    pq_encode(corpus, books, id_col, vec_col).write.mode("overwrite").parquet(
-        os.path.join(build_dir, "pq_codes")
-    )
-
-    # --- LSH: bucket postings (t, sig, neighbor_id) — the exploded
-    # corpus side of the multi-table probe join, built once. The planes
-    # are seed-derived (stateless), so only the postings persist.
-    sig_udf = _lsh_table_signatures(lsh_planes, lsh_tables)
-    (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            sig_udf(F.col(vec_col)).alias("sigs"),
-        )
-        .select("neighbor_id", F.posexplode("sigs").alias("t", "sig"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(build_dir, "lsh_buckets"))
-    )
 
     _write_manifest(
         build_dir,
@@ -465,6 +505,13 @@ def build_ann_index(
         shutil.rmtree(build_dir, ignore_errors=True)
     _ANN_BUILT[tag] = root
     return root
+
+
+def _committed(man: dict, batch_key: str | None) -> bool:
+    """True when ``batch_key`` is already in the manifest lineage."""
+    return batch_key is not None and any(
+        a.get("batch_key") == batch_key for a in man["appends"]
+    )
 
 
 def refresh_ann_index(
@@ -522,86 +569,21 @@ def refresh_ann_index(
     the per-artifact segment list the readers union.
     """
     man = read_manifest(index_dir)
-    if batch_key is not None and any(
-        a.get("batch_key") == batch_key for a in man["appends"]
-    ):
+    if _committed(man, batch_key):
         return index_dir
-    knobs = man["knobs"]
     suffix = f"_v{man['version'] + 1}-{os.getpid()}-{next(_ATTEMPT_SEQ)}"
 
-    if batch.isEmpty():
-        # lineage-only commit: record the batch_key exactly-once,
-        # add no segments (nothing to read back, nothing to union)
-        with _commit_lock(index_dir):
-            man = read_manifest(index_dir)
-            if batch_key is not None and any(
-                a.get("batch_key") == batch_key for a in man["appends"]
-            ):
-                return index_dir
-            if "segments" not in man:  # version-1 layout: adopt
-                man["segments"] = {name: [name] for name in ARTIFACTS}
-            man["version"] += 1
-            man["appends"].append(
-                {"version": man["version"], "rows": 0, "batch_key": batch_key}
-            )
-            _write_manifest(index_dir, man)
-        return index_dir
-
-    crows = sorted(
-        _read_artifact(spark, index_dir, "ivf_centroids").collect(),
-        key=lambda r: r["cell"],
-    )
-    cents = np.array([r["centroid"] for r in crows], dtype=np.float64)
-
-    @F.pandas_udf("long")
-    def assign_cell(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0 or cents.size == 0:
-            # empty-index base (0-row build): no cells exist — park
-            # appends in a sentinel cell; the operator doctrine is a
-            # rebuild once the base is non-trivial
-            return pd.Series([-1] * len(vs), dtype=np.int64)
-        d = _sq_dists(_norm_rows(vs), cents)
-        return pd.Series(d.argmin(axis=1).astype(np.int64))
-
-    vectors = batch.select(
-        F.col(id_col).alias("neighbor_id"),
-        l2_normalize(F.col(vec_col)).alias("cv"),
-        assign_cell(F.col(vec_col)).alias("cell"),
-    )
     # stage: fresh segment dirs, invisible until the manifest commit.
-    # overwrite (not append) makes a re-issued refresh reclaim any
-    # partial segment a crashed attempt left behind.
-    vectors.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, "vectors" + suffix)
-    )
-
-    brows = _read_artifact(spark, index_dir, "pq_codebooks").collect()
-    if brows:
-        m_sub = 1 + max(r["subspace"] for r in brows)
-        k_codes = 1 + max(r["code"] for r in brows)
-        d_sub = len(brows[0]["centroid"])
-        books = np.empty((m_sub, k_codes, d_sub))
-        for r in brows:
-            books[r["subspace"], r["code"]] = r["centroid"]
-    else:  # empty-index base: zero subspaces -> empty code arrays
-        books = np.zeros((0, 0, 0))
-    pq_encode(batch, books, id_col, vec_col).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "pq_codes" + suffix)
-    )
-
-    sig_udf = _lsh_table_signatures(knobs["lsh_planes"], knobs["lsh_tables"])
-    (
-        batch.select(
-            F.col(id_col).alias("neighbor_id"),
-            sig_udf(F.col(vec_col)).alias("sigs"),
+    # An empty batch stages nothing and commits lineage only.
+    staged = not batch.isEmpty()
+    if staged:
+        _write_corpus_artifacts(
+            batch, _load_centroids(spark, index_dir),
+            _load_codebooks(spark, index_dir), man["knobs"], index_dir,
+            suffix, id_col, vec_col,
         )
-        .select("neighbor_id", F.posexplode("sigs").alias("t", "sig"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(index_dir, "lsh_buckets" + suffix))
-    )
-
-    n_appended = batch.count()
-    # commit: one atomic manifest replace publishes all three
+    n_appended = batch.count() if staged else 0
+    # commit: one atomic manifest replace publishes the staged
     # segments together with the lineage bump. Inside the lock the
     # manifest is RE-READ: a concurrent writer that committed first
     # either already landed this batch_key (ours becomes a no-op and
@@ -609,20 +591,13 @@ def refresh_ann_index(
     # rebase our append on top — both survive).
     with _commit_lock(index_dir):
         man = read_manifest(index_dir)
-        if batch_key is not None and any(
-            a.get("batch_key") == batch_key for a in man["appends"]
-        ):
-            for name in ("vectors", "pq_codes", "lsh_buckets"):
-                shutil.rmtree(
-                    os.path.join(index_dir, name + suffix),
-                    ignore_errors=True,
-                )
+        if _committed(man, batch_key):
+            _drop_dirs(index_dir, [name + suffix for name in _SEGMENTED])
             return index_dir
-        if "segments" not in man:  # version-1 layout: adopt in-place
-            man["segments"] = {name: [name] for name in ARTIFACTS}
         man["version"] += 1
-        for name in ("vectors", "pq_codes", "lsh_buckets"):
-            man["segments"][name] = man["segments"][name] + [name + suffix]
+        if staged:
+            for name in _SEGMENTED:
+                man["segments"][name] = man["segments"][name] + [name + suffix]
         man["appends"].append(
             {
                 "version": man["version"],
@@ -632,11 +607,6 @@ def refresh_ann_index(
         )
         _write_manifest(index_dir, man)
     return index_dir
-
-
-# artifacts that grow a segment per committed refresh; the model
-# artifacts (ivf_centroids, pq_codebooks) are frozen at build time
-_SEGMENTED = ("vectors", "pq_codes", "lsh_buckets")
 
 
 def compact_ann_index(spark: SparkSession, index_dir: str) -> str:
@@ -669,8 +639,7 @@ def compact_ann_index(spark: SparkSession, index_dir: str) -> str:
     nothing to fold and the call is a no-op (no version bump).
     """
     man = read_manifest(index_dir)
-    segs = man.get("segments", {name: [name] for name in ARTIFACTS})
-    if all(len(segs[name]) == 1 for name in _SEGMENTED):
+    if all(len(man["segments"][name]) == 1 for name in _SEGMENTED):
         return index_dir
     version_read = man["version"]
     attempt = f"-{os.getpid()}-{next(_ATTEMPT_SEQ)}"
@@ -684,15 +653,9 @@ def compact_ann_index(spark: SparkSession, index_dir: str) -> str:
         if n_vec == 0:
             # a partitioned/coalesced write of an empty frame leaves
             # an unreadable no-file dir; write schema-first instead
-            _write_empty_artifact(spark, dst, name)
-        elif name == "vectors":
-            _read_artifact(spark, index_dir, name).write.mode(
-                "overwrite"
-            ).partitionBy("cell").parquet(dst)
+            _write_small_artifact(spark, dst, name)
         else:
-            _read_artifact(spark, index_dir, name).write.mode(
-                "overwrite"
-            ).parquet(dst)
+            _write_artifact(_read_artifact(spark, index_dir, name), dst, name)
 
     with _commit_lock(index_dir):
         man = read_manifest(index_dir)
@@ -700,11 +663,7 @@ def compact_ann_index(spark: SparkSession, index_dir: str) -> str:
             # a refresh landed while we were folding: our snapshot
             # is stale — abort, leave the index as-is, let the
             # maintenance job re-run
-            for name in _SEGMENTED:
-                shutil.rmtree(
-                    os.path.join(index_dir, staged[name]),
-                    ignore_errors=True,
-                )
+            _drop_dirs(index_dir, staged.values())
             return index_dir
         folded = {name: man["segments"][name] for name in _SEGMENTED}
         man["version"] += 1
@@ -723,12 +682,15 @@ def compact_ann_index(spark: SparkSession, index_dir: str) -> str:
     # its plan to the OLD manifest mid-flight would fail its scan,
     # so run compaction when no long-running queries are in flight
     # (the same operational contract as mor_compact).
-    for name, old in folded.items():
-        for seg in old:
-            if seg not in man["segments"][name]:
-                shutil.rmtree(
-                    os.path.join(index_dir, seg), ignore_errors=True
-                )
+    _drop_dirs(
+        index_dir,
+        [
+            seg
+            for name, old in folded.items()
+            for seg in old
+            if seg not in man["segments"][name]
+        ],
+    )
     return index_dir
 
 
@@ -737,18 +699,15 @@ def vacuum_ann_index(index_dir: str) -> list[str]:
     the orphans a crashed refresh/compact attempt staged but never
     committed. Requires no writer in flight (an in-progress attempt's
     staged dirs look exactly like orphans). Returns removed names."""
-    man = read_manifest(index_dir)
-    referenced = {
-        seg
-        for name in ARTIFACTS
-        for seg in man.get("segments", {}).get(name, [name])
-    }
-    removed = []
-    for entry in sorted(os.listdir(index_dir)):
-        p = os.path.join(index_dir, entry)
-        if os.path.isdir(p) and entry not in referenced:
-            shutil.rmtree(p, ignore_errors=True)
-            removed.append(entry)
+    segments = read_manifest(index_dir)["segments"]
+    referenced = {seg for name in ARTIFACTS for seg in segments[name]}
+    removed = [
+        entry
+        for entry in sorted(os.listdir(index_dir))
+        if os.path.isdir(os.path.join(index_dir, entry))
+        and entry not in referenced
+    ]
+    _drop_dirs(index_dir, removed)
     return removed
 
 
@@ -757,6 +716,49 @@ def _vectors(spark: SparkSession, index_dir: str) -> DataFrame:
     return _read_artifact(spark, index_dir, "vectors").select(
         "neighbor_id", "cv", F.col("cell").cast("long").alias("cell")
     )
+
+
+def _allowed(df: DataFrame, allowed_ids: DataFrame | None) -> DataFrame:
+    """The metadata-filtered-search pushdown every production vector
+    store ships, shared by all three query paths: ``allowed_ids``
+    (one ``neighbor_id`` column) semi-joins the corpus-side artifact
+    — IVF vectors, PQ codes, LSH postings — before any scoring, so
+    top-k ranks only over the allowed subset (pre-filter semantics:
+    a post-filter of an unfiltered top-k would silently return < k
+    or miss allowed neighbors entirely) and the candidate work
+    shrinks with the filter's selectivity."""
+    if allowed_ids is None:
+        return df
+    return df.join(allowed_ids.select("neighbor_id"), "neighbor_id", "left_semi")
+
+
+def _exact_rerank(
+    spark: SparkSession,
+    index_dir: str,
+    cand: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact top-k over (query_id, neighbor_id) candidates: pair_dot
+    of the normalized query against the persisted normalized vector.
+    No forced broadcast (r9): a corpus-sized query batch must not be
+    driver-materialized by a hint; AQE broadcasts small sets on its
+    own and shuffles the rest."""
+    qv = queries.select(
+        F.col(id_col).alias("query_id"), l2_normalize(F.col(vec_col)).alias("qv")
+    )
+    scored = (
+        cand.join(qv, "query_id")
+        .join(_vectors(spark, index_dir), "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            pair_dot(F.col("qv"), F.col("cv")).alias("cos_sim"),
+        )
+    )
+    return _topk(scored, k)
 
 
 def ivf_query(
@@ -775,13 +777,8 @@ def ivf_query(
     the cell-partitioned vectors artifact, exact re-rank. No
     training, no corpus re-encode.
 
-    ``allowed_ids`` (optional, one ``neighbor_id`` column) is the
-    metadata-filtered-search pushdown every production vector store
-    ships: the predicate semi-joins the candidate POSTINGS before
-    any scoring, so top-k ranks only over the allowed subset
-    (pre-filter semantics — a post-filter of an unfiltered top-k
-    would silently return < k or miss allowed neighbors entirely)
-    and the distance work shrinks with the filter's selectivity.
+    ``allowed_ids`` (optional) pre-filters the cell vectors
+    (``_allowed``).
 
     Execution strategy by batch size (r12, the sf10 spill find): a
     SMALL query batch (the serving case) joins cells row-wise and
@@ -816,13 +813,9 @@ def ivf_query(
     )
     if n_queries == 0:
         return _empty_result(spark)
-    crows = sorted(
-        _read_artifact(spark, index_dir, "ivf_centroids").collect(),
-        key=lambda r: r["cell"],
-    )
-    if not crows:  # empty index: no cells, no neighbors
+    cents = _load_centroids(spark, index_dir)
+    if cents.size == 0:  # empty index: no cells, no neighbors
         return _empty_result(spark)
-    cents = np.array([r["centroid"] for r in crows], dtype=np.float64)
 
     @F.pandas_udf("array<long>")
     def probe_cells(vs: pd.Series) -> pd.Series:
@@ -832,11 +825,7 @@ def ivf_query(
         order = np.argsort(d, axis=1)[:, :n_probe].astype(np.int64)
         return pd.Series(list(order))
 
-    vectors = _vectors(spark, index_dir)
-    if allowed_ids is not None:
-        vectors = vectors.join(
-            allowed_ids.select("neighbor_id"), "neighbor_id", "left_semi"
-        )
+    vectors = _allowed(_vectors(spark, index_dir), allowed_ids)
 
     if n_queries > LARGE_QUERY_BATCH:
         q_raw = queries.select(
@@ -902,14 +891,9 @@ def pq_query(
     """ADC search over the persisted code table + exact re-rank
     against the persisted normalized vectors.
 
-    ``allowed_ids`` (optional, one ``neighbor_id`` column) applies
-    metadata-filtered-search pushdown with PRE-filter semantics (the
-    ivf_query contract): the predicate semi-joins the CODE TABLE
-    before any ADC work, so the lookup-table scoring, the candidate
-    window and the exact re-rank all run over the allowed subset
-    only — ADC work shrinks with the filter's selectivity, and
-    top-k ranks over allowed vectors (a post-filter would return
-    < k or miss allowed neighbors ranked past k' globally).
+    ``allowed_ids`` (optional) pre-filters the CODE TABLE
+    (``_allowed``), so the lookup-table scoring, the candidate window
+    and the exact re-rank all run over the allowed subset only.
     Exactness lever: with rerank_factor sized so k' >= |allowed|,
     every allowed vector survives the ADC cut and the exact re-rank
     makes the result EXACT filtered kNN — the construction the
@@ -934,23 +918,15 @@ def pq_query(
       adc desc, neighbor_id asc — no argpartition tie ambiguity);
     - a global window takes the true ADC top-k' from the block
       partials (any global top-k' row is in its block's top-k'), and
-      the exact re-rank joins the persisted normalized vectors. The
-    query-vector join for the re-rank is left to AQE (broadcast when
-    small, shuffle when |Q| is corpus-sized) rather than a forced
-    broadcast hint.
+      ``_exact_rerank`` joins the persisted normalized vectors.
 
     Corpus-as-queries sweeps (|Q| ~ |corpus|, the ann_semantic_sweep
     contract) run through exactly this path.
     """
-    brows = _read_artifact(spark, index_dir, "pq_codebooks").collect()
-    if not brows:  # empty index: no codes, no neighbors
+    books = _load_codebooks(spark, index_dir)
+    if books.size == 0:  # empty index: no codes, no neighbors
         return _empty_result(spark)
-    m_sub = 1 + max(r["subspace"] for r in brows)
-    k_codes = 1 + max(r["code"] for r in brows)
-    d_sub = len(brows[0]["centroid"])
-    books = np.empty((m_sub, k_codes, d_sub))
-    for r in brows:
-        books[r["subspace"], r["code"]] = r["centroid"]
+    m_sub, _, d_sub = books.shape
     k_prime = k * rerank_factor
 
     # bounded size hint (r13, the ivf_query pattern): the count only
@@ -960,11 +936,7 @@ def pq_query(
     n_q = n_queries_hint if n_queries_hint is not None else queries.count()
     if n_q == 0:
         return _empty_result(spark)
-    codes = _read_artifact(spark, index_dir, "pq_codes")
-    if allowed_ids is not None:
-        codes = codes.join(
-            allowed_ids.select("neighbor_id"), "neighbor_id", "left_semi"
-        )
+    codes = _allowed(_read_artifact(spark, index_dir, "pq_codes"), allowed_ids)
     q_rep, c_rep = _chunk_grid(
         queries,
         [F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv_raw")],
@@ -982,8 +954,7 @@ def pq_query(
         if not len(qpdf) or not len(cpdf):
             return _block_frame([], "adc")
         q_ids = qpdf["query_id"].to_numpy()
-        q_mat = np.vstack(qpdf["qv_raw"].to_numpy()).astype(np.float64)
-        q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
+        q_mat = _unit_rows(_matrix(qpdf["qv_raw"]))
         lut = np.einsum(
             "qsd,skd->qsk", q_mat.reshape(len(q_mat), m_sub, d_sub), books
         )
@@ -1019,19 +990,7 @@ def pq_query(
         .where(F.col("r") <= k_prime)
         .select("query_id", "neighbor_id")
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), l2_normalize(F.col(vec_col)).alias("qv")
-    )
-    exact = (
-        cand.join(qv, "query_id")
-        .join(_vectors(spark, index_dir), "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            pair_dot(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-    )
-    return _topk(exact, k)
+    return _exact_rerank(spark, index_dir, cand, queries, k, id_col, vec_col)
 
 
 def lsh_query(
@@ -1049,14 +1008,9 @@ def lsh_query(
     """Multi-table multiprobe LSH against the persisted bucket
     postings.
 
-    ``allowed_ids`` (optional, one ``neighbor_id`` column) applies
-    metadata-filtered-search pushdown with PRE-filter semantics (the
-    ivf_query contract): the predicate semi-joins the bucket
-    POSTINGS before the probe join, so candidate generation and the
-    exact scoring both run over the allowed subset only — top-k
-    ranks over allowed vectors, and probe-join fan-out shrinks with
-    the filter's selectivity. Query signatures regenerate from the shared seed (the
-    planes are stateless); only the corpus-side postings were worth
+    ``allowed_ids`` (optional) pre-filters the bucket POSTINGS
+    (``_allowed``) before the probe join. Query signatures regenerate
+    from the shared seed (the planes are stateless); only the corpus-side postings were worth
     persisting — at scale they are the L-rows-per-vector artifact
     you never want to rebuild per query batch. Caller knobs are
     validated against the build manifest: a plane/table mismatch
@@ -1065,10 +1019,7 @@ def lsh_query(
     _check_knobs(index_dir, lsh_planes=n_planes, lsh_tables=n_tables)
     if queries.isEmpty():
         return _empty_result(spark)
-    sig_udf = _lsh_table_signatures(n_planes, n_tables)
-    q_sig = queries.select(
-        F.col(id_col).alias("query_id"), sig_udf(F.col(vec_col)).alias("sigs")
-    ).select("query_id", F.posexplode("sigs").alias("t", "sig"))
+    q_sig = _lsh_postings(queries, id_col, vec_col, n_planes, n_tables, "query_id")
     probes = [F.col("sig")]
     if probe_bits >= 1:
         probes += [
@@ -1077,33 +1028,14 @@ def lsh_query(
     q_idx = q_sig.select(
         "query_id", "t", F.explode(F.array(*probes)).alias("sig")
     )
-    buckets = _read_artifact(spark, index_dir, "lsh_buckets")
-    if allowed_ids is not None:
-        buckets = buckets.join(
-            allowed_ids.select("neighbor_id"), "neighbor_id", "left_semi"
-        )
+    buckets = _allowed(_read_artifact(spark, index_dir, "lsh_buckets"), allowed_ids)
     cand = (
         q_idx.join(buckets, ["t", "sig"])
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), l2_normalize(F.col(vec_col)).alias("qv")
-    )
-    # no forced broadcast (r9): a corpus-sized query batch must not
-    # be driver-materialized by a hint; AQE broadcasts small sets on
-    # its own and shuffles the rest (the pq_query convention)
-    scored = (
-        cand.join(qv, "query_id")
-        .join(_vectors(spark, index_dir), "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            pair_dot(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-    )
-    return _topk(scored, k)
+    return _exact_rerank(spark, index_dir, cand, queries, k, id_col, vec_col)
 
 
 def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -1119,7 +1051,4 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
         .select(F.lit(name).alias("artifact"), "n_rows")
         for name in ARTIFACTS
     ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("artifact")
+    return reduce(DataFrame.unionByName, parts).orderBy("artifact")

@@ -13,8 +13,9 @@ IEEE TPAMI 2011 — public method, clean-room implementation).
 
 This module holds the seeded pieces the persisted index is built
 from:
-- Training: driver-side numpy k-means per subspace on a bounded
-  sample (reuses the IVF trainer); the codebook is a tiny
+- Training: driver-side numpy k-means per subspace on the IVF
+  toolkit's bounded sample (``ivf._train_sample``, reusing the IVF
+  trainer); the codebook is a tiny
   (m, k, d/m) tensor that ships inside pandas_udf closures.
 - Encoding: one map-only Arrow pass — argmin against each subspace
   codebook, vectorized over the batch.
@@ -30,14 +31,15 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from etl_npl_pipeline_spark.operators.ivf import (
-    TRAIN_SAMPLE_CAP,
     _kmeans_lloyd,
+    _train_sample,
+    _unit_rows,
 )
+from etl_npl_pipeline_spark.operators.similarity import _matrix
 
 
 def _norm_rows(vs: pd.Series) -> np.ndarray:
-    m = np.concatenate(vs.to_numpy()).astype(np.float64).reshape(len(vs), -1)
-    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+    return _unit_rows(_matrix(vs))
 
 
 def train_pq_codebooks(
@@ -49,16 +51,11 @@ def train_pq_codebooks(
 ) -> np.ndarray:
     """Per-subspace k-means codebooks, trained on a bounded
     L2-normalized driver sample. Returns (m, k, d/m)."""
-    train = corpus.select(F.col(vec_col).alias("v"))
-    n = train.count()
-    if n > TRAIN_SAMPLE_CAP:
-        train = train.sample(fraction=TRAIN_SAMPLE_CAP / n, seed=seed)
-    mat = np.array([row["v"] for row in train.collect()], dtype=np.float64)
+    mat = _train_sample(corpus, vec_col, seed)
     if mat.size == 0:
         # empty corpus -> empty codebooks (no dim to subdivide);
         # pq_encode over zero subspaces emits empty code arrays
         return np.zeros((0, 0, 0))
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
     dim = mat.shape[1]
     if dim % m_subspaces:
         raise ValueError(f"dim {dim} not divisible by m={m_subspaces}")

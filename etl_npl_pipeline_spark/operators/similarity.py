@@ -419,9 +419,12 @@ def semantic_near_dups(
     always do), so cross-cluster misses are the documented
     approximation — the same trade the paper makes.
 
-    Scale: the quantizer trains on a bounded driver sample
-    (ivf._centroids, <=100k rows); cell assignment is one Arrow
-    batch matmul per partition (map-only, no shuffle); the pairwise
+    Scale: the quantizer trains on the bounded driver sample
+    (ivf._centroids over ivf._train_sample, <=100k rows); cell
+    assignment is ivf.cell_assigner — the same pandas_udf the ANN
+    index build and refresh use: one Arrow batch matmul per
+    partition (map-only, no shuffle), with every vector parked in
+    the sentinel cell -1 when the corpus was empty. The pairwise
     stage shuffles ids+vectors once on the cell key and inherits
     embedding_near_dups_blocked's max_block quarantine, so a
     degenerate quantizer (every vector in one cell) degrades to zero
@@ -429,23 +432,10 @@ def semantic_near_dups(
     expected cell size stays under max_block: n_clusters ~
     corpus/1000 at 100 TB scale.
     """
-    # Deferred import: ivf imports nothing from this module, but keep
-    # the dependency one-directional at import time anyway.
-    from etl_npl_pipeline_spark.operators.ivf import _centroids, _sq_dists
+    # Deferred import: ivf imports this module at load time.
+    from etl_npl_pipeline_spark.operators.ivf import _centroids, cell_assigner
 
-    cents = _centroids(df, vec_col, n_clusters, seed)
-
-    @F.pandas_udf("long")
-    def assign_cell(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0 or cents.size == 0:
-            # empty batch, or an empty quantizer (0-row corpus):
-            # park everything in a sentinel cell — with a 0-row
-            # corpus no rows exist to park anyway
-            return pd.Series([-1] * len(vs), dtype=np.int64)
-        m = _matrix(vs)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(_sq_dists(m, cents).argmin(axis=1).astype(np.int64))
-
+    assign_cell = cell_assigner(_centroids(df, vec_col, n_clusters, seed))
     blocked = df.withColumn("__cell", assign_cell(F.col(vec_col)))
     return embedding_near_dups_blocked(
         blocked,

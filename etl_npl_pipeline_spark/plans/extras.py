@@ -21,6 +21,7 @@ from etl_npl_pipeline_spark.operators.multimodal import (
     decode_media,
     frame_sample,
 )
+from etl_npl_pipeline_spark.session import scratch_dir
 from etl_npl_pipeline_spark.sources.files import read_csv
 from etl_npl_pipeline_spark.sources.tables import load_table
 from etl_npl_pipeline_spark.streaming import (
@@ -430,7 +431,7 @@ FROM dims ORDER BY doc_id
 
 # --- S1: CSV source round-trip ------------------------------------
 
-_CSV_TMP = "/root/repo/.tmp/csv_roundtrip"
+_CSV_TMP = scratch_dir("csv_roundtrip")
 
 
 def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -826,8 +827,8 @@ GROUP BY 1, 2 ORDER BY 1, 2
 
 # --- S7/S8: ORC and JSON-lines source round trips ------------------
 
-_ORC_TMP = "/root/repo/.tmp/orc_roundtrip"
-_JSONL_TMP = "/root/repo/.tmp/jsonl_roundtrip"
+_ORC_TMP = scratch_dir("orc_roundtrip")
+_JSONL_TMP = scratch_dir("jsonl_roundtrip")
 
 
 def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -888,7 +889,7 @@ FROM nation GROUP BY 1 ORDER BY 1
 
 # --- T19b: merge-on-read time travel (lakehouse contract query) ----
 
-_MOR_TMP = "/root/repo/.tmp/mor_snapshot"
+_MOR_TMP = scratch_dir("mor_snapshot")
 
 
 def mor_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1047,7 +1048,7 @@ FROM b ORDER BY doc_id
 
 # --- S2/S3/ST7 driver-grade evidence: excel, REST, stream upsert ---
 
-_XLSX_TMP = "/root/repo/.tmp/excel_roundtrip_{tag}.xlsx"
+_XLSX_TMP = scratch_dir("excel_roundtrip_{tag}.xlsx")
 # Workbooks already materialized by THIS process, keyed by path: the
 # contract under test is the Excel READ path (ref get_excel src:48);
 # the workbook itself is the once-written exchange artifact an
@@ -1055,7 +1056,7 @@ _XLSX_TMP = "/root/repo/.tmp/excel_roundtrip_{tag}.xlsx"
 # keeps repeat executions — bench steady-state pass, repeated driver
 # runs — measuring the read, not re-manufacturing the fixture.
 _XLSX_WRITTEN: set[str] = set()
-_STREAM_UPSERT_TMP = "/root/repo/.tmp/stream_upsert_mor"
+_STREAM_UPSERT_TMP = scratch_dir("stream_upsert_mor")
 
 
 def src_excel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1577,7 +1578,7 @@ FROM pos ORDER BY doc_id
 
 # --- T19c: compaction + post-compaction upsert round trip ----------
 
-_MOR_COMPACT_TMP = "/root/repo/.tmp/mor_compact"
+_MOR_COMPACT_TMP = scratch_dir("mor_compact")
 
 
 def mor_compacted_read(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,11 +26,12 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_npl_pipeline_spark.session import scratch_dir
 from etl_npl_pipeline_spark.sources.tables import load_table
 from etl_npl_pipeline_spark.streaming.events import drain
 
-_DIFF_TMP = "/root/repo/.tmp/snapshot_diff"
-_IVM_TMP = "/root/repo/.tmp/agg_incremental"
+_DIFF_TMP = scratch_dir("snapshot_diff")
+_IVM_TMP = scratch_dir("agg_incremental")
 
 
 def _orders_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,7 +275,7 @@ GROUP BY ship_month ORDER BY ship_month
 """
 
 
-_STREAM_IVM_TMP = "/root/repo/.tmp/stream_agg_incremental"
+_STREAM_IVM_TMP = scratch_dir("stream_agg_incremental")
 
 
 def _four_slice_stream(
@@ -386,7 +387,7 @@ GROUP BY event_type ORDER BY event_type
 """
 
 
-_CDC_TMP = "/root/repo/.tmp/stream_cdc_scd2"
+_CDC_TMP = scratch_dir("stream_cdc_scd2")
 _CDC_BATCHES = [
     ("2021-07-01", 1),
     ("2022-01-01", 2),
@@ -602,7 +603,7 @@ STREAM_CDC_SCD2_SQL = _cdc_scd2_oracle_sql()
 
 # --- T25: incremental JOIN view maintenance ------------------------
 
-_JOIN_IVM_TMP = "/root/repo/.tmp/join_incremental"
+_JOIN_IVM_TMP = scratch_dir("join_incremental")
 
 
 def join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -695,7 +696,7 @@ ORDER BY c_mktsegment, o_orderstatus
 
 # --- ST17: streaming incremental JOIN maintenance ------------------
 
-_SJOIN_TMP = "/root/repo/.tmp/stream_join_incremental"
+_SJOIN_TMP = scratch_dir("stream_join_incremental")
 
 
 def stream_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,9 +23,10 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_npl_pipeline_spark.session import scratch_dir
 from etl_npl_pipeline_spark.sources.tables import load_table
 
-_COW_TMP = "/root/repo/.tmp/cow_merge"
+_COW_TMP = scratch_dir("cow_merge")
 
 
 def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,6 +14,8 @@ return small nonzero result sets.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -22,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_npl_pipeline_spark.operators import dedup as D
 from etl_npl_pipeline_spark.operators import similarity as S
 from etl_npl_pipeline_spark.operators import text as T
+from etl_npl_pipeline_spark.session import scratch_dir
 from etl_npl_pipeline_spark.sources.tables import load_table
 
 _STOP_EN = "['the','a','of','and','to','in']"
@@ -817,9 +820,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster, so the same knob is conservative there)."""
     from etl_npl_pipeline_spark.operators.ann_index import ivf_query
 
-    idx = _ann_index(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
+    idx, _, queries = _served_batch(spark, sf_dir)
     return ivf_query(
         spark, idx, queries, k=ANN_K, n_probe=IVF_KNOBS["n_probe"],
         n_queries_hint=ANN_N_QUERIES,
@@ -838,9 +839,7 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-call codebook training or corpus re-encode."""
     from etl_npl_pipeline_spark.operators.ann_index import pq_query
 
-    idx = _ann_index(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
+    idx, _, queries = _served_batch(spark, sf_dir)
     return pq_query(
         spark, idx, queries, k=ANN_K,
         rerank_factor=PQ_KNOBS["rerank_factor"],
@@ -1169,27 +1168,44 @@ PQ_KNOBS = {"m_subspaces": 16, "k_codes": 32, "rerank_factor": 16}
 IVF_KNOBS = {"n_clusters": 12, "n_probe": 8}
 
 
-def _ann_index(spark: SparkSession, sf_dir: str) -> str:
+def _ann_index(
+    spark: SparkSession,
+    sf_dir: str,
+    corpus: DataFrame | None = None,
+    key_suffix: str = "",
+    n_clusters: int = IVF_KNOBS["n_clusters"],
+) -> str:
     """Build-once handle on the persisted ANN index for this sf dir
     (operators/ann_index.py): first caller this process pays the
     train+materialize cost; every later ann_* invocation — bench
     steady-state, the driver's oracle sweep — loads and searches.
     That is the production lifecycle at 100 TB: the index is an
-    artifact, not a per-query side effect."""
+    artifact, not a per-query side effect. A derived ``corpus`` (base
+    slice, planted grid) is named in the index key by ``key_suffix``."""
     import os as _os
 
     from etl_npl_pipeline_spark.operators.ann_index import build_ann_index
 
     return build_ann_index(
         spark,
-        _emb(spark, sf_dir),
-        _os.path.realpath(sf_dir.rstrip("/")),
-        n_clusters=IVF_KNOBS["n_clusters"],
+        _emb(spark, sf_dir) if corpus is None else corpus,
+        _os.path.realpath(sf_dir.rstrip("/")) + key_suffix,
+        n_clusters=n_clusters,
         pq_m=PQ_KNOBS["m_subspaces"],
         pq_k=PQ_KNOBS["k_codes"],
         lsh_planes=LSH_KNOBS["n_planes"],
         lsh_tables=LSH_KNOBS["n_tables"],
     )
+
+
+def _served_batch(
+    spark: SparkSession, sf_dir: str, n_queries: int = ANN_N_QUERIES
+) -> tuple[str, DataFrame, DataFrame]:
+    """(default index dir, embeddings, query batch): the serving
+    fixture every ann_* query runs — the first ``n_queries`` vec_ids
+    searched against the index of the whole table."""
+    emb = _emb(spark, sf_dir)
+    return _ann_index(spark, sf_dir), emb, emb.where(F.col("vec_id") < n_queries)
 
 
 def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1218,11 +1234,8 @@ def ann_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     where it is provable: tests/test_ann_index.py shows full-probe
     IVF over the refreshed index equals brute force over the union
     corpus, and bounds the appended batch's quantization drift."""
-    import os as _os
-
     from etl_npl_pipeline_spark.operators.ann_index import (
         _read_artifact,
-        build_ann_index,
         read_manifest,
         refresh_ann_index,
     )
@@ -1230,16 +1243,7 @@ def ann_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     base = emb.where(F.col("vec_id") % 5 != 4)
     batch = emb.where(F.col("vec_id") % 5 == 4)
-    idx = build_ann_index(
-        spark,
-        base,
-        _os.path.realpath(sf_dir.rstrip("/")) + "#base-mod5",
-        n_clusters=IVF_KNOBS["n_clusters"],
-        pq_m=PQ_KNOBS["m_subspaces"],
-        pq_k=PQ_KNOBS["k_codes"],
-        lsh_planes=LSH_KNOBS["n_planes"],
-        lsh_tables=LSH_KNOBS["n_tables"],
-    )
+    idx = _ann_index(spark, sf_dir, base, "#base-mod5")
     refresh_ann_index(spark, idx, batch, batch_key="mod5==4")
     version = read_manifest(idx)["version"]
     parts = []
@@ -1264,10 +1268,11 @@ def ann_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("n_appended"),
             ).select(F.lit(name).alias("artifact"), "n_rows", "n_appended")
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.withColumn("version", F.lit(version)).orderBy("artifact")
+    return (
+        reduce(DataFrame.unionByName, parts)
+        .withColumn("version", F.lit(version))
+        .orderBy("artifact")
+    )
 
 
 ANN_INDEX_REFRESH_SQL = f"""
@@ -1312,10 +1317,7 @@ def ann_compacted_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     a result set, not corpus data) BEFORE compaction because the
     commit deletes the folded segment dirs a lazy pre-plan would
     still scan."""
-    import os as _os
-
     from etl_npl_pipeline_spark.operators.ann_index import (
-        build_ann_index,
         compact_ann_index,
         ivf_query,
         read_manifest,
@@ -1325,16 +1327,7 @@ def ann_compacted_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     base = emb.where(F.col("vec_id") % 4 != 3)
     batch = emb.where(F.col("vec_id") % 4 == 3)
-    idx = build_ann_index(
-        spark,
-        base,
-        _os.path.realpath(sf_dir.rstrip("/")) + "#base-mod4",
-        n_clusters=IVF_KNOBS["n_clusters"],
-        pq_m=PQ_KNOBS["m_subspaces"],
-        pq_k=PQ_KNOBS["k_codes"],
-        lsh_planes=LSH_KNOBS["n_planes"],
-        lsh_tables=LSH_KNOBS["n_tables"],
-    )
+    idx = _ann_index(spark, sf_dir, base, "#base-mod4")
     refresh_ann_index(spark, idx, batch, batch_key="mod4==3")
     queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
     full_probe = IVF_KNOBS["n_clusters"]
@@ -1599,9 +1592,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     20 query signatures are computed per call."""
     from etl_npl_pipeline_spark.operators.ann_index import lsh_query
 
-    idx = _ann_index(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
+    idx, _, queries = _served_batch(spark, sf_dir)
     return lsh_query(
         spark, idx, queries, k=ANN_K, **LSH_KNOBS
     ).orderBy("query_id", "rank")
@@ -2829,6 +2820,12 @@ SEMDEDUP_PLANTED_N = 10
 SEMDEDUP_PLANTED_OFFSET = 1_000_000_000
 
 
+def _cells_for(n: int) -> int:
+    """IVF cell count for an n-vector corpus: ceil(n /
+    SEMDEDUP_TARGET_CELL), at least SEMDEDUP_CLUSTERS."""
+    return max(SEMDEDUP_CLUSTERS, -(-n // SEMDEDUP_TARGET_CELL))
+
+
 def semantic_pairs(
     spark: SparkSession, sf_dir: str, extra: DataFrame | None = None
 ) -> DataFrame:
@@ -2846,9 +2843,8 @@ def semantic_pairs(
     if extra is not None:
         emb = emb.unionByName(extra)
     n = emb.count()
-    n_clusters = max(SEMDEDUP_CLUSTERS, -(-n // SEMDEDUP_TARGET_CELL))
     return S.semantic_near_dups(
-        emb, n_clusters=n_clusters, threshold=EMB_THRESHOLD
+        emb, n_clusters=_cells_for(n), threshold=EMB_THRESHOLD
     )
 
 
@@ -3003,10 +2999,7 @@ def ann_semantic_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``refreshed_once`` additionally pins the lineage: the planted
     batch appears in the manifest exactly once no matter how many
     times the query re-runs (bench steady-state, driver retries)."""
-    import os
-
     from etl_npl_pipeline_spark.operators.ann_index import (
-        build_ann_index,
         ivf_query,
         read_manifest,
         refresh_ann_index,
@@ -3014,18 +3007,8 @@ def ann_semantic_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb(spark, sf_dir)
     n = emb.count()
-    n_clusters = max(
-        SEMDEDUP_CLUSTERS, -(-(n + SEMDEDUP_PLANTED_N) // SEMDEDUP_TARGET_CELL)
-    )
-    idx = build_ann_index(
-        spark,
-        emb,
-        os.path.realpath(sf_dir.rstrip("/")) + "#sweep-base",
-        n_clusters=n_clusters,
-        pq_m=PQ_KNOBS["m_subspaces"],
-        pq_k=PQ_KNOBS["k_codes"],
-        lsh_planes=LSH_KNOBS["n_planes"],
-        lsh_tables=LSH_KNOBS["n_tables"],
+    idx = _ann_index(
+        spark, sf_dir, emb, "#sweep-base", _cells_for(n + SEMDEDUP_PLANTED_N)
     )
     planted_src = emb.where(F.col("vec_id") < SEMDEDUP_PLANTED_N)
     planted = planted_src.withColumn(
@@ -3090,7 +3073,7 @@ ORDER BY id_a
 
 # --- ST-L59: streaming micro-batches → persisted ANN index ---------
 
-_STREAM_REFRESH_TMP = "/root/repo/.tmp/stream_index_refresh"
+_STREAM_REFRESH_TMP = scratch_dir("stream_index_refresh")
 
 
 def stream_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3119,22 +3102,12 @@ def stream_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from etl_npl_pipeline_spark.operators.ann_index import (
-        build_ann_index,
-        ivf_query,
-    )
+    from etl_npl_pipeline_spark.operators.ann_index import ivf_query
     from etl_npl_pipeline_spark.streaming.events import stream_refresh_index
 
     emb = _emb(spark, sf_dir)
-    idx = build_ann_index(
-        spark,
-        emb.where(F.col("vec_id") % 3 == 0),
-        os.path.realpath(sf_dir.rstrip("/")) + "#stream-refresh-base",
-        n_clusters=IVF_KNOBS["n_clusters"],
-        pq_m=PQ_KNOBS["m_subspaces"],
-        pq_k=PQ_KNOBS["k_codes"],
-        lsh_planes=LSH_KNOBS["n_planes"],
-        lsh_tables=LSH_KNOBS["n_tables"],
+    idx = _ann_index(
+        spark, sf_dir, emb.where(F.col("vec_id") % 3 == 0), "#stream-refresh-base"
     )
 
     # deterministic micro-batch layout: one file per remaining third,
@@ -3355,9 +3328,7 @@ def search_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain."""
     from etl_npl_pipeline_spark.operators.ann_index import ivf_query
 
-    idx = _ann_index(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") < MMR_N_QUERIES)
+    idx, emb, queries = _served_batch(spark, sf_dir, MMR_N_QUERIES)
     cands = (
         ivf_query(
             spark, idx, queries, k=MMR_CAND,
@@ -4369,7 +4340,7 @@ GROUP BY 1, 2 ORDER BY 1, 2
 
 # --- L46: incremental dedup against a persisted signature store ---
 
-_SIG_STORE_TMP = "/root/repo/.tmp/sig_store"
+_SIG_STORE_TMP = scratch_dir("sig_store")
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5969,38 +5940,24 @@ LP_GRID_COPIES = 4
 LP_GRID_STRIDE = 8
 
 
-def graph_label_prop_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L72b (r12, VERDICT r11 #1 — the one measured scale-killer):
-    the SAME synchronous label-propagation rounds as L72, but the
-    kNN graph is served from the persisted IVF index
-    (operators/ann_index.ivf_query, n_probe=1) instead of the exact
-    chunked cogroup whose shuffle bytes measured ×46.9 at 10× data.
-    Per-query graph-build work is O(cell size) — cells stay bounded
-    because n_clusters scales as ceil(n / SEMDEDUP_TARGET_CELL), the
-    ann_semantic_sweep doctrine — so edge construction is
-    bytes-linear in the corpus.
-
-    Deterministic oracle on an approximate index (the
-    ann_semantic_sweep argument): the graph runs over a PLANTED-GRID
-    corpus derived from the embeddings table — LP_GRID_COPIES exact
-    copies of every vector at ids vec_id*LP_GRID_STRIDE + j. Exact
-    copies are assigned by the frozen quantizer to the SAME cell
-    (identical input → identical argmin), each copy's own cell is
-    its n_probe=1 probe, and cos = 1.0 against its group beats every
-    cross-group score, so with k = LP_GRID_COPIES - 1 the served kNN
-    graph IS the complete within-group graph — exact kNN, derivable
-    by id arithmetic alone, which is what the DuckDB oracle replays
+def _lp_grid_served(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(corpus, served): the PLANTED-GRID corpus — LP_GRID_COPIES
+    exact copies of every embedding at ids vec_id*LP_GRID_STRIDE + j
+    — and its kNN served by ``ivf_query`` (n_probe=1) from the
+    persisted index of the grid, n_clusters = ceil(n /
+    SEMDEDUP_TARGET_CELL). Deterministic oracle on an approximate
+    index (the ann_semantic_sweep argument): exact copies are
+    assigned by the frozen quantizer to the SAME cell (identical
+    input → identical argmin), each copy's own cell is its n_probe=1
+    probe, and cos = 1.0 against its group beats every cross-group
+    score, so with k = LP_GRID_COPIES - 1 the served kNN graph IS the
+    complete within-group graph — exact kNN, derivable by id
+    arithmetic alone, which is what the DuckDB oracles replay
     (tests/test_label_prop_indexed.py additionally pins served edges
-    == brute-force edges on this fixture). Seeds (id % LP_SEED_MOD)
-    land in 4 of 5 groups by residue arithmetic, so the report shows
-    both converged groups (diagonal) and unreachable ones (-1) —
-    the real shape of a label-densification readout."""
-    import os
-
-    from etl_npl_pipeline_spark.operators.ann_index import (
-        build_ann_index,
-        ivf_query,
-    )
+    == brute-force edges on this fixture)."""
+    from etl_npl_pipeline_spark.operators.ann_index import ivf_query
 
     emb = _emb(spark, sf_dir)
     corpus = emb.select(
@@ -6016,19 +5973,8 @@ def graph_label_prop_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
     )
     n = emb.count()
-    n_clusters = max(
-        SEMDEDUP_CLUSTERS,
-        -(-(n * LP_GRID_COPIES) // SEMDEDUP_TARGET_CELL),
-    )
-    idx = build_ann_index(
-        spark,
-        corpus,
-        os.path.realpath(sf_dir.rstrip("/")) + "#lp-grid",
-        n_clusters=n_clusters,
-        pq_m=PQ_KNOBS["m_subspaces"],
-        pq_k=PQ_KNOBS["k_codes"],
-        lsh_planes=LSH_KNOBS["n_planes"],
-        lsh_tables=LSH_KNOBS["n_tables"],
+    idx = _ann_index(
+        spark, sf_dir, corpus, "#lp-grid", _cells_for(n * LP_GRID_COPIES)
     )
     served = ivf_query(
         spark,
@@ -6040,6 +5986,26 @@ def graph_label_prop_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # job, which would re-execute the exploded-grid plan
         n_queries_hint=n * LP_GRID_COPIES,
     )
+    return corpus, served
+
+
+def graph_label_prop_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L72b (r12, VERDICT r11 #1 — the one measured scale-killer):
+    the SAME synchronous label-propagation rounds as L72, but the
+    kNN graph is served from the persisted IVF index
+    (operators/ann_index.ivf_query, n_probe=1) instead of the exact
+    chunked cogroup whose shuffle bytes measured ×46.9 at 10× data.
+    Per-query graph-build work is O(cell size) — cells stay bounded
+    because n_clusters scales as ceil(n / SEMDEDUP_TARGET_CELL), the
+    ann_semantic_sweep doctrine — so edge construction is
+    bytes-linear in the corpus.
+
+    The graph runs over the planted grid (``_lp_grid_served``), where
+    the served kNN graph is exact. Seeds (id % LP_SEED_MOD) land in 4
+    of 5 groups by residue arithmetic, so the report shows both
+    converged groups (diagonal) and unreachable ones (-1) — the real
+    shape of a label-densification readout."""
+    corpus, served = _lp_grid_served(spark, sf_dir)
     edges = served.select(
         F.col("query_id").alias("dst"), F.col("neighbor_id").alias("src")
     )
@@ -6849,9 +6815,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell) instead of post-filter's wasted full ranking."""
     from etl_npl_pipeline_spark.operators.ann_index import ivf_query
 
-    idx = _ann_index(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
+    idx, emb, queries = _served_batch(spark, sf_dir)
     allowed = emb.where(F.col("label") <= ANN_FILTER_MAX_LABEL).select(
         F.col("vec_id").alias("neighbor_id")
     )
@@ -6885,9 +6849,7 @@ def ann_filtered_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate volume shrinking with the filter."""
     from etl_npl_pipeline_spark.operators.ann_index import pq_query
 
-    idx = _ann_index(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
+    idx, emb, queries = _served_batch(spark, sf_dir)
     allowed = emb.where(F.col("label") <= ANN_FILTER_MAX_LABEL).select(
         F.col("vec_id").alias("neighbor_id")
     )
@@ -7252,9 +7214,7 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the probe volume, so the 100 TB story is ivf_query's."""
     from etl_npl_pipeline_spark.operators.ann_index import ivf_query
 
-    idx = _ann_index(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
+    idx, _, queries = _served_batch(spark, sf_dir)
     return (
         ivf_query(
             spark,
@@ -7715,58 +7675,13 @@ GRAPH_PAGERANK_SQL = _pagerank_oracle_sql()
 def graph_pagerank_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L84b (r13): the PRODUCTION PageRank — the same fixed-point
     rounds as L84, but the kNN graph is SERVED from the persisted
-    IVF index over the planted-grid corpus (the L72b composition,
-    verbatim: exact copies land in the same cell under the frozen
-    quantizer, cos = 1.0 within a group beats every cross-group
-    score, so with k = copies-1 the served graph IS the complete
-    within-group graph — exact kNN derivable by id arithmetic,
-    which the oracle replays). Edge construction is O(N·cell) —
-    bytes-linear (L72b measured ×10.2/×10.3 at two decades) — so
+    IVF index over the planted-grid corpus (``_lp_grid_served``, the
+    L72b composition: the served graph IS the exact within-group kNN
+    graph, which the oracle replays). Edge construction is O(N·cell)
+    — bytes-linear (L72b measured ×10.2/×10.3 at two decades) — so
     this is the flavor that survives 100 TB; L84 stays as the
     accuracy yardstick."""
-    import os
-
-    from etl_npl_pipeline_spark.operators.ann_index import (
-        build_ann_index,
-        ivf_query,
-    )
-
-    emb = _emb(spark, sf_dir)
-    corpus = emb.select(
-        "vec_id",
-        "embedding",
-        "label",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(LP_GRID_COPIES - 1))
-        ).alias("j"),
-    ).select(
-        (F.col("vec_id") * LP_GRID_STRIDE + F.col("j")).alias("vec_id"),
-        "embedding",
-        "label",
-    )
-    n = emb.count()
-    n_clusters = max(
-        SEMDEDUP_CLUSTERS,
-        -(-(n * LP_GRID_COPIES) // SEMDEDUP_TARGET_CELL),
-    )
-    idx = build_ann_index(
-        spark,
-        corpus,
-        os.path.realpath(sf_dir.rstrip("/")) + "#lp-grid",
-        n_clusters=n_clusters,
-        pq_m=PQ_KNOBS["m_subspaces"],
-        pq_k=PQ_KNOBS["k_codes"],
-        lsh_planes=LSH_KNOBS["n_planes"],
-        lsh_tables=LSH_KNOBS["n_tables"],
-    )
-    served = ivf_query(
-        spark,
-        idx,
-        corpus,
-        k=LP_GRID_COPIES - 1,
-        n_probe=1,
-        n_queries_hint=n * LP_GRID_COPIES,
-    )
+    corpus, served = _lp_grid_served(spark, sf_dir)
     edges = served.select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
     )

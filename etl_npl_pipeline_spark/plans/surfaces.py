@@ -17,10 +17,10 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_npl_pipeline_spark.session import scoped_conf
+from etl_npl_pipeline_spark.session import scoped_conf, scratch_dir
 from etl_npl_pipeline_spark.sources.tables import load_table
 
-_TMP = "/root/repo/.tmp"
+_TMP = scratch_dir()
 
 
 def src_pyds_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,6 +19,18 @@ from pyspark.sql import SparkSession
 # partitions at runtime, so a higher static number is safe at scale.
 _LOCAL_SHUFFLE_PARTITIONS = "32"
 
+# <checkout>/.tmp: resolved from the package location, so a checkout
+# anywhere writes its scratch files inside itself
+_SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
+)
+
+
+def scratch_dir(name: str = "") -> str:
+    """Path of the scratch entry ``name`` under the checkout's ``.tmp``
+    dir (the dir itself when ``name`` is empty). Nothing is created."""
+    return os.path.join(_SCRATCH_ROOT, name) if name else _SCRATCH_ROOT
+
 
 def get_spark(app_name: str = "etl-npl-pipeline-spark") -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate conf.

@@ -468,6 +468,42 @@ def test_empty_batch_refresh_is_lineage_only(spark, sf_dir, tmp_path):
     shutil.rmtree(idx, ignore_errors=True)
 
 
+def test_refresh_onto_empty_base_parks_in_sentinel_cell(spark, sf_dir, tmp_path):
+    """A 0-row build trains no quantizers. A refresh onto it still
+    appends every vector: the shared cell assigner parks each one in
+    the sentinel cell -1, every PQ code array is empty (zero
+    subspaces), the LSH postings are complete, and IVF search has no
+    cell to probe."""
+    import shutil
+
+    emb = L._emb(spark, sf_dir)
+    key = os.path.realpath(sf_dir) + f"#empty-base-{tmp_path.name}"
+    idx = AI.build_ann_index(
+        spark, emb.where(F.col("vec_id") < 0), key, n_clusters=3, lsh_tables=2
+    )
+    AI.refresh_ann_index(
+        spark, idx, emb.where(F.col("vec_id") < 7), batch_key="seven"
+    )
+    stats = {r.artifact: r.n_rows for r in AI.index_stats(spark, idx).collect()}
+    assert stats == {
+        "ivf_centroids": 0,
+        "lsh_buckets": 14,
+        "pq_codebooks": 0,
+        "pq_codes": 7,
+        "vectors": 7,
+    }
+    assert {r.cell for r in AI._vectors(spark, idx).collect()} == {-1}
+    codes = AI._read_artifact(spark, idx, "pq_codes").collect()
+    assert all(len(r.codes) == 0 for r in codes)
+    queries = emb.where(F.col("vec_id") < 3)
+    assert AI.ivf_query(spark, idx, queries).count() == 0
+    man = AI.read_manifest(idx)
+    assert man["version"] == 2
+    assert man["appends"] == [{"version": 2, "rows": 7, "batch_key": "seven"}]
+
+    shutil.rmtree(idx, ignore_errors=True)
+
+
 def test_pq_query_corpus_as_queries_grid_invariance(spark, sf_dir):
     """The r9 distributed ADC is a pure block decomposition: running
     the WHOLE CORPUS as the query batch through a forced multi-chunk

@@ -40,6 +40,11 @@ QUERIES = entrymod.queries()
 SENSITIVE_EMPTY_TABLES = [
     "ann_topk",
     "ann_rp_topk",
+    # index lifecycle on a 0-row corpus: the empty-build publish, the
+    # lineage-only refresh commit and the compaction of empty segments
+    "ann_index_build",
+    "ann_index_refresh",
+    "ann_compacted_query",
     "ann_rp_rerank",
     "search_hybrid_rrf",
     "data_stratified_sample",

@@ -54,3 +54,17 @@ def test_script_package_imports_resolve(script):
         ):
             missing.append(f"{modules[node.value.id].__name__}.{node.attr}")
     assert not missing, f"{script}: unresolved package names {missing}"
+
+
+def test_package_never_spells_out_the_checkout_path():
+    """Scratch paths resolve from the package location
+    (``session.scratch_dir``): a module that spelled out the
+    checkout's absolute path would make a copy of the repo elsewhere
+    write into this checkout."""
+    pattern = os.path.join(ROOT, PKG, "**", "*.py")
+    hits = []
+    for path in sorted(glob.glob(pattern, recursive=True)):
+        with open(path) as fh:
+            if ROOT in fh.read():
+                hits.append(os.path.relpath(path, ROOT))
+    assert not hits, f"checkout path hard-coded in {hits}"
