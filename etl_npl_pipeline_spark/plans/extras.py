@@ -24,8 +24,13 @@ from etl_npl_pipeline_spark.operators.multimodal import (
 from etl_npl_pipeline_spark.session import scratch_dir
 from etl_npl_pipeline_spark.sources.files import read_csv
 from etl_npl_pipeline_spark.sources.tables import load_table
-from etl_npl_pipeline_spark.streaming import (
+from etl_npl_pipeline_spark.streaming.events import (
+    drain,
+    events_stream,
+    settled_events,
     stream_sessionize as _stream_sessionize,
+    stream_upsert_mor,
+    stream_user_totals,
     stream_windowed_counts,
 )
 
@@ -97,8 +102,6 @@ FROM marked GROUP BY user_id ORDER BY user_id
 def stream_user_totals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 transformWithStateInPandas: per-user running totals
     in a ValueState (see streaming.events.stream_user_totals)."""
-    from etl_npl_pipeline_spark.streaming.events import stream_user_totals
-
     return stream_user_totals(spark, sf_dir)
 
 
@@ -117,8 +120,6 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id, event_type) key once on first arrival. The oracle is
     the batch DISTINCT — which row wins is arrival-dependent, so
     only the (deterministic) key set is emitted."""
-    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
-
     ev = events_stream(spark, sf_dir).select("user_id", "event_type", "ts")
     deduped = ev.withWatermark("ts", "10 minutes").dropDuplicates(
         ["user_id", "event_type"]
@@ -140,8 +141,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical enrichment shape: the static side broadcasts into
     every micro-batch). Aggregated per segment; oracle = batch
     join."""
-    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
-
     ev = events_stream(spark, sf_dir).select("user_id", "value")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -539,8 +538,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-key state scan quadratic (see
     _bucketed_click_purchase_join). Oracle = the equivalent batch
     self-join."""
-    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
-
     clicks = (
         events_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
@@ -1200,10 +1197,6 @@ def stream_upsert_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from etl_npl_pipeline_spark import sinks
-    from etl_npl_pipeline_spark.streaming.events import (
-        events_stream,
-        stream_upsert_mor,
-    )
 
     shutil.rmtree(_STREAM_UPSERT_TMP, ignore_errors=True)
     ev = load_table(spark, sf_dir, "events").select(
@@ -1252,27 +1245,9 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     bridged. Session range is [first_event, last_event + gap): an
     event at exactly gap distance starts a NEW session, which the
     oracle mirrors with a >= gap break condition."""
-    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
-
-    max_ts = (
-        load_table(spark, sf_dir, "events")
-        .agg(F.max("ts").alias("m"))
-        .collect()[0]["m"]
-    )
-    # Watermark BEFORE the cutoff filter: the watermark statistic is
-    # collected at the EventTimeWatermark operator, and a predicate
-    # on the event-time column is never pushed below it — so the
-    # FULL stream advances the watermark to max_ts - 10m while only
-    # events <= max_ts - 20m form sessions. Every session then ends
-    # by max_ts - 15m < watermark and is guaranteed to close inside
-    # the bounded drain; without the margin the per-user FINAL
-    # session stays open forever and append mode never emits it.
-    ev = (
-        events_stream(spark, sf_dir)
-        .select("user_id", "ts")
-        .withWatermark("ts", "10 minutes")
-        .where(F.col("ts") <= F.lit(max_ts).cast("timestamp") - F.expr("INTERVAL 20 MINUTES"))
-    )
+    # sessions of events <= max_ts - 20m end by max_ts - 15m, below
+    # the final watermark, so the per-user FINAL session closes too
+    ev = settled_events(spark, sf_dir, 20).select("user_id", "ts")
     agg = ev.groupBy(
         F.session_window("ts", "5 minutes"), "user_id"
     ).agg(F.count(F.lit(1)).alias("n_events"))
@@ -1321,8 +1296,6 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     that EVERY click's eviction deadline passes inside the bounded
     drain — making the emitted set exactly the batch LEFT JOIN and
     the oracle deterministic."""
-    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
-
     # Each side's watermark stalls at ITS OWN last event (Catalyst
     # pushes the type predicate below the watermark node, so the
     # click watermark tracks clicks only), and outer rows emit only
@@ -1396,6 +1369,25 @@ ORDER BY user_id, click_id, purchase_id
 
 # --- ST10: streaming windowed top-k (pre-agg + serving rank) -------
 
+def _quarter_hour_counts(spark: SparkSession, sf_dir: str, label: str) -> DataFrame:
+    """Per-(15-min window, event_type) counts of the events settled
+    30 min below max ts, drained in APPEND mode under ``label``:
+    every kept window ends by max_ts - 15m, below the final
+    watermark, so each emits exactly once and its state is evicted
+    inside the bounded drain."""
+    agg = (
+        settled_events(spark, sf_dir, 30)
+        .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.col("w.start").cast("long").alias("win_start"),
+            "event_type",
+            "n",
+        )
+    )
+    return drain(agg, label)
+
+
 def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST10: the trending-items architecture — the STREAM maintains
     per-(15-min window, type) counts (watermarked stateful agg); the
@@ -1406,38 +1398,14 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The drain runs APPEND mode: each window emits exactly once, when
     the watermark passes its end, and its state is EVICTED — the
     production state-bound (O(open windows x types)) is the
-    demonstrated behavior, not a docstring claim. The ST8 anchoring
-    trick makes that work in a bounded drain: the watermark is
-    declared BEFORE the cutoff filter, so the FULL stream advances it
-    to max_ts - 10m while only events <= max_ts - 30m form windows —
-    every kept window ends by max_ts - 15m < watermark and is
-    guaranteed to close (emit + evict) before the drain finishes.
+    demonstrated behavior, not a docstring claim: the counts run over
+    ``settled_events``, so every kept window closes (emit + evict)
+    before the bounded drain finishes.
 
     Scale shape: the rank input is the aggregate, never raw events;
     state never outlives the watermark. Oracle replays the identical
     cutoff in batch SQL."""
-    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
-
-    max_ts = (
-        load_table(spark, sf_dir, "events")
-        .agg(F.max("ts").alias("m"))
-        .collect()[0]["m"]
-    )
-    ev = (
-        events_stream(spark, sf_dir)
-        .withWatermark("ts", "10 minutes")
-        .where(F.col("ts") <= F.lit(max_ts).cast("timestamp") - F.expr("INTERVAL 30 MINUTES"))
-    )
-    agg = (
-        ev.groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").cast("long").alias("win_start"),
-            "event_type",
-            "n",
-        )
-    )
-    drained = drain(agg, "stream_windowed_topk")
+    drained = _quarter_hour_counts(spark, sf_dir, "stream_windowed_topk")
     rk = Window.partitionBy("win_start").orderBy(
         F.col("n").desc(), F.col("event_type")
     )
@@ -1674,10 +1642,9 @@ def stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     window emits once when the watermark passes its end and its
     state is evicted, so the state bound a production deployment
     needs (O(open windows x types)) is the demonstrated behavior.
-    Same anchoring as ST8/ST10: watermark declared BEFORE the cutoff
-    filter, full stream advances it to max_ts - 10m, only events
-    <= max_ts - 30m form windows, so every kept window closes inside
-    the bounded drain. Anomaly scoring (which windows are traffic
+    The counts are ST10's (``_quarter_hour_counts``), so every kept
+    window closes inside the bounded drain. Anomaly scoring (which
+    windows are traffic
     spikes/droughts for their type) runs downstream on the compact
     emitted aggregate, z-scoring each window's count against its
     type's distribution over windows and flagging |z| > 2. The
@@ -1687,28 +1654,7 @@ def stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical cutoff."""
     from pyspark.sql.functions import broadcast
 
-    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
-
-    max_ts = (
-        load_table(spark, sf_dir, "events")
-        .agg(F.max("ts").alias("m"))
-        .collect()[0]["m"]
-    )
-    ev = (
-        events_stream(spark, sf_dir)
-        .withWatermark("ts", "10 minutes")
-        .where(F.col("ts") <= F.lit(max_ts).cast("timestamp") - F.expr("INTERVAL 30 MINUTES"))
-    )
-    agg = (
-        ev.groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").cast("long").alias("win_start"),
-            "event_type",
-            "n",
-        )
-    )
-    drained = drain(agg, "stream_anomaly_alerts")
+    drained = _quarter_hour_counts(spark, sf_dir, "stream_anomaly_alerts")
     stats = (
         drained.groupBy(F.col("event_type").alias("et"))
         .agg(
@@ -1780,11 +1726,19 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     numRowsDroppedByWatermark == 1 and no duplicate bar emission
     (incl. the SPARK-40925 one-batch lag between the late-events
     and eviction watermarks)."""
-    from etl_npl_pipeline_spark.streaming.events import drain, events_stream
+    return drain(
+        _ohlc_bars(events_stream(spark, sf_dir)),
+        "stream_ohlc_bars",
+        output_mode="complete",
+    ).orderBy("event_type", "bucket_epoch")
 
-    ev = events_stream(spark, sf_dir)
+
+def _ohlc_bars(ev: DataFrame) -> DataFrame:
+    """Hourly OHLC bars per event_type of an event stream, under a
+    10-minute watermark (open/close = value at the min/max
+    (ts, event_id))."""
     pick = F.struct(F.col("ts"), F.col("event_id"))
-    agg = (
+    return (
         ev.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
         .agg(
@@ -1803,7 +1757,4 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             "close",
             "n",
         )
-    )
-    return drain(agg, "stream_ohlc_bars", output_mode="complete").orderBy(
-        "event_type", "bucket_epoch"
     )

@@ -21,14 +21,15 @@ factors agree byte-for-byte.
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_npl_pipeline_spark.session import scratch_dir
+from etl_npl_pipeline_spark.session import scratch_dir, sf_scratch_dir
 from etl_npl_pipeline_spark.sources.tables import load_table
-from etl_npl_pipeline_spark.streaming.events import drain
+from etl_npl_pipeline_spark.streaming.events import drain, staged_stream
 
 _DIFF_TMP = scratch_dir("snapshot_diff")
 _IVM_TMP = scratch_dir("agg_incremental")
@@ -93,8 +94,6 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # manifest diff: per-partition file fingerprints from the FS
     # listing (no data read). A partition participates in the data
     # diff only if its (name, size) file set changed.
-    import os
-
     def manifest(root: str) -> dict[str, frozenset]:
         parts: dict[str, frozenset] = {}
         for d in os.listdir(root):
@@ -278,71 +277,26 @@ GROUP BY ship_month ORDER BY ship_month
 _STREAM_IVM_TMP = scratch_dir("stream_agg_incremental")
 
 
-def _four_slice_stream(
-    frame: DataFrame, key: str, in_dir: str, schema: str
-) -> DataFrame:
-    """Re-shard ``frame`` into four single-file slices under
-    ``in_dir`` (slice = ``key % 4``) and return a file stream that
-    delivers them as four micro-batches (maxFilesPerTrigger=1; one
-    parquet would be one batch).
-
-    ONE partitioned write instead of 4 filtered writes: the loop form
-    scanned the input four times and paid four write commits;
-    hash-partitioning the slice key into 4 tasks lands each slice in
-    exactly one task, so every s=i dir holds exactly one data file.
-    A valueless slice emits NO s=i dir under partitionBy, and with
-    zero data files the drain would run fewer micro-batches, so
-    missing slices are backfilled with an empty single-file dir: the
-    4-micro-batch drain shape is input-independent (empty-tables
-    parity — the drain then emits empty deltas, same as the batch
-    oracle).
-    """
-    import os
-
-    (
-        frame.withColumn("s", F.col(key) % 4)
-        .repartition(4, "s")
-        .write.partitionBy("s")
-        .parquet(in_dir)
-    )
-    empty_slice = frame.limit(0).coalesce(1)
-    for i in range(4):
-        if not os.path.exists(f"{in_dir}/s={i}"):
-            empty_slice.write.parquet(f"{in_dir}/s={i}")
-    return (
-        frame.sparkSession.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(in_dir)
-    )
-
-
 def stream_agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST12: STREAMING incremental view maintenance — the streaming
     twin of ``agg_incremental``. Events arrive as four micro-batches
-    (the input is re-sharded into four files, maxFilesPerTrigger=1);
-    each batch writes ONLY its own partial aggregates (sum, count
-    per event_type) to a batch-id-versioned delta dir, and the
-    refreshed rollup is the monoid merge of all deltas. History is
-    never rescanned; a replayed batch_id overwrites its own dir
-    (foreachBatch is at-least-once — idempotence comes from the
-    deterministic dir name, the stream_upsert_mor doctrine), so the
-    final state is exactly-once and batch-packing-independent:
-    sum/count are associative-commutative, which is precisely why
-    the oracle can replay the WHOLE rollup as one batch aggregate.
+    (``staged_stream``, slice = event_id mod 4); each batch writes
+    ONLY its own partial aggregates (sum, count per event_type) to a
+    batch-id-versioned delta dir, and the refreshed rollup is the
+    monoid merge of all deltas. History is never rescanned; a
+    replayed batch_id overwrites its own dir (foreachBatch is
+    at-least-once — idempotence comes from the deterministic dir
+    name, the stream_upsert_mor doctrine), so the final state is
+    exactly-once and batch-packing-independent: sum/count are
+    associative-commutative, which is precisely why the oracle can
+    replay the WHOLE rollup as one batch aggregate.
     """
-    import os
-
     ev_batch = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", F.col("value").cast("double").alias("value")
     )
     shutil.rmtree(_STREAM_IVM_TMP, ignore_errors=True)
-    stream = _four_slice_stream(
-        ev_batch,
-        "event_id",
-        f"{_STREAM_IVM_TMP}/in",
-        "event_id bigint, event_type string, value double",
+    stream = staged_stream(
+        ev_batch, F.pmod("event_id", 4), 4, f"{_STREAM_IVM_TMP}/in"
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -401,8 +355,6 @@ def _apply_cdc_batch(spark: SparkSession, batch_df: DataFrame) -> None:
     the persisted state chain, and REJECT out-of-order delivery (a
     seq whose predecessor state does not exist). Module-level so the
     ordering guard is unit-testable outside a streaming query."""
-    import os
-
     from etl_npl_pipeline_spark.operators.quality import scd2_apply
 
     ts_by_seq = {s: t for t, s in _CDC_BATCHES}
@@ -444,9 +396,10 @@ def _apply_cdc_batch(spark: SparkSession, batch_df: DataFrame) -> None:
 def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST13: streaming CDC apply into a TYPE-2 versioned dimension —
     the streaming twin of T20's scd2_history. Three ordered change
-    batches arrive as a file stream (maxFilesPerTrigger=1, ascending
-    mtimes); each micro-batch applies via quality.scd2_apply to the
-    persisted dimension state and writes the next state version.
+    batches arrive as a file stream (``staged_stream``, slice =
+    batch_seq - 1, so batch i carries seq i + 1); each micro-batch
+    applies via quality.scd2_apply to the persisted dimension state
+    and writes the next state version.
 
     The ordering contract is explicit, not assumed: SCD2 apply does
     NOT commute across batches, so the sink (a) orders change rows
@@ -467,8 +420,6 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     change). The oracle replays all three as an unrolled tri-state
     CTE chain.
     """
-    import os
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_nationkey"
     )
@@ -500,24 +451,12 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment"),
         (F.col("c_nationkey") + 1).alias("c_nationkey"),
     )
-    for i, b in enumerate([b1, b2, b3], start=1):
-        path = f"{_CDC_TMP}/in/s={i}"
-        b.coalesce(1).write.parquet(path)
-        # ascending mtimes make the file source deliver batches in
-        # seq order; the sink still asserts it
-        for root, _, files in os.walk(path):
-            for fname in files:
-                os.utime(os.path.join(root, fname), (1000000 + i, 1000000 + i))
-
-    stream = (
-        spark.readStream.schema(
-            "batch_seq int, c_custkey bigint, c_mktsegment string, "
-            "c_nationkey int"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(f"{_CDC_TMP}/in")
+    # staged in seq order; the sink still asserts it
+    stream = staged_stream(
+        b1.unionByName(b2).unionByName(b3),
+        F.col("batch_seq") - 1,
+        3,
+        f"{_CDC_TMP}/in",
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -603,7 +542,51 @@ STREAM_CDC_SCD2_SQL = _cdc_scd2_oracle_sql()
 
 # --- T25: incremental JOIN view maintenance ------------------------
 
-_JOIN_IVM_TMP = scratch_dir("join_incremental")
+_JOIN_COLS = [
+    "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus",
+    "c_mktsegment",
+]
+
+
+def _join_inputs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(A, ΔA, B, ΔB) of the T25/ST17 join view: A/ΔA = orders
+    before / from 1998-01-01, B/ΔB = customers whose custkey % 10 is
+    nonzero / zero."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus",
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("od"),
+    )
+    cust = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    return (
+        orders.where(F.col("od") < "1998-01-01"),
+        orders.where(F.col("od") >= "1998-01-01"),
+        cust.where(F.col("c_custkey") % 10 != 0),
+        cust.where(F.col("c_custkey") % 10 == 0),
+    )
+
+
+def _join_view(fact: DataFrame, dim: DataFrame) -> DataFrame:
+    """One term of the delta rule: fact ⋈ dim on the customer key."""
+    return fact.join(dim, fact.o_custkey == dim.c_custkey).select(*_JOIN_COLS)
+
+
+def _join_report(view: DataFrame) -> DataFrame:
+    """Orders and exact DECIMAL money per (segment, status) of the
+    maintained view (the T23 sf1 lesson)."""
+    from etl_npl_pipeline_spark.functions.exact import dsum, money
+
+    return (
+        view.groupBy("c_mktsegment", "o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            dsum(money("o_totalprice")).alias("sum_total"),
+        )
+        .orderBy("c_mktsegment", "o_orderstatus")
+    )
 
 
 def join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -629,58 +612,17 @@ def join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     |view partials|), not O(A⋈B). Money aggregates as exact DECIMAL
     (the T23 sf1 lesson). The oracle recomputes the full join from
     scratch; equality IS the IVM correctness statement."""
-    import shutil as _sh
-
-    from etl_npl_pipeline_spark.functions.exact import dsum, money
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus",
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("od"),
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    a = orders.where(F.col("od") < "1998-01-01")
-    da = orders.where(F.col("od") >= "1998-01-01")
-    b = cust.where(F.col("c_custkey") % 10 != 0)
-    db = cust.where(F.col("c_custkey") % 10 == 0)
-
-    cols = [
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus",
-        "c_mktsegment",
-    ]
-
-    def j(fact: DataFrame, dim: DataFrame) -> DataFrame:
-        return fact.join(
-            dim, fact.o_custkey == dim.c_custkey
-        ).select(*cols)
-
-    # sf-keyed state dir (the stream-drain convention): concurrent
-    # drives at different scale factors must not clobber each
-    # other's materialized view
-    import os as _os
-
-    tmp = _os.path.join(
-        _JOIN_IVM_TMP,
-        _os.path.basename(_os.path.realpath(sf_dir.rstrip("/"))),
-    )
-    _sh.rmtree(tmp, ignore_errors=True)
-    j(a, b).write.parquet(f"{tmp}/state")
+    a, da, b, db = _join_inputs(spark, sf_dir)
+    tmp = sf_scratch_dir("join_incremental", sf_dir)
+    _join_view(a, b).write.parquet(f"{tmp}/state")
     state = spark.read.parquet(f"{tmp}/state")
     refreshed = (
         state
-        .unionByName(j(da, b))
-        .unionByName(j(a, F.broadcast(db)))
-        .unionByName(j(da, db))
+        .unionByName(_join_view(da, b))
+        .unionByName(_join_view(a, F.broadcast(db)))
+        .unionByName(_join_view(da, db))
     )
-    return (
-        refreshed.groupBy("c_mktsegment", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum(money("o_totalprice")).alias("sum_total"),
-        )
-        .orderBy("c_mktsegment", "o_orderstatus")
-    )
+    return _join_report(refreshed)
 
 
 JOIN_INCREMENTAL_SQL = """
@@ -695,8 +637,6 @@ ORDER BY c_mktsegment, o_orderstatus
 
 
 # --- ST17: streaming incremental JOIN maintenance ------------------
-
-_SJOIN_TMP = scratch_dir("stream_join_incremental")
 
 
 def stream_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,48 +653,13 @@ def stream_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the full join from scratch, and equality IS
     the maintenance-correctness statement (same report shape as
     T25)."""
-    import os as _os
-
-    from etl_npl_pipeline_spark.functions.exact import dsum, money
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus",
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("od"),
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    a = orders.where(F.col("od") < "1998-01-01")
-    da = orders.where(F.col("od") >= "1998-01-01")
-    b = cust.where(F.col("c_custkey") % 10 != 0)
-    db = cust.where(F.col("c_custkey") % 10 == 0)
-
-    cols = [
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus",
-        "c_mktsegment",
-    ]
-
-    def j(fact: DataFrame, dim: DataFrame) -> DataFrame:
-        return fact.join(
-            dim, fact.o_custkey == dim.c_custkey
-        ).select(*cols)
-
-    tmp = _os.path.join(
-        _SJOIN_TMP,
-        _os.path.basename(_os.path.realpath(sf_dir.rstrip("/"))),
-    )
-    shutil.rmtree(tmp, ignore_errors=True)
+    a, da, b, db = _join_inputs(spark, sf_dir)
+    tmp = sf_scratch_dir("stream_join_incremental", sf_dir)
     # the materialized base view + the one-time dim-backfill delta
-    j(a, b).write.parquet(f"{tmp}/state")
-    j(a, F.broadcast(db)).write.parquet(f"{tmp}/dim_backfill")
-    # fact tail re-sharded into 4 files => 4 real micro-batches
-    stream = _four_slice_stream(
-        da,
-        "o_orderkey",
-        f"{tmp}/in",
-        "o_orderkey bigint, o_custkey bigint, o_totalprice double,"
-        " o_orderstatus string, od string",
-    )
+    _join_view(a, b).write.parquet(f"{tmp}/state")
+    _join_view(a, F.broadcast(db)).write.parquet(f"{tmp}/dim_backfill")
+    # fact tail staged as 4 slices => 4 real micro-batches
+    stream = staged_stream(da, F.pmod("o_orderkey", 4), 4, f"{tmp}/in")
     # B ∪ ΔB materialized ONCE (r14, guide §2.4): each of the four
     # micro-batches broadcasts the full dimension, and without the
     # checkpoint every batch re-ran BOTH customer scans (2 scans x 4
@@ -763,7 +668,7 @@ def stream_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     full_dim = b.unionByName(db).localCheckpoint(eager=False)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        j(batch_df, F.broadcast(full_dim)).write.mode(
+        _join_view(batch_df, F.broadcast(full_dim)).write.mode(
             "overwrite"
         ).parquet(f"{tmp}/deltas/b={batch_id}")
 
@@ -776,17 +681,10 @@ def stream_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(
             spark.read.option("basePath", f"{tmp}/deltas").parquet(
                 f"{tmp}/deltas"
-            ).select(*cols)
+            ).select(*_JOIN_COLS)
         )
     )
-    return (
-        view.groupBy("c_mktsegment", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum(money("o_totalprice")).alias("sum_total"),
-        )
-        .orderBy("c_mktsegment", "o_orderstatus")
-    )
+    return _join_report(view)
 
 
 STREAM_JOIN_INCREMENTAL_SQL = JOIN_INCREMENTAL_SQL

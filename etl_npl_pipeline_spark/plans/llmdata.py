@@ -24,8 +24,13 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_npl_pipeline_spark.operators import dedup as D
 from etl_npl_pipeline_spark.operators import similarity as S
 from etl_npl_pipeline_spark.operators import text as T
-from etl_npl_pipeline_spark.session import scratch_dir
+from etl_npl_pipeline_spark.session import scratch_dir, sf_scratch_dir
 from etl_npl_pipeline_spark.sources.tables import load_table
+from etl_npl_pipeline_spark.streaming.events import (
+    drain_per_batch,
+    staged_stream,
+    stream_refresh_index,
+)
 
 _STOP_EN = "['the','a','of','and','to','in']"
 _STOP_ES = "['el','la','de','que','y','en']"
@@ -3080,10 +3085,10 @@ def stream_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming → index lifecycle composition (r9, VERDICT r8 #5):
     build the ANN index on a base third of the embeddings, then
     drain the remaining vectors THROUGH A REAL STRUCTURED STREAM
-    (file source, maxFilesPerTrigger=1 → one refresh_ann_index call
-    per micro-batch via foreachBatch — streaming.events.
-    stream_refresh_index, with content-derived batch_keys for
-    exactly-once appends under at-least-once replay).
+    (``staged_stream``: one micro-batch per remaining third → one
+    refresh_ann_index call per micro-batch via foreachBatch —
+    streaming.events.stream_refresh_index, with content-derived
+    batch_keys for exactly-once appends under at-least-once replay).
 
     FULL equality oracle: after the drain the index holds the entire
     embeddings table, and a FULL-PROBE ivf_query is exact brute-force
@@ -3093,45 +3098,25 @@ def stream_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL that backs ann_topk. A lost micro-batch, a double append, or
     a stale manifest read all surface as a row mismatch.
 
-    Idempotent across invocations: the stream input files and their
-    names are rebuilt deterministically, the checkpoint is fresh per
+    Idempotent across invocations: batch i is always the
+    vec_id % 3 == i + 1 third, the checkpoint is fresh per
     invocation, and already-appended content keys no-op in the
     manifest lineage (bench steady-state re-runs measure the drain
     machinery + query, not duplicate appends)."""
-    import glob
-    import os
     import shutil
 
     from etl_npl_pipeline_spark.operators.ann_index import ivf_query
-    from etl_npl_pipeline_spark.streaming.events import stream_refresh_index
 
     emb = _emb(spark, sf_dir)
     idx = _ann_index(
         spark, sf_dir, emb.where(F.col("vec_id") % 3 == 0), "#stream-refresh-base"
     )
 
-    # deterministic micro-batch layout: one file per remaining third,
-    # fixed names so every invocation (and a fresh checkpoint) packs
-    # the same content into the same batches
     shutil.rmtree(_STREAM_REFRESH_TMP, ignore_errors=True)
-    in_dir = os.path.join(_STREAM_REFRESH_TMP, "in")
-    os.makedirs(in_dir)
-    for residue in (1, 2):
-        stage = os.path.join(_STREAM_REFRESH_TMP, f"stage{residue}")
-        emb.where(F.col("vec_id") % 3 == residue).coalesce(1).write.parquet(
-            stage
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        os.rename(part, os.path.join(in_dir, f"batch{residue}.parquet"))
-
-    vstream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    vstream = staged_stream(
+        emb, F.col("vec_id") % 3 - 1, 2, f"{_STREAM_REFRESH_TMP}/in"
     )
-    stream_refresh_index(
-        vstream, idx, os.path.join(_STREAM_REFRESH_TMP, "_checkpoint")
-    )
+    stream_refresh_index(vstream, idx, f"{_STREAM_REFRESH_TMP}/_checkpoint")
 
     queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
     return ivf_query(
@@ -3830,10 +3815,7 @@ def text_quality_probe_incremental(
     ]
     if not halves:
         return _qp_fit(spark, _qp_moments(_qp_feature_frame(docs)))
-    acc = halves[0]
-    for h in halves[1:]:
-        acc = _qp_add_moments(acc, h)
-    return _qp_fit(spark, acc)
+    return _qp_fit(spark, reduce(_qp_add_moments, halves))
 
 
 TEXT_QUALITY_PROBE_INCREMENTAL_SQL = TEXT_QUALITY_PROBE_SQL
@@ -3842,55 +3824,32 @@ TEXT_QUALITY_PROBE_INCREMENTAL_SQL = TEXT_QUALITY_PROBE_SQL
 def stream_quality_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST15 (r13): STREAMING model refresh — the third leg of the
     L79 trilogy (batch / incremental / streaming). The corpus
-    arrives as a multi-file availableNow stream
-    (maxFilesPerTrigger=1, 4 deterministic splits); each micro-batch
-    contributes its 22 exact-BIGINT sufficient statistics via ONE
-    aggregate inside foreachBatch, the driver ADDS them into the
-    model-state accumulator (the same additivity L79b pins), and the
-    fit runs once after the drain. Result == batch retrain
-    bit-for-bit, so the oracle IS the full-corpus probe SQL.
+    arrives as a four-batch availableNow stream (``staged_stream``,
+    slice = doc_id mod 4); each micro-batch contributes its 22
+    exact-BIGINT sufficient statistics via ONE aggregate inside
+    foreachBatch, the driver ADDS them into the model-state
+    accumulator (the same additivity L79b pins), and the fit runs
+    once after the drain. Result == batch retrain bit-for-bit, so
+    the oracle IS the full-corpus probe SQL.
 
     Exactly-once: foreachBatch is at-least-once under restart — a
     replayed batch_id must not double-count its moments, so the
-    accumulator is keyed by batch_id and a replay overwrites instead
-    of adds (the MOR-epoch doctrine, in miniature). At 100 TB this
-    is a long-lived stream folding per-batch partials into a
-    persisted moments artifact; retraining is a driver-side refit of
-    22 numbers — no corpus rescan, ever."""
-    import os as _os
-
-    src_dir = _os.path.join(".tmp", "stream_qprobe", _os.path.basename(
-        _os.path.realpath(sf_dir.rstrip("/"))))
+    per-batch moments are keyed by batch_id (``drain_per_batch``)
+    and a replay overwrites instead of adds (the MOR-epoch
+    doctrine, in miniature). At 100 TB this is a long-lived stream
+    folding per-batch partials into a persisted moments artifact;
+    retraining is a driver-side refit of 22 numbers — no corpus
+    rescan, ever."""
+    src_dir = sf_scratch_dir("stream_qprobe", sf_dir)
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    feats = _qp_feature_frame(stream)
-    per_batch: dict[int, dict] = {}
-
-    def _fold(bdf, batch_id: int) -> None:
-        # keyed by batch_id: an at-least-once replay OVERWRITES its
-        # own slot instead of double-adding
-        per_batch[int(batch_id)] = _qp_moments(bdf)
-
-    from etl_npl_pipeline_spark.streaming.events import drain
-
-    drain(
-        feats,
+    stream = staged_stream(docs, F.pmod("doc_id", 4), 4, f"{src_dir}/in")
+    moments = drain_per_batch(
+        _qp_feature_frame(stream),
         "stream_quality_probe",
-        sink=_fold,
-        checkpoint=_os.path.join(src_dir, "_ckpt"),
+        f"{src_dir}/ckpt",
+        _qp_moments,
     )
-    if not per_batch:
-        return spark.createDataFrame([], "term string, value double")
-    mids = sorted(per_batch)
-    acc = per_batch[mids[0]]
-    for b in mids[1:]:
-        acc = _qp_add_moments(acc, per_batch[b])
-    return _qp_fit(spark, acc)
+    return _qp_fit(spark, reduce(_qp_add_moments, moments))
 
 
 STREAM_QUALITY_PROBE_SQL = TEXT_QUALITY_PROBE_SQL
@@ -7338,8 +7297,9 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-lived stream (the shape a production embedding pipeline
     actually runs: the monitor folds each arriving shard's moments
     into a persisted accumulator and re-emits the report without
-    ever rescanning history). Embeddings arrive as a 4-split
-    availableNow file stream; each micro-batch contributes its
+    ever rescanning history). Embeddings arrive as four
+    micro-batches (``staged_stream``, slice = vec_id mod 4); each
+    micro-batch contributes its
     64x2x3 EXACT-BIGINT moments (vectors quantized to fixed-point,
     the emb_kmeans doctrine — integer sums are order- and
     batch-independent) via ONE aggregate in foreachBatch, keyed by
@@ -7347,17 +7307,9 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ST15 exactly-once pattern). The report is a driver-side fold of
     the 384-number artifact; stream == batch bit-for-bit, so the
     oracle is the quantized batch SQL."""
-    import os as _os
-
-    src_dir = _os.path.join(".tmp", "stream_drift", _os.path.basename(
-        _os.path.realpath(sf_dir.rstrip("/"))))
+    src_dir = sf_scratch_dir("stream_drift", sf_dir)
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-    emb.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    stream = staged_stream(emb, F.pmod("vec_id", 4), 4, f"{src_dir}/in")
     xq = stream.select(
         "vec_id",
         F.transform(
@@ -7365,23 +7317,10 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: F.floor(x * F.lit(DM_SCALE) + F.lit(0.5)),
         ).alias("xq"),
     )
-    per_batch: dict[int, dict] = {}
-
-    def _fold(bdf, batch_id: int) -> None:
-        per_batch[int(batch_id)] = _dm_moments(bdf)
-
-    from etl_npl_pipeline_spark.streaming.events import drain
-
-    drain(
-        xq,
-        "stream_drift_monitor",
-        sink=_fold,
-        checkpoint=_os.path.join(src_dir, "_ckpt"),
+    moments = drain_per_batch(
+        xq, "stream_drift_monitor", f"{src_dir}/ckpt", _dm_moments
     )
-    acc: dict = {}
-    for b in sorted(per_batch):
-        acc = _dm_add(acc, per_batch[b])
-    return _dm_report(spark, acc)
+    return _dm_report(spark, reduce(_dm_add, moments, {}))
 
 
 STREAM_DRIFT_MONITOR_SQL = f"""

@@ -9,6 +9,7 @@ Arrow batching). Nothing here is machine-specific.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -30,6 +31,18 @@ def scratch_dir(name: str = "") -> str:
     """Path of the scratch entry ``name`` under the checkout's ``.tmp``
     dir (the dir itself when ``name`` is empty). Nothing is created."""
     return os.path.join(_SCRATCH_ROOT, name) if name else _SCRATCH_ROOT
+
+
+def sf_scratch_dir(name: str, sf_dir: str) -> str:
+    """Scratch entry ``name/<sf dir name>``, emptied: contracts that
+    stage files per scale factor key them by the sf dir, so
+    concurrent drives at different scale factors never clobber each
+    other's files."""
+    path = os.path.join(
+        scratch_dir(name), os.path.basename(os.path.realpath(sf_dir.rstrip("/")))
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 def get_spark(app_name: str = "etl-npl-pipeline-spark") -> SparkSession:

@@ -1,11 +1,16 @@
 """Structured Streaming over the events table.
 
-The stream source is the events parquet read incrementally
-(``readStream``). Every stream in the package runs through
-``drain``, the one availableNow drain: the stream drains the backlog
-and stops — semantically the production shape (watermark + windowed
-state) with a bounded run — under scoped drain confs, and records
-its micro-batch progress in ``DRAIN_PROGRESS``.
+Every stream in the package runs through ``drain``, the one
+availableNow drain: the stream drains the backlog and stops —
+semantically the production shape (watermark + windowed state) with
+a bounded run — under scoped drain confs, and records its
+micro-batch progress in ``DRAIN_PROGRESS``. Beside it sit the
+stream inputs — ``events_stream`` (the events parquet read with
+``readStream``), ``settled_events`` (that stream watermarked and cut
+off below max ts, so every window closes inside the drain) and
+``staged_stream`` (any frame as n single-file slices that drain as
+n micro-batches, batch i = slice i) — and ``drain_per_batch``, a
+foreachBatch drain returning one result per batch, replay-safe.
 
 - ``stream_windowed_counts``: event-time tumbling window + watermark.
   With availableNow over a bounded input it produces exactly the
@@ -30,7 +35,7 @@ from collections.abc import Callable
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType,
@@ -41,6 +46,7 @@ from pyspark.sql.types import (
 
 from etl_npl_pipeline_spark.functions.exact import MONEY
 from etl_npl_pipeline_spark.session import scoped_conf
+from etl_npl_pipeline_spark.sources.tables import load_table
 
 _RAW_SCHEMA_TMPL = (
     "event_id BIGINT, ts {ts_type}, user_id BIGINT, event_type STRING, "
@@ -72,6 +78,80 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ts_type == "bigint":
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def settled_events(
+    spark: SparkSession, sf_dir: str, margin_minutes: int
+) -> DataFrame:
+    """``events_stream`` with a 10-minute watermark, keeping only
+    events at least ``margin_minutes`` older than the table's max ts.
+
+    Watermark BEFORE the cutoff filter: the watermark statistic is
+    collected at the EventTimeWatermark operator, and a predicate on
+    the event-time column is never pushed below it — so the FULL
+    stream advances the watermark to max_ts - 10m while only the
+    settled events form windows or sessions. With a margin above
+    10 minutes plus the window (or gap) length, every kept window
+    and session ends below the final watermark and so closes (emits
+    and evicts) inside the bounded drain; without the margin the
+    last window per key stays open and append mode never emits it.
+    An empty events table has a NULL max ts, so the cutoff is NULL
+    and the filter keeps nothing — the empty shape, as in batch."""
+    max_ts = (
+        load_table(spark, sf_dir, "events")
+        .agg(F.max("ts").alias("m"))
+        .collect()[0]["m"]
+    )
+    cutoff = F.lit(max_ts).cast("timestamp") - F.expr(
+        f"INTERVAL {margin_minutes} MINUTES"
+    )
+    return (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "10 minutes")
+        .where(F.col("ts") <= cutoff)
+    )
+
+
+def staged_stream(
+    frame: DataFrame, slice_col: Column, n_slices: int, in_dir: str
+) -> DataFrame:
+    """Stage ``frame`` under ``in_dir`` as ``n_slices`` single-file
+    slices (slice i = the rows whose ``slice_col`` is i; rows outside
+    0..n_slices-1 are not staged) and return a file stream over them
+    whose drain runs exactly ``n_slices`` micro-batches, batch i =
+    slice i. The stream schema is ``frame.schema``.
+
+    ONE partitioned write: hash-partitioning the slice into
+    ``n_slices`` tasks lands each slice in exactly one task, so the
+    frame is scanned once and every slice dir holds one data file. A
+    slice with no rows emits no dir under partitionBy, so it is
+    backfilled with an empty single-file dir: the batch count is
+    input-independent (an empty table drains as n empty batches,
+    same as the batch oracle sees). The file source reads one file
+    per trigger, oldest mtime first, and slice i's mtimes are a
+    fixed base + i seconds, so the batch order is the slice order.
+    """
+    (
+        frame.withColumn("_slice", slice_col)
+        .where(F.col("_slice").between(0, n_slices - 1))
+        .repartition(n_slices, "_slice")
+        .write.partitionBy("_slice")
+        .parquet(in_dir)
+    )
+    empty_slice = frame.limit(0).coalesce(1)
+    for i in range(n_slices):
+        slice_dir = os.path.join(in_dir, f"_slice={i}")
+        if not os.path.exists(slice_dir):
+            empty_slice.write.parquet(slice_dir)
+        stamp = 1_000_000 + i
+        for name in os.listdir(slice_dir):
+            os.utime(os.path.join(slice_dir, name), (stamp, stamp))
+    return (
+        frame.sparkSession.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(in_dir)
+    )
 
 
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,31 +313,26 @@ def _user_totals_fn(key, pdfs, state: GroupState):
     )
 
 
-def stream_user_totals(
-    spark: SparkSession, sf_dir: str, api: str = "auto"
-) -> DataFrame:
+def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running per-user totals (event count + exact value cents) as
     a custom stateful streaming operator, drained with availableNow
     and folded to final rows (update-mode sinks may emit a user once
     per micro-batch; max() of monotonic counters takes the final
     state).
 
-    ``api``: 'tws' = Spark 4 transformWithStateInPandas
-    (StatefulProcessor + ValueState — needs protobuf in the python
-    env), 'applyInPandasWithState' = the 3.4-era API, 'auto' = tws
-    when available, else fallback. Both paths produce identical
-    output (the exactness contract lives in the JVM-side cents
-    cast, not the state API).
+    The operator is Spark 4 transformWithStateInPandas
+    (StatefulProcessor + ValueState) where the python env has
+    protobuf, else the 3.4-era applyInPandasWithState. Both produce
+    identical output (the exactness contract lives in the JVM-side
+    cents cast, not the state API).
     """
-    if api == "auto":
-        api = "tws" if _tws_available() else "applyInPandasWithState"
     ev = events_stream(spark, sf_dir).select(
         "user_id",
         (F.col("value").cast("decimal(12,2)") * 100)
         .cast("long")
         .alias("cents"),
     )
-    if api == "tws":
+    if _tws_available():
         out = ev.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=_UserTotalsProcessor(),
             outputStructType=_TWS_OUT,
@@ -453,6 +528,25 @@ def drain(
         finally:
             DRAIN_PROGRESS[label] = _progress_summary(q, output_mode)
     return spark.table(name) if sink is None else None
+
+
+def drain_per_batch(
+    sdf: DataFrame,
+    label: str,
+    checkpoint: str,
+    fn: Callable[[DataFrame], object],
+) -> list:
+    """Drain ``sdf`` through a foreachBatch sink and return
+    ``fn(batch_df)`` of every micro-batch, in batch order. Results are
+    keyed by batch_id, so an at-least-once replay of a batch
+    OVERWRITES its own result instead of adding a second one."""
+    out: dict[int, object] = {}
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        out[batch_id] = fn(batch_df)
+
+    drain(sdf, label, sink=_sink, checkpoint=checkpoint)
+    return [out[b] for b in sorted(out)]
 
 
 # Version stride reserved per stream epoch: every (re)started stream

@@ -29,17 +29,21 @@ Oracle = the batch OHLC aggregation over exactly the
 watermark-ADMITTED set (all rows minus the too-late one) — batch
 semantics on admitted rows, tie-breaks included.
 
-File mtimes are forced monotonically increasing so
-maxFilesPerTrigger=1 yields a deterministic batch order (the file
-source processes oldest-mtime first).
+The batches are staged with ``streaming.events.staged_stream``
+(slice = batch index), which drains batch i as slice i, and the
+bars are the contract's own aggregate (``extras._ohlc_bars``).
 """
 
 from __future__ import annotations
 
-import os
-import time
-
 import pyspark.sql.functions as F
+
+from etl_npl_pipeline_spark.plans.extras import _ohlc_bars
+from etl_npl_pipeline_spark.streaming.events import (
+    DRAIN_PROGRESS,
+    drain,
+    staged_stream,
+)
 
 H = 3600  # seconds per hour bucket
 BASE = 1_700_000_000 - (1_700_000_000 % H)  # aligned hour boundary
@@ -66,67 +70,28 @@ BATCHES = [
 ]
 
 
-def _write_batches(spark, root: str) -> None:
-    os.makedirs(root, exist_ok=True)
-    for i, rows in enumerate(BATCHES):
-        df = spark.createDataFrame(
-            [(eid, et, ts * 1_000_000, v) for eid, et, ts, v in rows],
-            "event_id long, event_type string, ts_us long, value double",
+def test_ohlc_append_folds_late_and_drops_too_late(spark, tmp_path):
+    src = staged_stream(
+        spark.createDataFrame(
+            [
+                (i, eid, et, ts * 1_000_000, v)
+                for i, rows in enumerate(BATCHES)
+                for eid, et, ts, v in rows
+            ],
+            "batch int, event_id long, event_type string, ts_us long,"
+            " value double",
         ).select(
+            "batch",
             "event_id",
             "event_type",
             F.timestamp_micros(F.col("ts_us")).alias("ts"),
             "value",
-        )
-        path = os.path.join(root, f"batch_{i}.parquet")
-        df.coalesce(1).write.mode("overwrite").parquet(path)
-        # monotone mtimes -> deterministic file-source batch order
-        stamp = time.time() - 1000 + i * 10
-        for fn in os.listdir(path):
-            os.utime(os.path.join(path, fn), (stamp, stamp))
-
-
-def _ohlc_agg(ev):
-    pick = F.struct(F.col("ts"), F.col("event_id"))
-    return (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
-        .agg(
-            F.min_by("value", pick).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", pick).alias("close"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "event_type",
-            F.col("window.start").cast("long").alias("bucket_epoch"),
-            "open", "high", "low", "close", "n",
-        )
+        ),
+        F.col("batch"),
+        len(BATCHES),
+        str(tmp_path / "ohlc_src"),
     )
-
-
-def test_ohlc_append_folds_late_and_drops_too_late(spark, tmp_path):
-    root = str(tmp_path / "ohlc_src")
-    _write_batches(spark, root)
-    src = (
-        spark.readStream.schema(
-            "event_id long, event_type string, ts timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(root, "*"))
-    )
-    q = (
-        _ohlc_agg(src)
-        .writeStream.format("memory")
-        .queryName("ohlc_late_proof")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT * FROM ohlc_late_proof").collect()
+    rows = drain(_ohlc_bars(src), "ohlc_late_proof").collect()
     # append must emit each closed window EXACTLY once — a re-emitted
     # hour-0 (duplicate key) would mean the too-late row re-opened
     # evicted state instead of being dropped
@@ -140,12 +105,8 @@ def test_ohlc_append_folds_late_and_drops_too_late(spark, tmp_path):
     }
 
     # the engine must REPORT the drop (numRowsDroppedByWatermark)
-    dropped = sum(
-        op.get("numRowsDroppedByWatermark", 0)
-        for p in q.recentProgress
-        for op in (p["stateOperators"] or [])
-    )
-    assert dropped == 1, dropped
+    progress = DRAIN_PROGRESS["ohlc_late_proof"]
+    assert progress["late_rows_dropped"] == 1, progress
 
     # oracle: batch OHLC over the watermark-ADMITTED set
     admitted = [r for b in BATCHES for r in b if r != TOO_LATE]

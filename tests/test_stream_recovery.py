@@ -224,13 +224,15 @@ def test_stream_index_refresh_crash_resume_exactly_once(spark, sf_dir, tmp_path)
     at the failed batch, every content key lands exactly once in the
     manifest lineage, and the post-drain full-probe query equals
     brute force over the union corpus."""
-    import glob
     import os
 
     from etl_npl_pipeline_spark.operators import ann_index as AI
     from etl_npl_pipeline_spark.operators.similarity import brute_force_topk
     from etl_npl_pipeline_spark.plans import llmdata as L
-    from etl_npl_pipeline_spark.streaming.events import stream_refresh_index
+    from etl_npl_pipeline_spark.streaming.events import (
+        staged_stream,
+        stream_refresh_index,
+    )
 
     emb = L._emb(spark, sf_dir)
     idx = AI.build_ann_index(
@@ -239,26 +241,18 @@ def test_stream_index_refresh_crash_resume_exactly_once(spark, sf_dir, tmp_path)
         os.path.realpath(sf_dir) + f"#stream-crash-{tmp_path.name}",
         n_clusters=4, pq_m=8, pq_k=16, lsh_planes=4, lsh_tables=3,
     )
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    for residue in (1, 2):
-        stage = str(tmp_path / f"stage{residue}")
-        emb.where(F.col("vec_id") % 3 == residue).coalesce(1).write.parquet(stage)
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        os.rename(part, os.path.join(in_dir, f"batch{residue}.parquet"))
-    vstream_fn = lambda: (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    # batch i = the vec_id % 3 == i + 1 third
+    vstream = staged_stream(
+        emb, F.col("vec_id") % 3 - 1, 2, str(tmp_path / "in")
     )
     checkpoint = str(tmp_path / "_checkpoint")
 
     with pytest.raises(Exception, match="injected failure|STREAM"):
-        stream_refresh_index(vstream_fn(), idx, checkpoint, fail_at_batch=1)
+        stream_refresh_index(vstream, idx, checkpoint, fail_at_batch=1)
     man_mid = AI.read_manifest(idx)
     assert len(man_mid["appends"]) == 1  # batch 0 landed, batch 1 did not
 
-    stream_refresh_index(vstream_fn(), idx, checkpoint)  # resume
+    stream_refresh_index(vstream, idx, checkpoint)  # resume
     man = AI.read_manifest(idx)
     keys = [a["batch_key"] for a in man["appends"]]
     assert len(keys) == 2 and len(set(keys)) == 2

@@ -8,17 +8,24 @@ an assertion: the append-mode windowed aggs (ST8/ST10/ST11) must
 finish their drain with ZERO retained state rows (every window
 emitted and evicted), and the stream-stream joins (ST5/ST9) must
 keep state within the input size (no unbounded buffering). The
-foreachBatch contracts record progress through the same drain, and
-the drain scopes its session confs.
+foreachBatch contracts record progress through the same drain, a
+staged stream drains one batch per slice in slice order, and the
+drain scopes its session confs.
 """
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
 import pytest
 
 from etl_npl_pipeline_spark.plans import extras, ivm, llmdata
 from etl_npl_pipeline_spark.session import scoped_conf
-from etl_npl_pipeline_spark.streaming.events import DRAIN_PROGRESS, drain
+from etl_npl_pipeline_spark.streaming.events import (
+    DRAIN_PROGRESS,
+    drain,
+    drain_per_batch,
+    staged_stream,
+)
 
 
 @pytest.mark.parametrize(
@@ -60,13 +67,13 @@ def test_stream_joins_keep_state_bounded(spark, sf_dir, label, fn):
 @pytest.mark.parametrize(
     "fn, batches",
     [
-        # the re-sharded IVM inputs are four single-file slices and
-        # the CDC input three ordered files, each read one per batch
+        # staged_stream drains one micro-batch per slice
         (ivm.stream_agg_incremental, 4),
         (ivm.stream_cdc_scd2, 3),
         (ivm.stream_join_incremental, 4),
-        (llmdata.stream_quality_probe, None),
-        (llmdata.stream_drift_monitor, None),
+        (llmdata.stream_quality_probe, 4),
+        (llmdata.stream_drift_monitor, 4),
+        (llmdata.stream_index_refresh, 2),
     ],
     ids=lambda v: getattr(v, "__name__", str(v)),
 )
@@ -76,10 +83,23 @@ def test_foreach_batch_contracts_record_progress(spark, sf_dir, fn, batches):
     fn(spark, sf_dir).collect()
     p = DRAIN_PROGRESS[label]
     assert p["input_rows"] > 0, p
-    if batches is None:
-        assert p["batches"] >= 1, p
-    else:
-        assert p["batches"] == batches, p
+    assert p["batches"] == batches, p
+
+
+def test_staged_stream_drains_slices_in_order_with_backfill(spark, tmp_path):
+    # slice 1 has no rows: it is backfilled, so it still drains as an
+    # (empty) batch between slices 0 and 2
+    frame = spark.createDataFrame(
+        [(i,) for i in (0, 3, 6, 2, 5, 8)], "id long"
+    )
+    batches = drain_per_batch(
+        staged_stream(frame, F.col("id") % 3, 3, str(tmp_path / "in")),
+        "staged_stream_probe",
+        str(tmp_path / "ckpt"),
+        lambda b: sorted(r["id"] for r in b.collect()),
+    )
+    assert batches == [[0, 3, 6], [], [2, 5, 8]]
+    assert DRAIN_PROGRESS["staged_stream_probe"]["batches"] == 3
 
 
 def test_drain_restores_session_confs(spark, tmp_path):

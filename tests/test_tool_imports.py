@@ -68,3 +68,33 @@ def test_package_never_spells_out_the_checkout_path():
             if ROOT in fh.read():
                 hits.append(os.path.relpath(path, ROOT))
     assert not hits, f"checkout path hard-coded in {hits}"
+
+
+def test_package_builds_no_cwd_relative_scratch_path():
+    """Scratch paths come from ``session.scratch_dir``: a module that
+    builds ``os.path.join(".tmp", ...)`` or a ``".tmp/..."`` literal
+    writes into whatever directory the process runs from. A ``.tmp``
+    file-name suffix (``MANIFEST + ".tmp"``) is not a path root."""
+    hits = []
+    pattern = os.path.join(ROOT, PKG, "**", "*.py")
+    for path in sorted(glob.glob(pattern, recursive=True)):
+        rel = os.path.relpath(path, ROOT)
+        if rel == os.path.join(PKG, "session.py"):
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "join"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == ".tmp"
+            ) or (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and node.value.startswith(".tmp/")
+            ):
+                hits.append(f"{rel}:{node.lineno}")
+    assert not hits, f"cwd-relative scratch path built at {hits}"
