@@ -83,6 +83,7 @@ from etl_npl_pipeline_spark.operators.similarity import (
     l2_normalize,
     pair_dot,
 )
+from etl_npl_pipeline_spark.sources.tables import fingerprint, read_parquet
 
 # Index dirs already built by THIS process, keyed by the knob+corpus
 # hash. Repeat invocations (bench steady-state, the driver's oracle
@@ -111,32 +112,15 @@ LARGE_QUERY_BATCH = 1_000
 
 
 def _content_fingerprint(corpus_key: str) -> str:
-    """Cheap content identity of the corpus behind ``corpus_key``:
-    (relpath, size, mtime_ns) of every parquet file under it, md5'd.
-    Data regenerated at the same path gets a new fingerprint, so the
-    cache can never serve an index built on stale bytes (r7 ADVICE).
-    Non-path keys (synthetic test corpora) fingerprint as the key
-    itself — the caller owns identity there."""
+    """Content identity of the corpus behind ``corpus_key``
+    (`tables.fingerprint` of the path before any ``#``), so the cache
+    can never serve an index built on stale bytes (r7 ADVICE).
+    Non-path keys (synthetic test corpora) fingerprint as "nokey" —
+    the caller owns identity there."""
     path = corpus_key.split("#", 1)[0]
     if not os.path.exists(path):
         return "nokey"
-    entries = []
-    if os.path.isfile(path):
-        st = os.stat(path)
-        entries.append(("", st.st_size, st.st_mtime_ns))
-    else:
-        for dirpath, _dirs, files in os.walk(path):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    st = os.stat(os.path.join(dirpath, f))
-                    entries.append(
-                        (
-                            os.path.relpath(os.path.join(dirpath, f), path),
-                            st.st_size,
-                            st.st_mtime_ns,
-                        )
-                    )
-    return hashlib.md5(repr(sorted(entries)).encode()).hexdigest()[:16]
+    return fingerprint(path)
 
 
 def read_manifest(index_dir: str) -> dict:
@@ -165,7 +149,7 @@ def _read_artifact(
     # each union branch. Later segments cast to the base segment's
     # schema by name — a partition-discovered cell (int) and an
     # explicit empty-segment cell (long) must still union.
-    dfs = [spark.read.parquet(p) for p in _artifact_paths(index_dir, name)]
+    dfs = [read_parquet(spark, p) for p in _artifact_paths(index_dir, name)]
     out = dfs[0]
     for d in dfs[1:]:
         d = d.select(

@@ -155,9 +155,10 @@ def minhash_signatures(
         ).alias("hs"),
     )
     sig = hs.select("doc", sig_udf(F.col("hs")).alias("sig"))
-    return sig.select(
-        "doc",
-        *[F.element_at(F.col("sig"), i + 1).alias(f"sig_{i}") for i in range(N_PERM)],
+    # one parsed projection, not 64 Column builds (README: repetitive
+    # expression families)
+    return sig.selectExpr(
+        "doc", *[f"element_at(sig, {i + 1}) AS sig_{i}" for i in range(N_PERM)]
     )
 
 
@@ -204,14 +205,12 @@ def minhash_candidates(
     see _drop_oversize_buckets), which bounds both executor memory
     and the pair explosion at corpus scale.
     """
-    bands = sigs.select(
-        "doc",
-        *[
-            F.xxhash64(
-                *[F.col(f"sig_{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
-            ).alias(f"band_{b}")
-            for b in range(N_BANDS)
-        ],
+    band_cols = (
+        ", ".join(f"sig_{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
+        for b in range(N_BANDS)
+    )
+    bands = sigs.selectExpr(
+        "doc", *[f"xxhash64({cols}) AS band_{b}" for b, cols in enumerate(band_cols)]
     )
     pairs = ", ".join(f"'{b}', band_{b}" for b in range(N_BANDS))
     long = bands.select(

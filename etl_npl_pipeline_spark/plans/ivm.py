@@ -274,9 +274,6 @@ GROUP BY ship_month ORDER BY ship_month
 """
 
 
-_STREAM_IVM_TMP = scratch_dir("stream_agg_incremental")
-
-
 def stream_agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST12: STREAMING incremental view maintenance — the streaming
     twin of ``agg_incremental``. Events arrive as four micro-batches
@@ -294,30 +291,22 @@ def stream_agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_batch = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", F.col("value").cast("double").alias("value")
     )
-    shutil.rmtree(_STREAM_IVM_TMP, ignore_errors=True)
-    stream = staged_stream(
-        ev_batch, F.pmod("event_id", 4), 4, f"{_STREAM_IVM_TMP}/in"
-    )
+    tmp = sf_scratch_dir("stream_agg_incremental", sf_dir)
+    stream = staged_stream(ev_batch, F.pmod("event_id", 4), 4, f"{tmp}/in")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.groupBy("event_type").agg(
             F.sum("value").alias("p_sum"), F.count(F.lit(1)).alias("p_n")
-        ).write.mode("overwrite").parquet(
-            f"{_STREAM_IVM_TMP}/deltas/b={batch_id}"
-        )
+        ).write.mode("overwrite").parquet(f"{tmp}/deltas/b={batch_id}")
 
     drain(
         stream,
         "stream_agg_incremental",
         sink=sink,
-        checkpoint=f"{_STREAM_IVM_TMP}/ckpt",
+        checkpoint=f"{tmp}/ckpt",
     )
-    n_batches = len(
-        [d for d in os.listdir(f"{_STREAM_IVM_TMP}/deltas") if d.startswith("b=")]
-    )
-    state = spark.read.option(
-        "basePath", f"{_STREAM_IVM_TMP}/deltas"
-    ).parquet(f"{_STREAM_IVM_TMP}/deltas")
+    n_batches = len([d for d in os.listdir(f"{tmp}/deltas") if d.startswith("b=")])
+    state = spark.read.option("basePath", f"{tmp}/deltas").parquet(f"{tmp}/deltas")
     return (
         state.groupBy("event_type")
         .agg(F.sum("p_sum").alias("s"), F.sum("p_n").alias("n_events"))
@@ -341,7 +330,6 @@ GROUP BY event_type ORDER BY event_type
 """
 
 
-_CDC_TMP = scratch_dir("stream_cdc_scd2")
 _CDC_BATCHES = [
     ("2021-07-01", 1),
     ("2022-01-01", 2),
@@ -349,12 +337,15 @@ _CDC_BATCHES = [
 ]
 
 
-def _apply_cdc_batch(spark: SparkSession, batch_df: DataFrame) -> None:
+def _apply_cdc_batch(
+    spark: SparkSession, batch_df: DataFrame, state_dir: str
+) -> None:
     """One micro-batch of the ST13 sink: order change rows by
     batch_seq WITHIN the batch, apply one scd2_apply per seq against
-    the persisted state chain, and REJECT out-of-order delivery (a
-    seq whose predecessor state does not exist). Module-level so the
-    ordering guard is unit-testable outside a streaming query."""
+    the state chain persisted under ``state_dir``, and REJECT
+    out-of-order delivery (a seq whose predecessor state does not
+    exist). Module-level so the ordering guard is unit-testable
+    outside a streaming query."""
     from etl_npl_pipeline_spark.operators.quality import scd2_apply
 
     ts_by_seq = {s: t for t, s in _CDC_BATCHES}
@@ -366,7 +357,7 @@ def _apply_cdc_batch(spark: SparkSession, batch_df: DataFrame) -> None:
         return
     done = {
         int(d.rsplit("state_seq", 1)[1])
-        for d in os.listdir(_CDC_TMP)
+        for d in os.listdir(state_dir)
         if d.startswith("state_seq")
     }
     for seq in seqs:
@@ -378,7 +369,7 @@ def _apply_cdc_batch(spark: SparkSession, batch_df: DataFrame) -> None:
                 f"CDC out-of-order: batch seq {seq} arrived before "
                 f"seq {seq - 1} was applied (have {sorted(done)})"
             )
-        cur = spark.read.parquet(f"{_CDC_TMP}/state_seq{seq - 1}")
+        cur = spark.read.parquet(f"{state_dir}/state_seq{seq - 1}")
         chg = batch_df.where(F.col("batch_seq") == seq).select(
             "c_custkey", "c_mktsegment", "c_nationkey"
         )
@@ -389,7 +380,7 @@ def _apply_cdc_batch(spark: SparkSession, batch_df: DataFrame) -> None:
             attr_cols=["c_mktsegment", "c_nationkey"],
             batch_ts=ts_by_seq[seq],
         )
-        out.write.mode("overwrite").parquet(f"{_CDC_TMP}/state_seq{seq}")
+        out.write.mode("overwrite").parquet(f"{state_dir}/state_seq{seq}")
         done.add(seq)
 
 
@@ -423,13 +414,13 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_nationkey"
     )
-    shutil.rmtree(_CDC_TMP, ignore_errors=True)
+    tmp = sf_scratch_dir("stream_cdc_scd2", sf_dir)
     base = (
         cust.where(F.col("c_custkey") % 3 != 0)
         .withColumn("valid_from", F.lit("2020-01-01"))
         .withColumn("valid_to", F.lit("9999-12-31"))
     )
-    base.write.parquet(f"{_CDC_TMP}/state_seq0")
+    base.write.parquet(f"{tmp}/state_seq0")
 
     b1 = cust.where(F.col("c_custkey") % 2 == 0).select(
         F.lit(1).alias("batch_seq"),
@@ -456,20 +447,20 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         b1.unionByName(b2).unionByName(b3),
         F.col("batch_seq") - 1,
         3,
-        f"{_CDC_TMP}/in",
+        f"{tmp}/in",
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _apply_cdc_batch(spark, batch_df)
+        _apply_cdc_batch(spark, batch_df, tmp)
 
-    drain(stream, "stream_cdc_scd2", sink=sink, checkpoint=f"{_CDC_TMP}/ckpt")
+    drain(stream, "stream_cdc_scd2", sink=sink, checkpoint=f"{tmp}/ckpt")
     final = max(
         int(d.rsplit("state_seq", 1)[1])
-        for d in os.listdir(_CDC_TMP)
+        for d in os.listdir(tmp)
         if d.startswith("state_seq")
     )
     return (
-        spark.read.parquet(f"{_CDC_TMP}/state_seq{final}")
+        spark.read.parquet(f"{tmp}/state_seq{final}")
         .select(
             "c_custkey", "c_mktsegment", "c_nationkey",
             "valid_from", "valid_to",

@@ -3078,9 +3078,6 @@ ORDER BY id_a
 
 # --- ST-L59: streaming micro-batches → persisted ANN index ---------
 
-_STREAM_REFRESH_TMP = scratch_dir("stream_index_refresh")
-
-
 def stream_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming → index lifecycle composition (r9, VERDICT r8 #5):
     build the ANN index on a base third of the embeddings, then
@@ -3103,8 +3100,6 @@ def stream_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocation, and already-appended content keys no-op in the
     manifest lineage (bench steady-state re-runs measure the drain
     machinery + query, not duplicate appends)."""
-    import shutil
-
     from etl_npl_pipeline_spark.operators.ann_index import ivf_query
 
     emb = _emb(spark, sf_dir)
@@ -3112,11 +3107,9 @@ def stream_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, emb.where(F.col("vec_id") % 3 == 0), "#stream-refresh-base"
     )
 
-    shutil.rmtree(_STREAM_REFRESH_TMP, ignore_errors=True)
-    vstream = staged_stream(
-        emb, F.col("vec_id") % 3 - 1, 2, f"{_STREAM_REFRESH_TMP}/in"
-    )
-    stream_refresh_index(vstream, idx, f"{_STREAM_REFRESH_TMP}/_checkpoint")
+    tmp = sf_scratch_dir("stream_index_refresh", sf_dir)
+    vstream = staged_stream(emb, F.col("vec_id") % 3 - 1, 2, f"{tmp}/in")
+    stream_refresh_index(vstream, idx, f"{tmp}/_checkpoint")
 
     queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
     return ivf_query(

@@ -55,6 +55,13 @@ def get_spark(app_name: str = "etl-npl-pipeline-spark") -> SparkSession:
       columnar-batched instead of pickled rows.
     - Broadcast threshold raised: dimension tables (region, nation,
       supplier, part at typical scale) should never shuffle-join.
+    - DataFrame call-site capture off: with it on, every DataFrame
+      and ``F.*`` call collects a Python stack trace and makes about
+      four extra py4j round trips to record it, most of a plan
+      build's round trips (README, measured findings). Runtime errors keep their error class, message and
+      SQLSTATE; their ``== DataFrame ==`` block names a JVM frame
+      instead of the Python file:line. A static conf, so it only
+      takes effect when this call starts the JVM.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     master = f"local[{cpus}]" if cpus else "local[*]"
@@ -74,6 +81,7 @@ def get_spark(app_name: str = "etl-npl-pipeline-spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

@@ -9,10 +9,12 @@ difference between reading 2 columns and 11 is the whole game.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -33,6 +35,67 @@ TABLES = (
 # Nothing is pinned unless a harness (bench.py's events tier) asks —
 # tests and the driver always measure the raw scan path.
 _PINNED: dict[tuple[str, str], DataFrame] = {}
+
+# Inferred parquet schemas, per process (see read_parquet). Only
+# schemas are kept, never DataFrames: a shared DataFrame would hand
+# both sides of a self-join the same expression ids.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+# the confs that change what parquet schema inference returns for the
+# same files (nanos as bigint, timestamp[us] as TIMESTAMP_NTZ)
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def fingerprint(path: str) -> str:
+    """Cheap content identity of the parquet data at ``path`` (a file
+    or a directory tree): (relpath, size, mtime_ns) of every parquet
+    file, md5'd. Data rewritten at the same path gets a new
+    fingerprint."""
+    entries = []
+    if os.path.isfile(path):
+        st = os.stat(path)
+        entries.append(("", st.st_size, st.st_mtime_ns))
+    else:
+        for dirpath, _dirs, files in os.walk(path):
+            for f in sorted(files):
+                if f.endswith(".parquet"):
+                    st = os.stat(os.path.join(dirpath, f))
+                    entries.append(
+                        (
+                            os.path.relpath(os.path.join(dirpath, f), path),
+                            st.st_size,
+                            st.st_mtime_ns,
+                        )
+                    )
+    return hashlib.md5(repr(sorted(entries)).encode()).hexdigest()[:16]
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` that infers each input's schema
+    once per process. Schema inference launches one Spark job per
+    read (a footer merge), even for a single file; a repeat read of
+    unchanged files reuses the inferred schema and launches none.
+    The memo key holds the paths, their fingerprints and the
+    inference confs, so a rewrite at the same path (a drifted
+    physical type) or a conf change infers again. Paths that are not
+    local files (URIs, globs) are always inferred. Meant for input
+    files that rarely change; data the package rewrites between
+    calls reads through ``spark.read.parquet``."""
+    if not all(os.path.exists(p) for p in paths):
+        return spark.read.parquet(*paths)
+    key = (
+        tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+        tuple((p, fingerprint(p)) for p in paths),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 # Canonical logical schema per table — the catalog contract every
@@ -203,14 +266,14 @@ def _read_mixed_vintage(
         return None
     groups: dict[tuple, list[str]] = {}
     for f in files:
-        key = tuple(spark.read.parquet(f).dtypes)
+        key = tuple(read_parquet(spark, f).dtypes)
         groups.setdefault(key, []).append(f)
     if len(groups) < 2:
         return None
     from functools import reduce
 
     parts = [
-        _normalize(name, _adapt_timestamps(name, spark.read.parquet(*fs)))
+        _normalize(name, _adapt_timestamps(name, read_parquet(spark, *fs)))
         for fs in groups.values()
     ]
     return reduce(DataFrame.unionByName, parts)
@@ -240,7 +303,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # case stays a bare scan with full pushdown; a drifted vintage
     # pays one value-preserving Project. int32→bigint compares are
     # still pushed to parquet (UnwrapCastInBinaryComparison).
-    return _normalize(name, _adapt_timestamps(name, spark.read.parquet(path)))
+    return _normalize(name, _adapt_timestamps(name, read_parquet(spark, path)))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

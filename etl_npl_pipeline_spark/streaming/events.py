@@ -46,7 +46,7 @@ from pyspark.sql.types import (
 
 from etl_npl_pipeline_spark.functions.exact import MONEY
 from etl_npl_pipeline_spark.session import scoped_conf
-from etl_npl_pipeline_spark.sources.tables import load_table
+from etl_npl_pipeline_spark.sources.tables import load_table, read_parquet
 
 _RAW_SCHEMA_TMPL = (
     "event_id BIGINT, ts {ts_type}, user_id BIGINT, event_type STRING, "
@@ -64,9 +64,10 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # The events ts physical type differs across testdata generations
     # (TIMESTAMP(NANOS) → bigint under nanosAsLong vs timestamp[us] →
-    # TIMESTAMP_NTZ); probe it with a metadata-only batch read so the
-    # explicit stream schema matches the files.
-    probe = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    # TIMESTAMP_NTZ); probe it with a batch read (its schema inferred
+    # once per file version) so the explicit stream schema matches the
+    # files.
+    probe = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = dict(probe.dtypes)["ts"]
     # the streaming file source wants a directory; select just the
     # events file out of the shared sf_dir with a glob filter

@@ -646,27 +646,23 @@ def test_containment_single_shingle_exchange_shape(spark, sf_dir):
     assert "ArrowEvalPython" not in plan
 
 
-def test_stream_cdc_scd2_rejects_out_of_order(spark, sf_dir):
+def test_stream_cdc_scd2_rejects_out_of_order(spark, sf_dir, tmp_path):
     # the ordering contract is load-bearing: a seq-2 batch arriving
     # while only state_seq0 exists must raise, not corrupt history —
     # drives the REAL sink body (_apply_cdc_batch)
-    import os
-    import shutil as sh
-
     import pyspark.sql.functions as F
     import pytest as _pytest
 
     from etl_npl_pipeline_spark.plans import ivm
 
-    sh.rmtree(ivm._CDC_TMP, ignore_errors=True)
-    os.makedirs(ivm._CDC_TMP)
+    state_dir = str(tmp_path)
     spark.range(1).select(
         F.lit(1).cast("bigint").alias("c_custkey"),
         F.lit("A").alias("c_mktsegment"),
         F.lit(0).alias("c_nationkey"),
         F.lit("2020-01-01").alias("valid_from"),
         F.lit("9999-12-31").alias("valid_to"),
-    ).write.parquet(f"{ivm._CDC_TMP}/state_seq0")
+    ).write.parquet(f"{state_dir}/state_seq0")
     bad_batch = spark.range(1).select(
         F.lit(2).cast("int").alias("batch_seq"),
         F.lit(1).cast("bigint").alias("c_custkey"),
@@ -674,11 +670,11 @@ def test_stream_cdc_scd2_rejects_out_of_order(spark, sf_dir):
         F.lit(0).alias("c_nationkey"),
     )
     with _pytest.raises(RuntimeError, match="CDC out-of-order"):
-        ivm._apply_cdc_batch(spark, bad_batch)
+        ivm._apply_cdc_batch(spark, bad_batch, state_dir)
     # and the in-order batch applies cleanly through the same path
     good = bad_batch.withColumn("batch_seq", F.lit(1).cast("int"))
-    ivm._apply_cdc_batch(spark, good)
-    hist = spark.read.parquet(f"{ivm._CDC_TMP}/state_seq1")
+    ivm._apply_cdc_batch(spark, good, state_dir)
+    hist = spark.read.parquet(f"{state_dir}/state_seq1")
     assert hist.count() == 2  # closed original + new open version
 
 
@@ -696,3 +692,10 @@ def test_containment_joins_never_broadcast_postings(spark, sf_dir):
         plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" not in plan, fn.__name__
         assert "ShuffledHashJoin" in plan, fn.__name__
+
+
+def test_session_skips_dataframe_call_site_capture(spark):
+    """Call-site capture costs about four py4j round trips per
+    DataFrame/Column call at plan construction; get_spark turns it
+    off (static conf, README)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

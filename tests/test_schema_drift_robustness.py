@@ -256,3 +256,69 @@ def test_mixed_vintage_canonical_schema(spark, mixed_dir):
 def test_mixed_vintage_parity(name, spark, mixed_dir):
     df = QUERIES[name](spark, mixed_dir)
     assert_matches_oracle(df, ORACLES[name], mixed_dir)
+
+
+# --- schema memo ---------------------------------------------------
+#
+# Parquet schema inference launches one Spark job per read, even for
+# one file. load_table and the index artifact reads infer each file's
+# schema once per process (sources.tables.read_parquet); a rewrite at
+# the same path must infer again.
+
+
+def _jobs_launched(spark, build):
+    """Spark jobs launched while ``build()`` runs. Jobs reach the
+    status store through the listener bus, so it is drained first."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty(60_000)
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    build()
+    bus.waitUntilEmpty(60_000)
+    return len(set(sc.statusTracker().getJobIdsForGroup()) - before)
+
+
+def _write_orders(sf_dir, out, key_type, where):
+    duckdb.connect().execute(
+        f"""COPY (SELECT CAST(o_orderkey AS {key_type}) AS o_orderkey,
+              o_custkey, o_orderstatus, o_totalprice, o_orderdate,
+              o_orderpriority
+            FROM read_parquet('{sf_dir}/orders.parquet') WHERE {where})
+            TO '{out}/orders.parquet' (FORMAT PARQUET)"""
+    )
+
+
+def test_repeat_load_infers_schema_once_and_rewrite_infers_again(
+    spark, tmp_path, sf_dir
+):
+    from pyspark.sql import functions as F
+
+    from etl_npl_pipeline_spark.sources.tables import CANONICAL, load_table
+
+    out = str(tmp_path)
+    _write_orders(sf_dir, out, "INTEGER", "TRUE")
+    # the first read of a new file infers (and proves the counter sees jobs)
+    assert _jobs_launched(spark, lambda: load_table(spark, out, "orders")) >= 1
+    assert _jobs_launched(spark, lambda: load_table(spark, out, "orders")) == 0
+
+    # same path, drifted physical type (int32 -> int64), other rows:
+    # a memo keyed on the path alone would read int64 as int32
+    _write_orders(sf_dir, out, "BIGINT", "o_orderkey % 2 = 0")
+    df = load_table(spark, out, "orders")
+    assert df.dtypes == CANONICAL["orders"]
+    got = df.agg(F.count(F.lit(1)), F.sum("o_orderkey")).first()
+    want = duckdb.connect().execute(
+        f"""SELECT COUNT(*), SUM(o_orderkey)
+            FROM read_parquet('{sf_dir}/orders.parquet')
+            WHERE o_orderkey % 2 = 0"""
+    ).fetchone()
+    assert tuple(got) == want
+
+
+def test_repeat_index_stats_launches_no_job_while_planning(spark, sf_dir):
+    from etl_npl_pipeline_spark.operators.ann_index import index_stats
+    from etl_npl_pipeline_spark.plans.llmdata import _ann_index
+
+    idx = _ann_index(spark, sf_dir)
+    index_stats(spark, idx)
+    assert _jobs_launched(spark, lambda: index_stats(spark, idx)) == 0

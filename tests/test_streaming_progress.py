@@ -15,11 +15,14 @@ drain scopes its session confs.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pyspark.sql.functions as F
 import pytest
 
 from etl_npl_pipeline_spark.plans import extras, ivm, llmdata
-from etl_npl_pipeline_spark.session import scoped_conf
+from etl_npl_pipeline_spark.session import scoped_conf, scratch_dir
 from etl_npl_pipeline_spark.streaming.events import (
     DRAIN_PROGRESS,
     drain,
@@ -84,6 +87,23 @@ def test_foreach_batch_contracts_record_progress(spark, sf_dir, fn, batches):
     p = DRAIN_PROGRESS[label]
     assert p["input_rows"] > 0, p
     assert p["batches"] == batches, p
+
+
+def test_staged_contract_keys_scratch_by_sf_dir(spark, sf_dir, tmp_path):
+    # a drive at a second scale factor stages beside the first, not
+    # over it: both staged inputs exist after the second drive
+    other = tmp_path / "sf_other"
+    other.mkdir()
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), other)
+    root = scratch_dir("stream_agg_incremental")
+    try:
+        first = ivm.stream_agg_incremental(spark, sf_dir).collect()
+        second = ivm.stream_agg_incremental(spark, str(other)).collect()
+        for d in (os.path.basename(os.path.realpath(sf_dir)), "sf_other"):
+            assert os.listdir(os.path.join(root, d, "in")), d
+        assert first == second
+    finally:
+        shutil.rmtree(os.path.join(root, "sf_other"), ignore_errors=True)
 
 
 def test_staged_stream_drains_slices_in_order_with_backfill(spark, tmp_path):

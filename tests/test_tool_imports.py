@@ -56,17 +56,30 @@ def test_script_package_imports_resolve(script):
     assert not missing, f"{script}: unresolved package names {missing}"
 
 
+def _naming_the_checkout(paths):
+    hits = []
+    for path in sorted(paths):
+        with open(path) as fh:
+            if ROOT in fh.read():
+                hits.append(os.path.relpath(path, ROOT))
+    return hits
+
+
 def test_package_never_spells_out_the_checkout_path():
     """Scratch paths resolve from the package location
     (``session.scratch_dir``): a module that spelled out the
     checkout's absolute path would make a copy of the repo elsewhere
     write into this checkout."""
     pattern = os.path.join(ROOT, PKG, "**", "*.py")
-    hits = []
-    for path in sorted(glob.glob(pattern, recursive=True)):
-        with open(path) as fh:
-            if ROOT in fh.read():
-                hits.append(os.path.relpath(path, ROOT))
+    hits = _naming_the_checkout(glob.glob(pattern, recursive=True))
+    assert not hits, f"checkout path hard-coded in {hits}"
+
+
+def test_scripts_never_spell_out_the_checkout_path():
+    """The top-level scripts resolve their ``.tmp`` inputs and outputs
+    from their own location, like the package: a copy of the repo
+    elsewhere must not read or write this checkout."""
+    hits = _naming_the_checkout(os.path.join(ROOT, s) for s in SCRIPTS)
     assert not hits, f"checkout path hard-coded in {hits}"
 
 

@@ -44,14 +44,15 @@ import traceback
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from etl_npl_pipeline_spark.session import get_spark  # noqa: E402
 from tests.oracle import assert_matches_oracle  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_ADV_SRC", "/root/testdata/sf0.001")
-TMP = "/root/repo/.tmp/adversarial"
+TMP = os.path.join(HERE, ".tmp", "adversarial")
 
 ALL_TABLES = ["region", "nation", "customer", "supplier", "part",
               "orders", "lineitem", "events", "documents", "embeddings"]

@@ -27,13 +27,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from etl_npl_pipeline_spark.metrics import run_with_metrics  # noqa: E402
 from etl_npl_pipeline_spark.session import get_spark  # noqa: E402
 
-SF1_DIR = "/root/repo/.tmp/sf1"
+SF1_DIR = os.path.join(HERE, ".tmp", "sf1")
 SF01_DIR = "/root/testdata/sf0.1"
 
 # r5 steady-state top-10 at sf0.1 (BENCH_r05 ranking) — kept first
@@ -191,9 +192,7 @@ def main() -> None:
 
     spark.range(10).select(_pudf(lambda s: s, "long")("id")).count()
 
-    out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "sf1_top30.json"
-    )
+    out_path = os.path.join(HERE, "sf1_top30.json")
     out: dict[str, dict] = {}
     if subset and os.path.exists(out_path):
         with open(out_path) as fh:

@@ -21,14 +21,15 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from etl_npl_pipeline_spark.metrics import run_with_metrics  # noqa: E402
 from etl_npl_pipeline_spark.session import get_spark  # noqa: E402
 
-SF1_DIR = "/root/repo/.tmp/sf1"
-SF10_DIR = "/root/repo/.tmp/sf10"
+SF1_DIR = os.path.join(HERE, ".tmp", "sf1")
+SF10_DIR = os.path.join(HERE, ".tmp", "sf10")
 SF01_DIR = "/root/testdata/sf0.1"
 
 # The r7 sf1 ranking's most expensive shapes: the full dedup/curation
@@ -95,9 +96,7 @@ def main() -> None:
 
     spark.range(10).select(_pudf(lambda s: s, "long")("id")).count()
 
-    out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "sf10_top10.json"
-    )
+    out_path = os.path.join(HERE, "sf10_top10.json")
     out: dict[str, dict] = {}
     if subset and os.path.exists(out_path):
         with open(out_path) as fh:

@@ -37,14 +37,15 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from etl_npl_pipeline_spark.metrics import run_with_metrics  # noqa: E402
 from etl_npl_pipeline_spark.session import get_spark  # noqa: E402
 
-SKEW_DIR = "/root/repo/.tmp/sf1_skewed"
-FLAT_DIR = "/root/repo/.tmp/sf1"
+SKEW_DIR = os.path.join(HERE, ".tmp", "sf1_skewed")
+FLAT_DIR = os.path.join(HERE, ".tmp", "sf1")
 
 # heavy tier (the r5 ranking the sf1 harness uses) — hot keys touch
 # orders/customer/lineitem/events in most of these
@@ -104,9 +105,7 @@ def main() -> None:
 
     spark.range(10).select(_pudf(lambda s: s, "long")("id")).count()
 
-    out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "sf1_skewed.json"
-    )
+    out_path = os.path.join(HERE, "sf1_skewed.json")
     out: dict[str, dict] = {}
     if subset and os.path.exists(out_path):
         with open(out_path) as fh:

@@ -23,12 +23,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from etl_npl_pipeline_spark.session import get_spark  # noqa: E402
 
-SF1_DIR = "/root/repo/.tmp/sf1"
+SF1_DIR = os.path.join(HERE, ".tmp", "sf1")
 
 # r7: the checked slice is now EVERYTHING oracle-backed minus the
 # documented exclusions below — "correct at sf1" is a whole-contract
@@ -146,10 +147,7 @@ def main() -> None:
     if subset:
         # re-measure a few queries and merge into the existing doc
         check = subset
-        out_p = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "sf1_correctness.json",
-        )
+        out_p = os.path.join(HERE, "sf1_correctness.json")
         if os.path.exists(out_p):
             with open(out_p) as fh:
                 out = json.load(fh)["queries"]
@@ -197,8 +195,7 @@ def main() -> None:
         "queries": out,
     }
     with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "sf1_correctness.json"), "w",
+        os.path.join(HERE, "sf1_correctness.json"), "w",
     ) as fh:
         json.dump(doc, fh, indent=1)
     print(

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Materialize an sf1.0-scale dataset as a 10x key-shifted
-replication of /root/testdata/sf0.1 into /root/repo/.tmp/sf1.
+replication of the sf0.1 dataset (``SRC``) into <checkout>/.tmp/sf1.
 
 The driver ships sf{0.001,0.01,0.1} only; the 100-TB doctrine needs
 at least one measured point an order of magnitude above sf0.1, so we
@@ -34,7 +34,11 @@ import sys
 import duckdb
 
 SRC = "/root/testdata/sf0.1"
-OUT = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.tmp/sf1"
+OUT = (
+    sys.argv[1]
+    if len(sys.argv) > 1
+    else os.path.join(os.path.dirname(os.path.abspath(__file__)), ".tmp", "sf1")
+)
 REPLICAS = 10
 
 # key shifts: one power-of-10 stride per keyed table, far above the

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Materialize an sf10-scale dataset as a 100x key-shifted
-replication of /root/testdata/sf0.1 into /root/repo/.tmp/sf10 —
+replication of the sf0.1 dataset (``SRC``) into <checkout>/.tmp/sf10 —
 the second measured decade above sf0.1 (r8, VERDICT r7 #3).
 
 Same doctrine as tools_make_sf1.py (FK-preserving per-replica key
@@ -36,7 +36,11 @@ import sys
 import duckdb
 
 SRC = "/root/testdata/sf0.1"
-OUT = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.tmp/sf10"
+OUT = (
+    sys.argv[1]
+    if len(sys.argv) > 1
+    else os.path.join(os.path.dirname(os.path.abspath(__file__)), ".tmp", "sf10")
+)
 REPLICAS = int(sys.argv[2]) if len(sys.argv) > 2 else 100
 
 # key shifts: one stride per keyed table, above the sf0.1 max key so

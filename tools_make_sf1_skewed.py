@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Materialize a SKEWED sf1-scale dataset (r9, VERDICT r8 #4) into
-/root/repo/.tmp/sf1_skewed.
+<checkout>/.tmp/sf1_skewed.
 
 The flat sf1/sf10 builds (tools_make_sf1.py) replicate sf0.1 with
 disjoint key ranges — every key keeps sf0.1's frequency, so AQE's
@@ -43,7 +43,11 @@ import sys
 import duckdb
 
 SRC = "/root/testdata/sf0.1"
-OUT = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.tmp/sf1_skewed"
+OUT = (
+    sys.argv[1]
+    if len(sys.argv) > 1
+    else os.path.join(os.path.dirname(os.path.abspath(__file__)), ".tmp", "sf1_skewed")
+)
 REPLICAS = 10
 
 SHIFTS = {

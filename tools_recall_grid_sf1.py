@@ -24,11 +24,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from etl_npl_pipeline_spark.session import get_spark  # noqa: E402
 
-SF1_DIR = "/root/repo/.tmp/sf1"
+SF1_DIR = os.path.join(HERE, ".tmp", "sf1")
 
 
 def main() -> None:
@@ -118,10 +119,7 @@ def main() -> None:
         ),
     }
     with open(
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "sf1_recall_grid.json",
-        ),
+        os.path.join(HERE, "sf1_recall_grid.json"),
         "w",
     ) as fh:
         json.dump(doc, fh, indent=1)

@@ -46,10 +46,11 @@ import time
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 SRC = "/root/testdata/sf0.1"
-OUT = "/root/repo/.tmp/sf1_density"
+OUT = os.path.join(HERE, ".tmp", "sf1_density")
 DOC_SHIFT = 1_000_000
 MAX_HAMMING = 7
 ALPHA = "abcdefghijklmnopqrstuvwxyz"
@@ -206,7 +207,7 @@ def main() -> None:
     }
     print(json.dumps(result, indent=1), flush=True)
 
-    top30 = "/root/repo/sf1_top30.json"
+    top30 = os.path.join(HERE, "sf1_top30.json")
     doc = json.load(open(top30))
     doc.setdefault("superlinear_adjudications", {})[
         "dedup_simhash_density_probe"
