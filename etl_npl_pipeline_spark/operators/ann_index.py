@@ -25,8 +25,9 @@ for the cell, `pq.pq_encode` for the codes, `_lsh_postings` (over
 doubles exactly. Queries load the frozen models through
 `_load_centroids` / `_load_codebooks`, pre-filter through `_allowed`
 and re-rank PQ and LSH candidates through `_exact_rerank`. Every
-exact score comes from the ascending-dim fold (`pair_dot` row-wise,
-the shared `similarity` block kernel in the cogroup paths), so
+exact score comes from the ascending-dim fold (the JVM-side
+`similarity.dot` row-wise, the shared `similarity` block kernel in
+the cogroup paths), so
 full-probe IVF and PQ with k' >= |corpus| equal `brute_force_topk`
 bit for bit, and the sf0.001 rows of ann_ivf / ann_pq / ann_lsh are
 pinned by digest in tests/test_ann_index.py.
@@ -41,7 +42,9 @@ Scale notes:
   join_bucketed uses for its bucketed tables.
 - Only tiny model artifacts (centroids: n_clusters x dim; codebooks:
   m x k x d/m) ever collect to the driver at query time; corpus-
-  sized artifacts stay distributed.
+  sized artifacts stay distributed. They and the code count are
+  derived once per version of their segments (`_frozen`), so a
+  repeat query against an unchanged index plans without a job.
 """
 
 from __future__ import annotations
@@ -52,6 +55,7 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 from functools import reduce
 
 import numpy as np
@@ -80,8 +84,8 @@ from etl_npl_pipeline_spark.operators.similarity import (
     _matrix,
     _norm_dim_ordered,
     _topk,
+    dot,
     l2_normalize,
-    pair_dot,
 )
 from etl_npl_pipeline_spark.sources.tables import fingerprint, read_parquet
 
@@ -89,6 +93,10 @@ from etl_npl_pipeline_spark.sources.tables import fingerprint, read_parquet
 # hash. Repeat invocations (bench steady-state, the driver's oracle
 # sweep) reuse the artifacts and measure search alone.
 _ANN_BUILT: dict[str, str] = {}
+
+# Values derived from one artifact's committed rows, per process (see
+# _frozen). Only numpy arrays and ints are kept, never DataFrames.
+_FROZEN: dict[tuple, object] = {}
 
 ARTIFACTS = ("ivf_centroids", "lsh_buckets", "pq_codebooks", "pq_codes", "vectors")
 
@@ -242,28 +250,55 @@ def _write_corpus_artifacts(
         _write_artifact(df, os.path.join(out_dir, name + suffix), name)
 
 
+def _frozen(
+    spark: SparkSession,
+    index_dir: str,
+    name: str,
+    derive: Callable[[DataFrame], object],
+) -> object:
+    """``derive(df)`` over artifact ``name``'s committed rows, run
+    once per process per version of its segments. Each artifact has
+    one derived value, and the key is its manifest-listed segment
+    paths with their `tables.fingerprint`s: a refresh or compaction
+    (another segment list) or a rewrite in place (other files) misses
+    and derives again. Arrays come back read-only, since every
+    caller shares them."""
+    key = tuple((p, fingerprint(p)) for p in _artifact_paths(index_dir, name))
+    if key not in _FROZEN:
+        value = derive(_read_artifact(spark, index_dir, name))
+        if isinstance(value, np.ndarray):
+            value.flags.writeable = False
+        _FROZEN[key] = value
+    return _FROZEN[key]
+
+
 def _load_centroids(spark: SparkSession, index_dir: str) -> np.ndarray:
     """The frozen IVF centroid matrix, row = cell (size 0 for an
     empty index)."""
-    crows = sorted(
-        _read_artifact(spark, index_dir, "ivf_centroids").collect(),
-        key=lambda r: r["cell"],
-    )
-    return np.array([r["centroid"] for r in crows], dtype=np.float64)
+
+    def derive(df: DataFrame) -> np.ndarray:
+        crows = sorted(df.collect(), key=lambda r: r["cell"])
+        return np.array([r["centroid"] for r in crows], dtype=np.float64)
+
+    return _frozen(spark, index_dir, "ivf_centroids", derive)
 
 
 def _load_codebooks(spark: SparkSession, index_dir: str) -> np.ndarray:
     """The frozen PQ codebook tensor (m, k, d/m); (0, 0, 0) for an
     empty index, whose zero subspaces encode to empty code arrays."""
-    brows = _read_artifact(spark, index_dir, "pq_codebooks").collect()
-    if not brows:
-        return np.zeros((0, 0, 0))
-    m_sub = 1 + max(r["subspace"] for r in brows)
-    k_codes = 1 + max(r["code"] for r in brows)
-    books = np.empty((m_sub, k_codes, len(brows[0]["centroid"])))
-    for r in brows:
-        books[r["subspace"], r["code"]] = r["centroid"]
-    return books
+
+    def derive(df: DataFrame) -> np.ndarray:
+        brows = df.collect()
+        if not brows:
+            return np.zeros((0, 0, 0))
+        m_sub = 1 + max(r["subspace"] for r in brows)
+        k_codes = 1 + max(r["code"] for r in brows)
+        books = np.empty((m_sub, k_codes, len(brows[0]["centroid"])))
+        for r in brows:
+            books[r["subspace"], r["code"]] = r["centroid"]
+        return books
+
+    return _frozen(spark, index_dir, "pq_codebooks", derive)
 
 
 def _write_manifest(index_dir: str, manifest: dict) -> None:
@@ -725,8 +760,8 @@ def _exact_rerank(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Exact top-k over (query_id, neighbor_id) candidates: pair_dot
-    of the normalized query against the persisted normalized vector.
+    """Exact top-k over (query_id, neighbor_id) candidates: `dot` of
+    the normalized query against the persisted normalized vector.
     No forced broadcast (r9): a corpus-sized query batch must not be
     driver-materialized by a hint; AQE broadcasts small sets on its
     own and shuffles the rest."""
@@ -739,7 +774,7 @@ def _exact_rerank(
         .select(
             "query_id",
             "neighbor_id",
-            pair_dot(F.col("qv"), F.col("cv")).alias("cos_sim"),
+            dot(F.col("qv"), F.col("cv")).alias("cos_sim"),
         )
     )
     return _topk(scored, k)
@@ -781,7 +816,7 @@ def ivf_query(
     top-k, and the final window merges n_probe * k rows per query.
     Candidate pairs never exist as Spark rows — no candidate
     shuffle, no candidate sort, no spill. Scores accumulate in
-    ascending dim order (the pair_dot fold), so both paths are
+    ascending dim order (the `dot` fold), so both paths are
     bit-identical."""
     # bounded size probe: the branch only needs "0, <=threshold, or
     # more" — limit() stops the scan at threshold+1 rows instead of
@@ -823,7 +858,7 @@ def ivf_query(
                 return _block_frame([])
             # queries normalize with the l2_normalize fold; corpus
             # vectors come PRE-normalized from the artifact — used as
-            # stored, exactly like the row-wise pair_dot path
+            # stored, exactly like the row-wise `dot` path
             return _block_topk(
                 qpdf["query_id"].to_numpy(),
                 _norm_dim_ordered(_matrix(qpdf["qv_raw"])),
@@ -853,7 +888,7 @@ def ivf_query(
         .select(
             "query_id",
             "neighbor_id",
-            pair_dot(F.col("qv"), F.col("cv")).alias("cos_sim"),
+            dot(F.col("qv"), F.col("cv")).alias("cos_sim"),
         )
     )
     return _topk(cand, k)
@@ -921,6 +956,11 @@ def pq_query(
     if n_q == 0:
         return _empty_result(spark)
     codes = _allowed(_read_artifact(spark, index_dir, "pq_codes"), allowed_ids)
+    n_codes = (
+        _frozen(spark, index_dir, "pq_codes", DataFrame.count)
+        if allowed_ids is None
+        else codes.count()
+    )
     q_rep, c_rep = _chunk_grid(
         queries,
         [F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv_raw")],
@@ -930,7 +970,7 @@ def pq_query(
         codes,
         ["neighbor_id", "codes"],
         "neighbor_id",
-        codes.count(),
+        n_codes,
         code_chunk_rows,
     )
 
@@ -1001,8 +1041,6 @@ def lsh_query(
     would regenerate signatures that never match the postings and
     silently return near-empty candidates — now a loud error."""
     _check_knobs(index_dir, lsh_planes=n_planes, lsh_tables=n_tables)
-    if queries.isEmpty():
-        return _empty_result(spark)
     q_sig = _lsh_postings(queries, id_col, vec_col, n_planes, n_tables, "query_id")
     probes = [F.col("sig")]
     if probe_bits >= 1:

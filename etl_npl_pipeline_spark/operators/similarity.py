@@ -1,8 +1,11 @@
 """Similarity search over embedding columns (array<double>).
 
-- ``cosine(a, b)``: zip_with product + left-to-right aggregate sum.
-  Deterministic element order ⇒ bit-identical to a DuckDB
-  list_reduce oracle (verified) — no UDF, stays in codegen.
+- ``dot(a, b)`` / ``cosine(a, b)``: zip_with product + left-to-right
+  aggregate sum. Deterministic element order ⇒ bit-identical to a
+  DuckDB list_reduce oracle (verified) — no UDF, stays on the JVM.
+  ``dot`` scores every candidate pair held as a row (ANN re-rank,
+  RAG, MMR): an Arrow UDF doing the same fold costs a Python-worker
+  round trip per stage and was slower at every measured pair count.
 - ``brute_force_topk``: exact baseline AND the recall verifier.
   Chunk-block cogroup decomposition (r10): both sides stay
   distributed, so corpus-as-queries sweeps verify at any |Q|. Cost
@@ -48,33 +51,6 @@ def l2_normalize(v: F.Column) -> F.Column:
     # fail >= filters differently across engines.
     safe = F.when(norm == 0.0, F.lit(1.0)).otherwise(norm)
     return F.transform(v, lambda x: x / safe)
-
-
-def pair_dot(a: F.Column, b: F.Column) -> F.Column:
-    """Arrow-vectorized dot product of two (pre-normalized) array
-    columns — the O(pairs) hot path of every ANN/near-dup operator.
-
-    Accumulates acc = acc + a[:,d]*b[:,d] in ascending dim order:
-    the exact FP operation sequence of the scalar left-to-right fold
-    (`dot` above), so results stay bit-identical to the DuckDB
-    oracle — while evaluating ~100x faster than the interpreted
-    Catalyst HOF lambda on large pair sets. np.dot/matmul would be
-    faster still but use pairwise/SIMD summation and drift in the
-    last bits.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _pair_dot(pa: pd.Series, pb: pd.Series) -> pd.Series:
-        if len(pa) == 0:
-            return pd.Series([], dtype=float)
-        ma, mb = _matrix(pa), _matrix(pb)
-        acc = np.zeros(len(ma))
-        for d in range(ma.shape[1]):
-            acc = acc + ma[:, d] * mb[:, d]
-        return pd.Series(acc)
-
-    return _pair_dot(a, b)
 
 
 def cosine(a: F.Column, b: F.Column) -> F.Column:
@@ -172,8 +148,8 @@ def _norm_dim_ordered(m: np.ndarray) -> np.ndarray:
 def _dim_ordered_scores(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """S[i, j] = a[i] · b[j], accumulated S += outer(a[:,d], b[:,d])
     in ascending dim order: for every pair the exact FP operation
-    sequence of the scalar left-to-right fold (`dot`, `pair_dot`,
-    the DuckDB oracle). np.dot/matmul use SIMD/pairwise summation
+    sequence of the scalar left-to-right fold (`dot`, the DuckDB
+    oracle). np.dot/matmul use SIMD/pairwise summation
     and would drift in the last bits."""
     s = np.zeros((len(a), len(b)))
     for d in range(a.shape[1]):

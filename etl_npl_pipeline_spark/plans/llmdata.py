@@ -3090,7 +3090,7 @@ def stream_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL equality oracle: after the drain the index holds the entire
     embeddings table, and a FULL-PROBE ivf_query is exact brute-force
     cosine over the indexed vectors (every cell scored, persisted
-    doubles round-trip exactly, pair_dot accumulates in the scalar
+    doubles round-trip exactly, `dot` accumulates in the scalar
     fold order) — so the result must hash-match the same brute-force
     SQL that backs ann_topk. A lost micro-batch, a double append, or
     a stale manifest read all surface as a row mismatch.
@@ -3238,7 +3238,7 @@ def rag_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "score",
-            F.round(S.pair_dot(F.col("cv"), F.col("qv")), 6).alias(
+            F.round(S.dot(F.col("cv"), F.col("qv")), 6).alias(
                 "cos_sim"
             ),
         )
@@ -3343,7 +3343,7 @@ def search_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             # cogroup whose two sides group on the SAME attribute id
             # trips Spark's ambiguous-self-join check
             F.col("query_id").alias("sq"), "id_a", "id_b",
-            F.round(S.pair_dot(F.col("nv_a"), F.col("nv_b")), 6)
+            F.round(S.dot(F.col("nv_a"), F.col("nv_b")), 6)
             .alias("sim"),
         )
     )
@@ -5332,10 +5332,8 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("qv", qv.scalar())
         .select(
             "doc_id",
-            # JVM-side left-to-right fold (S.dot), not the Arrow
-            # pair_dot: this is a map-only corpus scan, and keeping
-            # it in codegen avoids a Python round-trip per vector
-            # while preserving the oracle's exact FP fold order
+            # JVM-side left-to-right fold (S.dot): no Python round
+            # trip, and the oracle's exact FP fold order
             F.round(S.dot(F.col("nv"), F.col("qv")), 6).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("doc_id"))
@@ -6139,8 +6137,7 @@ def ann_rp_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force; on real clustered embeddings the same funnel prunes
     far harder. Candidate generation is the chunked cogroup; the
     rerank joins candidates back to original vectors co-keyed and
-    scores |Q| x 800 pairs with the Arrow pair_dot (the designed
-    O(pairs) hot path)."""
+    scores |Q| x 800 pairs with the JVM-side `dot` fold."""
     from pyspark.sql import Window
 
     emb = _emb(spark, sf_dir)
@@ -6159,7 +6156,7 @@ def ann_rp_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            S.pair_dot(F.col("qn"), F.col("cn")).alias("cs"),
+            S.dot(F.col("qn"), F.col("cn")).alias("cs"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -6759,7 +6756,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: full probe (n_probe = every cell) makes the served
     result EXACT filtered kNN — persisted doubles round-trip exactly
-    and pair_dot accumulates in the same fold order — so the oracle
+    and `dot` accumulates in the same fold order — so the oracle
     is plain filtered brute force (the ann_topk construction with
     the WHERE pushed into the candidate side). At production scale
     the same pushdown runs at n_probe<<cells, where candidate work
@@ -6793,7 +6790,7 @@ def ann_filtered_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     k' = k x rf >= |allowed| — every allowed vector survives the ADC
     cut (each cogroup block emits at most |allowed| rows, the global
     window keeps them all) and the exact re-rank over the persisted
-    normalized vectors computes the same pair_dot fold as ann_topk.
+    normalized vectors computes the same `dot` fold as ann_topk.
     The served result is therefore EXACT filtered kNN and the oracle
     is the same filtered brute force ann_filtered_topk uses. At
     production scale the same pushdown runs with a modest rf, where
@@ -7155,7 +7152,7 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Composition, not new machinery: full-probe ivf_query at
     k=RANGE_KMAX is EXACT capped kNN (persisted doubles round-trip
-    exactly; pair_dot fold is bit-identical), and because results
+    exactly; the `dot` fold is bit-identical), and because results
     per query arrive cos-descending, the radius predicate keeps a
     PREFIX of ranks — so filter-after-topk equals true range search
     whenever a query has <= KMAX in-radius neighbors, and the cap

@@ -690,7 +690,7 @@ def test_filtered_query_is_prefilter_not_postfilter(spark, sf_dir):
 
 def test_large_batch_cogroup_path_equals_rowwise_path(spark, sf_dir, monkeypatch):
     """The LARGE_QUERY_BATCH cogroup path must return BIT-IDENTICAL
-    rows to the row-wise pair_dot path — same normalization fold,
+    rows to the row-wise `dot` path — same normalization fold,
     same ascending-dim score accumulation, same (score desc, id asc)
     order. Run both on the same index by toggling the threshold."""
     import pyspark.sql.functions as F

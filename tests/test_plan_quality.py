@@ -495,6 +495,15 @@ def test_ann_rp_projection_stays_jvm_side(spark, sf_dir):
     assert "FlatMapCoGroupsInPandas" in plan
 
 
+@pytest.mark.parametrize("name", ["ann_pq", "ann_rp_rerank", "rag_retrieve"])
+def test_candidate_pair_scoring_stays_jvm_side(spark, sf_dir, name):
+    plan = _formatted(getattr(llmdata, name)(spark, sf_dir), execute=True)
+    # candidate pairs are scored by the JVM `dot` fold; a Python
+    # worker here (ArrowEvalPython) would cost an Arrow round trip
+    # per stage for arithmetic the JVM does faster
+    assert "ArrowEvalPython" not in plan
+
+
 def test_bpe_encode_apply_is_single_projection(spark, sf_dir):
     from etl_npl_pipeline_spark.operators.bpe import bpe_apply
 
