@@ -615,32 +615,6 @@ def main() -> None:
         },
     }
 
-    # Republish the ann_lsh / ann_pq knob sweeps next to the chosen
-    # points so the published recalls always carry the grids that
-    # justified them. lsh_sweep.json and pq_sweep.json are frozen
-    # records: the per-call operators that produced them are gone.
-    def _load_sweep(fname):
-        p = os.path.join(os.path.dirname(os.path.abspath(__file__)), fname)
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-        return None
-
-    sweep = _load_sweep("lsh_sweep.json")
-    pq_sweep = _load_sweep("pq_sweep.json")
-    skew_probe = _load_sweep("skew_probe.json")
-    sf1_top10 = _load_sweep("sf1_top10.json")
-    sf1_top30 = _load_sweep("sf1_top30.json")
-    drift = _load_sweep("drift_adjudication.json")
-    stream_adj = _load_sweep("stream_adjudication.json")
-    filter_sweep = _load_sweep("ann_filter_sweep.json")
-    lp_grid = _load_sweep("lp_recall_grid.json")
-    cont_ledger = _load_sweep("containment_ledger.json")
-    sf1_correct = _load_sweep("sf1_correctness.json")
-    sf1_recall_grid = _load_sweep("sf1_recall_grid.json")
-    adversarial = _load_sweep("adversarial_r7.json")
-    events_pin = _load_sweep("events_pin_probe.json")
-
     # StreamingQueryProgress summaries captured by every drain this
     # run (streaming/events.DRAIN_PROGRESS): batches, input rows,
     # trigger time, max/final state rows per stream query — state
@@ -678,41 +652,36 @@ def main() -> None:
             ),
         },
     }
-    if sweep is not None:
-        detail["ann_lsh_sweep"] = sweep
-    if pq_sweep is not None:
-        detail["ann_pq_sweep"] = pq_sweep
-    if skew_probe is not None:
-        detail["skew_probe"] = skew_probe
-    if sf1_top10 is not None:
-        detail["sf1_top10"] = sf1_top10
-    if sf1_top30 is not None:
-        detail["sf1_top30"] = sf1_top30
-    if drift is not None:
-        detail["drift_adjudication"] = drift
-    if stream_adj is not None:
-        detail["stream_adjudication"] = stream_adj
-    if filter_sweep is not None:
-        detail["ann_filter_sweep"] = filter_sweep
-    if lp_grid is not None:
-        detail["lp_recall_grid"] = lp_grid
-    if cont_ledger is not None:
-        detail["containment_ledger"] = cont_ledger
-    if sf1_correct is not None:
-        detail["sf1_correctness"] = sf1_correct
-    if sf1_recall_grid is not None:
-        detail["sf1_recall_grid"] = sf1_recall_grid
-    if adversarial is not None:
-        detail["adversarial_program"] = adversarial
-    if events_pin is not None:
-        # the measured value of the events cache_table pin (VERDICT
-        # r13 #10): the pin stays, priced instead of implicit
-        detail["events_pin_probe"] = events_pin
+
+    # Frozen records republished next to the live numbers, as
+    # (file, bench_detail key): the knob sweeps that justified the
+    # published ANN recalls (their per-call operators are gone), the
+    # scale points and the probes and adjudications whose scripts were
+    # retired once their results were recorded.
+    here = os.path.dirname(os.path.abspath(__file__))
+    for fname, key in [
+        ("lsh_sweep.json", "ann_lsh_sweep"),
+        ("pq_sweep.json", "ann_pq_sweep"),
+        ("skew_probe.json", "skew_probe"),
+        ("sf1_top10.json", "sf1_top10"),
+        ("sf1_top30.json", "sf1_top30"),
+        ("drift_adjudication.json", "drift_adjudication"),
+        ("stream_adjudication.json", "stream_adjudication"),
+        ("ann_filter_sweep.json", "ann_filter_sweep"),
+        ("lp_recall_grid.json", "lp_recall_grid"),
+        ("containment_ledger.json", "containment_ledger"),
+        ("sf1_correctness.json", "sf1_correctness"),
+        ("sf1_recall_grid.json", "sf1_recall_grid"),
+        ("adversarial_r7.json", "adversarial_program"),
+        # the measured value of the events cache_table pin: the pin
+        # stays, priced instead of implicit
+        ("events_pin_probe.json", "events_pin_probe"),
+    ]:
+        if os.path.exists(os.path.join(here, fname)):
+            with open(os.path.join(here, fname)) as fh:
+                detail[key] = json.load(fh)
     detail["streaming_progress"] = dict(DRAIN_PROGRESS)
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "bench_detail.json"), "w",
-    ) as fh:
+    with open(os.path.join(here, "bench_detail.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
 
     # The driver's stdout capture is ~2000 chars and truncation makes

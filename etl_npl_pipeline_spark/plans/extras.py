@@ -479,7 +479,7 @@ def _bucketed_click_purchase_join(spark, sf_dir, how: str, clicks, purchases):
     WHY THE BUCKET KEY (r9 skew probe finding): with user_id as the
     only equality key, the symmetric-hash join scans the ENTIRE
     per-user state list for every input row. A bot account owning
-    14% of a 1M-event stream (tools_make_sf1_skewed) made that
+    14% of a 1M-event stream (tools_make_scale.py sf1_skewed) made that
     per-key scan quadratic — measured wall x95 vs the flat build
     with shuffle bytes only x1.49 (pure state-scan CPU on one key,
     which neither AQE nor salting-by-plan can split: stream state is

@@ -1,5 +1,5 @@
 """Oracle parity on ADVERSARIAL duplicate data: a 2-replica
-key-shifted build of sf0.001 (tools_make_sf1 machinery) where
+key-shifted build of sf0.001 (tools_make_scale.py sf1) where
 supplier/customer/part NAMES, document TEXTS, and event TIMESTAMPS
 all occur twice. This is the input class that exposed the r6 q21 bug
 (Spark grouped waiting counts by suppkey, the TPC-H oracle by
@@ -14,14 +14,11 @@ this test keeps the sensitive core under regression.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entrymod  # noqa: E402
-from tests.oracle import assert_matches_oracle  # noqa: E402
+import __spark_entry__ as entrymod
+import tools_make_scale
+from tests.oracle import assert_matches_oracle
 
 ORACLES = entrymod.oracle_sql()
 QUERIES = entrymod.queries()
@@ -67,17 +64,9 @@ SENSITIVE = [
 
 
 @pytest.fixture(scope="module")
-def rep2_dir(tmp_path_factory):
-    import importlib
-
-    mod = importlib.import_module("tools_make_sf1")
+def rep2_dir(tmp_path_factory, sf_dir):
     out = str(tmp_path_factory.mktemp("rep2"))
-    old = (mod.OUT, mod.REPLICAS, mod.SRC)
-    mod.OUT, mod.REPLICAS, mod.SRC = out, 2, "/root/testdata/sf0.001"
-    try:
-        mod.main()
-    finally:
-        mod.OUT, mod.REPLICAS, mod.SRC = old
+    tools_make_scale.build("sf1", sf_dir, out, 2)
     return out
 
 

@@ -3,16 +3,19 @@ joins."""
 
 from __future__ import annotations
 
+import os
 import shutil
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 import pytest
 
 from etl_npl_pipeline_spark.operators.skew import salted_join
 from etl_npl_pipeline_spark.plans.pipeline import run_full_pipeline
+from etl_npl_pipeline_spark.session import scratch_dir
 from etl_npl_pipeline_spark.sources.tables import load_table
 
-TMP = "/root/repo/.tmp/pipeline"
+TMP = scratch_dir("pipeline")
 
 
 @pytest.fixture(autouse=True)
@@ -72,8 +75,9 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
     # a stale warehouse dir from a previous session blocks
     # saveAsTable even after DROP (catalog entry is gone, dir isn't)
-    shutil.rmtree("/root/repo/spark-warehouse/b_orders", ignore_errors=True)
-    shutil.rmtree("/root/repo/spark-warehouse/b_lineitem", ignore_errors=True)
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    for table in ("b_orders", "b_lineitem"):
+        shutil.rmtree(os.path.join(warehouse, table), ignore_errors=True)
     (orders.write.mode("overwrite").bucketBy(8, "o_orderkey")
         .sortBy("o_orderkey").saveAsTable("b_orders"))
     (li.write.mode("overwrite").bucketBy(8, "l_orderkey")

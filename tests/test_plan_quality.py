@@ -118,9 +118,10 @@ def test_partitioned_write_prunes_on_read(spark, sf_dir):
     at 100 TB, partition pruning is the first and cheapest filter."""
     import shutil
 
+    from etl_npl_pipeline_spark.session import scratch_dir
     from etl_npl_pipeline_spark.sources.tables import load_table
 
-    tmp = "/root/repo/.tmp/part_prune"
+    tmp = scratch_dir("part_prune")
     shutil.rmtree(tmp, ignore_errors=True)
     ev = load_table(spark, sf_dir, "events")
     import pyspark.sql.functions as F

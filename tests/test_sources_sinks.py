@@ -11,6 +11,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from etl_npl_pipeline_spark.operators import ffill, melt, pivot_wide, segment
+from etl_npl_pipeline_spark.session import scratch_dir
 from etl_npl_pipeline_spark.sinks import write_segmented, write_timestamped
 from etl_npl_pipeline_spark.sources.files import read_csv
 from etl_npl_pipeline_spark.sources.rest import (
@@ -19,7 +20,7 @@ from etl_npl_pipeline_spark.sources.rest import (
     month_chunks,
 )
 
-TMP = "/root/repo/.tmp/tests"
+TMP = scratch_dir("tests")
 
 
 @pytest.fixture(autouse=True)

@@ -76,11 +76,28 @@ def test_package_never_spells_out_the_checkout_path():
 
 
 def test_scripts_never_spell_out_the_checkout_path():
-    """The top-level scripts resolve their ``.tmp`` inputs and outputs
-    from their own location, like the package: a copy of the repo
-    elsewhere must not read or write this checkout."""
-    hits = _naming_the_checkout(os.path.join(ROOT, s) for s in SCRIPTS)
+    """The top-level scripts and the tests resolve their ``.tmp``
+    inputs and outputs from their own location, like the package: a
+    copy of the repo elsewhere must not read, write or import this
+    checkout."""
+    tests = glob.glob(os.path.join(ROOT, "tests", "*.py"))
+    hits = _naming_the_checkout(
+        [os.path.join(ROOT, s) for s in SCRIPTS] + tests
+    )
     assert not hits, f"checkout path hard-coded in {hits}"
+
+
+def test_every_script_has_a_caller():
+    """A tool nobody runs rots silently: each ``tools_*.py`` must be
+    named by the README (its recipe), ``bench.py`` or a test."""
+    callers = [os.path.join(ROOT, "README.md"), os.path.join(ROOT, "bench.py")]
+    callers += glob.glob(os.path.join(ROOT, "tests", "*.py"))
+    text = ""
+    for path in callers:
+        with open(path) as fh:
+            text += fh.read()
+    orphans = [s for s in SCRIPTS if s != "bench.py" and s[:-3] not in text]
+    assert not orphans, f"scripts named nowhere: {orphans}"
 
 
 def test_package_builds_no_cwd_relative_scratch_path():

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Correctness at scale: run a representative slice of the
 oracle-backed contract queries at the sf1.0 dataset
-(tools_make_sf1.py) and cross-check against DuckDB running the SAME
-oracle SQL over the SAME parquet — the sf0.01 driver check, one
+(tools_make_scale.py sf1) and cross-check against DuckDB running the
+SAME oracle SQL over the SAME parquet — the sf0.01 driver check, one
 order of magnitude up. Publishes sf1_correctness.json (bench.py
 republishes it into bench_detail.json["sf1_correctness"]).
 
@@ -10,9 +10,9 @@ The slice spans every plan family: TPC-H joins/aggs, window
 functions, events sessionization, LLM-data dedup/quality, the NPL
 pipeline, and the new bucketed join. Streaming and fixture-building
 queries are excluded (their oracles replay the same logic — scale
-behavior is covered by tools_bench_sf1.py's timing/plan checks).
+behavior is covered by tools_bench_scale.py's timing/plan checks).
 
-Run: python tools_make_sf1.py && python tools_check_sf1_correctness.py
+Run: python tools_make_scale.py sf1 && python tools_check_sf1_correctness.py
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ SF1_DIR = os.path.join(HERE, ".tmp", "sf1")
 EXCLUDE = {
     # recursive-CTE oracles: DuckDB replays connected components /
     # the full curation composition as a recursive CTE — minutes at
-    # sf1; Spark-side scale behavior is covered by tools_bench_sf1
+    # sf1; Spark-side scale behavior is covered by tools_bench_scale.py
     "dedup_components",
     "dedup_components_star",
     "corpus_curation",
@@ -69,7 +69,7 @@ EXCLUDE = {
     "emb_pca",
     # streaming drains: the oracle replays the same batch logic the
     # batch twin already checks; sf1 drain timing/plan behavior is
-    # covered by tools_bench_sf1's stream tier
+    # covered by tools_bench_scale.py's sf1 stream tier
     "stream_events_window",
     "stream_sessionize",
     "stream_dedup_events",
@@ -130,7 +130,7 @@ def _norm(v):
 
 def main() -> None:
     if not os.path.isdir(SF1_DIR):
-        sys.exit("run tools_make_sf1.py first")
+        sys.exit("run tools_make_scale.py sf1 first")
     spark = get_spark("sf1-correctness")
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()

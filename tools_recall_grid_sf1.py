@@ -8,13 +8,13 @@ chunks). With the r11 key-type fix in place (cogroup chunk ids cast
 to long on both sides), this harness measures recall@5 of each
 persisted-index approximate path — lsh_query / ivf_query / pq_query —
 against chunked ``brute_force_topk`` with |Q| = |corpus| = 20,000 at
-the sf1 dataset (tools_make_sf1.py), using the SAME knobs as the
+the sf1 dataset (tools_make_scale.py sf1), using the SAME knobs as the
 contract queries (plans/llmdata.py LSH_KNOBS/IVF_KNOBS/PQ_KNOBS).
 
 Publishes sf1_recall_grid.json; bench.py republishes it into
 bench_detail.json["sf1_recall_grid"] next to the sf0.1 recall block.
 
-Run: python tools_make_sf1.py && python tools_recall_grid_sf1.py
+Run: python tools_make_scale.py sf1 && python tools_recall_grid_sf1.py
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ SF1_DIR = os.path.join(HERE, ".tmp", "sf1")
 
 def main() -> None:
     if not os.path.isdir(SF1_DIR):
-        sys.exit("run tools_make_sf1.py first")
+        sys.exit("run tools_make_scale.py sf1 first")
     spark = get_spark("sf1-recall-grid")
     from etl_npl_pipeline_spark.operators import similarity as S
     from etl_npl_pipeline_spark.operators.ann_index import (
