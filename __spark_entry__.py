@@ -576,7 +576,7 @@ def oracle_sql() -> dict[str, str]:
         # engine-specific.
         "profile_sketches": profiling.PROFILE_SKETCHES_SQL,
         # dedup_simhash graduated to a FULL equality oracle in r8:
-        # portable md5 token hash + masked-key blocking
+        # portable md5 token hash + permuted-prefix blocking
         # (deterministic for hamming <= 7) + exact multiset-jaccard
         # verification make every stage cross-engine deterministic.
         "dedup_simhash": llmdata.DEDUP_SIMHASH_SQL,

@@ -4,7 +4,11 @@
 
 Prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...}
+   "queries": {name: sec, ...}, "sf": ..., "q_omitted": ...}
+with the first HEADLINE queries that fit the line; bench_detail.json
+keeps every query. Wall time here is a measurement, not a gate: the
+per-contract job counts in job_ledger.json are the regression gate
+(tests/test_job_ledger.py).
 
 Each query is planned and fully executed via a noop-format write —
 count() would let Catalyst prune columns the query claims to
@@ -15,19 +19,21 @@ SparkSession; wall-clock per query.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from etl_npl_pipeline_spark.session import get_spark  # noqa: E402
+from etl_npl_pipeline_spark.session import get_spark, scratch_dir  # noqa: E402
 
 HEADLINE = [
-    # Lifecycle FIRST (r14, VERDICT r13 #2a): the warehouse is
-    # cleared at bench start, so whichever query touches the
+    # Lifecycle FIRST (r14, VERDICT r13 #2a): bench runs in a
+    # private, empty warehouse, so whichever query touches the
     # persisted ANN index first pays the train+materialize cost —
     # putting build/refresh before every index CONSUMER makes the
     # timed ann_index_build the query that genuinely builds (its
@@ -235,65 +241,30 @@ HEADLINE = [
 
 
 def _compact(v: float) -> float:
-    """Trim a timing to <=4 chars so the summary line stays inside the
-    driver's ~2000-char stdout capture (BENCH_r02 was truncated on both
-    ends; the whole line must fit). Sub-second queries keep 2 decimals;
-    longer ones round to 1 (<=10% error, fine for grading)."""
+    """Sub-second timings keep 2 decimals, longer ones 1 (<=10% error,
+    fine for grading); full precision is in bench_detail.json."""
     return round(v, 2 if v < 1 else 1)
 
 
+# The stdout line must fit a ~2000-char stdout capture (BENCH_r02
+# was truncated on both ends and parsed as nothing). Membership is
+# fixed by HEADLINE alone: the longest declared-order prefix whose line
+# fits LINE_BUDGET when every number prints at WIDEST (wider than any
+# timing, total, recall or probe the line carries), so two runs always
+# print the same query keys.
+LINE_BUDGET = 1900
+WIDEST = 9999.99
+
+
+def _widest(x):
+    if isinstance(x, dict):
+        return {k: _widest(v) for k, v in x.items()}
+    if isinstance(x, list):
+        return [_widest(v) for v in x]
+    return WIDEST if isinstance(x, (int, float)) else x
+
+
 PLANT_BASE = 5_000_000
-
-
-# Queries whose wall-clock tracks the CPython/Arrow probe rather than
-# the shuffle probe: streaming drains (per-micro-batch Python + state
-# plumbing), pandas/Arrow-UDF hot paths, Python data sources, the
-# pandas-on-Spark bridge, and the driver-looped BPE trainer. The r13
-# verifying bench measured these swinging 1.3-1.9x on UNCHANGED code
-# while the shuffle probe improved 15% (r13_gate_adjudication.json) —
-# the shuffle-only machine scale read that as four confirmed
-# regressions and floors were loosened in lieu of evidence. Scaling
-# this tier by py_1thread (VERDICT r13 #3) absorbs the drift; floors
-# stay frozen.
-_PY_BOUND_PREFIXES = (
-    "stream_",
-    "mm_",
-    "src_rest",
-    "src_pyds",
-    "src_excel",
-    "vocab_bpe_train",
-    "vocab_bpe_encode",
-    "sql_udtf",
-    "ann_",  # pandas-UDF scoring chunks in every serving path
-)
-_PY_BOUND_EXTRA = {
-    "dedup_minhash",
-    "dedup_simhash",
-    "dedup_semantic",
-    "dedup_embedding",
-    "dedup_image_phash",
-    "dedup_cross_source",
-    "dedup_incremental",
-    "search_mmr",
-    "emb_kmeans",
-    "emb_pca",
-    "compat_pandas_quarterly",
-    "pipeline_full_read",
-    "text_lm_score",
-    "graph_label_prop",
-    "graph_label_prop_indexed",
-    "graph_pagerank",
-    "graph_pagerank_indexed",
-    "rag_retrieve",
-    "search_hybrid_rrf",
-    "ann_rp_topk",
-    "ann_rp_rerank",
-    "dedup_editdistance",
-}
-
-
-def _py_latency_bound(name: str) -> bool:
-    return name.startswith(_PY_BOUND_PREFIXES) or name in _PY_BOUND_EXTRA
 
 
 def _dedup_quality(spark, sf_dir: str) -> dict:
@@ -417,25 +388,16 @@ def _dedup_quality(spark, sf_dir: str) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    spark = get_spark("etl-npl-pipeline-bench")
+    # r14 (VERDICT r13 #2a): no persisted ANN index at start, or the
+    # timed ann_index_build adopts one (0.029 MB read in 0.57 s, the
+    # build never ran). A private warehouse, removed at exit: the COLD
+    # pass pays the real build, and no other process's index in the
+    # checkout's spark-warehouse is touched.
+    warehouse = scratch_dir(f"bench_warehouse_{os.getpid()}")
+    shutil.rmtree(warehouse, ignore_errors=True)
+    atexit.register(shutil.rmtree, warehouse, True)
+    spark = get_spark("etl-npl-pipeline-bench", warehouse=warehouse)
     queries = entrymod.queries()
-
-    # r14 (VERDICT r13 #2a): start every bench run with NO persisted
-    # ANN index — the warehouse adoption path meant the timed
-    # ann_index_build read 0.029 MB in 0.57 s (the build it claims to
-    # measure never ran; cross-run precomputation keyed on the
-    # testdata). Deleting ann_idx_* here makes the COLD pass pay the
-    # genuine train+materialize cost once per run; the steady pass
-    # and the serving tier then adopt the fresh artifacts — the
-    # disclosed index-is-an-artifact lifecycle, now anchored inside
-    # the run that reports it.
-    import glob as _glob
-    import shutil as _shutil
-
-    from etl_npl_pipeline_spark.operators.ann_index import _warehouse_dir
-
-    for d in _glob.glob(os.path.join(_warehouse_dir(spark), "ann_idx_*")):
-        _shutil.rmtree(d, ignore_errors=True)
 
     # Warm the JVM/codegen path once on a trivial plan so query #1
     # doesn't pay session startup, and spin up the Python/Arrow
@@ -449,23 +411,12 @@ def main() -> None:
     _warm = _pudf(lambda s: s, "long")
     spark.range(10).select(_warm("id")).count()
 
-    # Pin the events table: 11+ events_* queries share ONE
-    # materialized scan instead of re-reading the parquet each time
-    # (the production hot-table pattern; shows how much of the
-    # events-tier floor is scan vs planning). Values are identical —
-    # the pin happens after ts normalization.
-    from etl_npl_pipeline_spark.sources.tables import cache_table
-
-    cache_table(spark, sf_dir, "events")
-
     # Machine-speed calibration: per-query wall-clock moves 1.5-2x
     # when the driver lands the repo on a different host SKU (round 4
     # measured a 3.5 GHz -> 2.1 GHz swap inflating EVERY query ~1.6x,
     # including trivial ones that haven't changed in weeks). Publish a
     # fixed single-thread probe next to the timings so cross-round
-    # comparisons are interpretable, and let the self-baseline gate
-    # scale by the ratio instead of flagging a slower host as 90
-    # simultaneous "regressions". JVM probe = codegen hash-agg over
+    # comparisons are interpretable. JVM probe = codegen hash-agg over
     # range (what Spark plans actually burn); Python probe = CPython
     # interpreter speed (driver/Arrow-side cost).
     def _calibrate() -> dict:
@@ -486,8 +437,8 @@ def main() -> None:
         # Shuffle/scheduler probe — at bench sf most query time is
         # stage scheduling + exchange machinery, not tuple crunching,
         # so THIS number is what per-query wall-clock actually tracks
-        # across hosts (gate scaling uses it). First run discarded
-        # (pays codegen for the probe plan itself).
+        # across hosts. First run discarded (pays codegen for the
+        # probe plan itself).
         sh = []
         for i in range(4):
             t0 = time.time()
@@ -525,7 +476,7 @@ def main() -> None:
             # shuffle/scan/spill BYTES are plan-deterministic — cold
             # and steady read identical bytes for every pure query —
             # and the cold pass is where the lifecycle queries
-            # (ann_index_build/refresh, now starting from a cleared
+            # (ann_index_build/refresh, starting from an empty
             # warehouse) do their real work, so metering cold makes
             # the build's input_mb ≈ the embeddings table instead of
             # the old 0.029 MB adopted-manifest read (r14, VERDICT
@@ -673,8 +624,7 @@ def main() -> None:
         ("sf1_correctness.json", "sf1_correctness"),
         ("sf1_recall_grid.json", "sf1_recall_grid"),
         ("adversarial_r7.json", "adversarial_program"),
-        # the measured value of the events cache_table pin: the pin
-        # stays, priced instead of implicit
+        # what the dropped events cache_table pin subsidized
         ("events_pin_probe.json", "events_pin_probe"),
     ]:
         if os.path.exists(os.path.join(here, fname)):
@@ -684,21 +634,17 @@ def main() -> None:
     with open(os.path.join(here, "bench_detail.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
 
-    # The driver's stdout capture is ~2000 chars and truncation makes
-    # the whole line unparseable (BENCH_r02). Emit the richest form
-    # that FITS: full 2-dp queries -> 1-dp queries -> drop the
-    # sub-0.5s tier (summed into q_fast_sec, counted in q_omitted)
-    # so the slow tier never truncates -> slowest-first truncation
-    # as the last resort. value / recall_at_5 / sf always survive;
-    # full precision is in bench_detail.json either way.
-    def _line(qmap: dict, omitted: int, fast_sec: float | None = None) -> str:
+    # ONE line that fits the stdout capture (see LINE_BUDGET): the
+    # first n HEADLINE queries, the rest summed into q_rest_sec and
+    # counted in q_omitted. value / recall_at_5 / sf always print.
+    def _line(n: int) -> dict:
         body = {
             "metric": "headline_total",
             "value": round(sum(timings.values()), 2),
             "unit": "sec",
             "timing": "steady2nd",
             "cold_total": round(sum(cold.values()), 2),
-            "queries": qmap,
+            "queries": {k: _compact(timings[k]) for k in HEADLINE[:n]},
             "recall_at_5": recall,
             "rp_cand_recall": rp_candidate_recall,
             # [recall_planted, precision]: precision is vs TRUE
@@ -723,164 +669,18 @@ def main() -> None:
             },
             "sf": sf_val,
         }
-        if omitted:
-            body["q_omitted"] = omitted
-        if fast_sec is not None:
-            body["q_fast_sec"] = round(fast_sec, 2)
+        if n < len(HEADLINE):
+            body["q_omitted"] = len(HEADLINE) - n
+            body["q_rest_sec"] = round(sum(timings[k] for k in HEADLINE[n:]), 2)
+        return body
+
+    def _dumps(body: dict) -> str:
         return json.dumps(body, separators=(",", ":"))
 
-    line = _line({k: _compact(v) for k, v in timings.items()}, 0)
-    if len(line) > 1900:
-        line = _line({k: round(v, 1) for k, v in timings.items()}, 0)
-    if len(line) > 1900:
-        slow = {k: round(v, 1) for k, v in timings.items() if v >= 0.5}
-        fast_total = sum(v for v in timings.values() if v < 0.5)
-        line = _line(slow, len(timings) - len(slow), fast_total)
-    if len(line) > 1900:
-        slowest = sorted(timings, key=timings.get, reverse=True)
-        keep = dict()
-        for name in slowest:
-            trial = dict(keep, **{name: round(timings[name], 1)})
-            if len(_line(trial, len(timings) - len(trial))) > 1900:
-                break
-            keep = trial
-        line = _line(keep, len(timings) - len(keep))
-    print(line)
-
-    # Self-baseline regression gate (`--gate`): BASELINE_SELF.json
-    # pins the previous round's per-query times; a query regresses
-    # when it exceeds GATE_RATIO x baseline PLUS an absolute slack
-    # (machine noise between full runs measures +-15%, and sub-second
-    # queries swing 0.2-0.3 s run to run — a pure ratio flags noise,
-    # which drowns real regressions). Violators always go to stderr +
-    # bench_detail.json; the nonzero exit is opt-in so the driver's
-    # plain `python bench.py` run still records the bench line.
-    GATE_RATIO = 1.25
-    GATE_SLACK_SEC = 0.3
-    base_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BASELINE_SELF.json"
-    )
-    if os.path.exists(base_path):
-        with open(base_path) as fh:
-            base_doc = json.load(fh)
-        base = base_doc["queries"]
-        # Scale the gate by relative machine speed when the baseline
-        # recorded its host's calibration: a slower host inflates
-        # every query together and a raw ratio gate reads that as
-        # dozens of false regressions. Clamped to [1.0, 3.0]: a
-        # SLOWER host loosens proportionally, but a fast-probe run
-        # never tightens below the plain 1.25x — baselines are
-        # already min-of-runs, and probe speed swings (turbo, noisy
-        # neighbors) don't move the streaming drains' trigger-wait
-        # floors, so sub-1.0 scaling measured 5 false positives in
-        # one pass.
-        base_cal_sh = (base_doc.get("calibration") or {}).get("shuffle_sec")
-        base_cal_py = (base_doc.get("calibration") or {}).get(
-            "py_1thread_sec"
-        )
-        scale_sh = 1.0
-        if base_cal_sh:
-            scale_sh = min(
-                3.0,
-                max(1.0, calibration["shuffle_sec"] / base_cal_sh),
-            )
-        # r14 (VERDICT r13 #3): Python-latency-bound queries scale by
-        # the CPython probe, not the shuffle probe. The r13 verifying
-        # bench measured the py probe swinging 0.195 -> 0.296 (1.52x)
-        # while the shuffle probe IMPROVED — and the shuffle-only
-        # scale then "confirmed" four untouched pandas/drain paths,
-        # forcing floor loosenings. Per-query probe selection absorbs
-        # that drift without touching the floors.
-        scale_py = scale_sh
-        if base_cal_py:
-            scale_py = min(
-                3.0,
-                max(1.0, calibration["py_1thread_sec"] / base_cal_py),
-            )
-
-        def _mscale(k: str) -> float:
-            return scale_py if _py_latency_bound(k) else scale_sh
-
-        # Gate on the BEST of the two passes: a transient system
-        # noise spike (measured: 0.9s queries reading 4s+ in one
-        # pass, clean in isolation) rarely hits both passes, so the
-        # min is the query's honest cost this run.
-        violators = {
-            k: {"baseline": base[k], "now": min(timings[k], cold[k])}
-            for k in timings
-            if base.get(k, 0) >= 0.5
-            and min(timings[k], cold[k])
-            > GATE_RATIO * base[k] * _mscale(k) + GATE_SLACK_SEC
-        }
-        # Isolation re-measure before flagging a SHORT query: the
-        # full-suite passes run 131 queries back to back, and
-        # sub-2s Python-heavy queries occasionally absorb a transient
-        # noise spike from a neighbor (r4's src_excel_roundtrip false
-        # flag was adjudicated by hand in a commit message — this
-        # makes the re-run structural). Min of TWO exclusive re-runs
-        # (one warm lucky run must not clear a real regression), and
-        # a cleared flag stays VISIBLE in
-        # regressions_vs_self_baseline with status=noise_cleared —
-        # the clearing is auditable, not a silent delete.
-        # Streaming drains are adjudicated regardless of baseline
-        # magnitude: their per-micro-batch state-store open/commit
-        # floor is I/O-latency-bound, not shuffle-bound, so the
-        # shuffle-probe machine_scale under-corrects them on a slow
-        # host (r12 shipped stream_stream_join flagged at 7.85s that
-        # read 2.71s in exclusive isolation — stream_adjudication.json).
-        adjudications = {}
-        for k in list(violators):
-            # r13 session 2: adjudicate EVERY violator. The old
-            # "only sub-2s or stream_ queries" carve-out assumed
-            # longer queries don't absorb suite-context noise — but
-            # r12 shipped stream_stream_join flagged at 7.85s
-            # (isolated: 2.71s) and r13 re-flagged search_hybrid_rrf
-            # at 5.2s (isolated: 3.0s, inside the scaled gate). The
-            # probe cost is 2 runs per FLAGGED query only, and a
-            # confirmed regression still fails the gate.
-            iso_runs = []
-            for _ in range(2):
-                t0 = time.time()
-                queries[k](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                iso_runs.append(round(time.time() - t0, 3))
-            iso = min(iso_runs)
-            cleared = iso <= GATE_RATIO * base[k] * _mscale(k) + GATE_SLACK_SEC
-            adjudications[k] = {
-                "suite_sec": violators[k]["now"],
-                "isolated_secs": iso_runs,
-                "verdict": "noise_cleared" if cleared else "confirmed",
-            }
-            violators[k]["status"] = (
-                "noise_cleared" if cleared else "confirmed"
-            )
-        # only confirmed entries fail the gate; cleared ones remain
-        # in the report for the next round's drift adjudication
-        gate_violators = {
-            k: v
-            for k, v in violators.items()
-            if v.get("status") != "noise_cleared"
-        }
-        detail["gate_machine_scale"] = {
-            "shuffle": round(scale_sh, 3),
-            "py": round(scale_py, 3),
-        }
-        detail["gate_adjudications"] = adjudications
-        detail["regressions_vs_self_baseline"] = violators
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "bench_detail.json"), "w",
-        ) as fh:
-            json.dump(detail, fh, indent=1)
-        if gate_violators:
-            print(
-                f"REGRESSIONS vs self-baseline (> {GATE_RATIO}x): "
-                + json.dumps(gate_violators),
-                file=sys.stderr,
-            )
-            if "--gate" in sys.argv:
-                sys.exit(1)
+    n = len(HEADLINE)
+    while len(_dumps(_widest(_line(n)))) > LINE_BUDGET:
+        n -= 1
+    print(_dumps(_line(n)))
 
 
 if __name__ == "__main__":

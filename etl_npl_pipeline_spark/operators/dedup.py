@@ -8,8 +8,8 @@ Scale design:
   expressions over one explode (single shuffle on doc_id), then
   banded LSH so candidate generation is an equi-join on
   (band, band_hash) — never an all-pairs product.
-- simhash: 64 signed bit-sums as agg expressions, bucketed by
-  16-bit chunks (a hamming-≤3 pair must agree on ≥1 of 4 chunks).
+- simhash: 64 signed bit-sums as agg expressions, blocked by 112
+  permuted 20-bit prefixes (a hamming-≤7 pair shares ≥1 prefix).
 - ngram_jaccard: inverted-index self-join on shingle; intersection
   counts fall out of the join, unions from per-doc counts. The
   shingle join key keeps the product sparse — frequency-capped to
@@ -487,9 +487,7 @@ def _table_masks() -> list[int]:
 _SIMHASH_TABLE_MASKS = _table_masks()
 
 
-def _bucket_pairs(
-    buckets: DataFrame, max_hamming: int, canonical_tables: bool = False
-) -> DataFrame:
+def _bucket_pairs(buckets: DataFrame, max_hamming: int) -> DataFrame:
     """All intra-bucket ordered pairs with hamming ≤ max_hamming.
 
     The hamming filter runs INSIDE the array transform — before the
@@ -498,9 +496,8 @@ def _bucket_pairs(
     filtered after the distinct and the collision pairs themselves
     were the x46.8 shuffle blow-up.
 
-    ``canonical_tables`` (the prefix-table path): a near-identical
-    pair collides in MANY of its 112 tables (hamming ≤ 2 ⇒ ~40+
-    catching tables), so even the filtered emission used to carry a
+    Canonical-table emission: a near-identical pair collides in MANY
+    of its 112 tables (hamming ≤ 2 ⇒ ~40+ catching tables), so even the filtered emission used to carry a
     ~20-40x duplication factor into the distinct's exchange
     (measured: 14M of sf1's 19.9M shuffle records were duplicate
     pair emissions). Which tables catch a pair is a pure local
@@ -531,24 +528,23 @@ def _bucket_pairs(
     near = F.filter(
         pair_structs, lambda p: F.bit_count(p["x"]) <= F.lit(max_hamming)
     )
-    if canonical_tables:
-        masks = F.array(
-            *[F.lit(m).cast("long") for m in _SIMHASH_TABLE_MASKS]
-        )
-        this_table = F.shiftrightunsigned(F.col("pk"), 20)
-        near = F.filter(
-            near,
-            lambda p: (
-                F.array_position(
-                    F.transform(
-                        masks, lambda m: p["x"].bitwiseAND(m) == 0
-                    ),
-                    F.lit(True),
-                )
-                - 1
+    masks = F.array(
+        *[F.lit(m).cast("long") for m in _SIMHASH_TABLE_MASKS]
+    )
+    this_table = F.shiftrightunsigned(F.col("pk"), 20)
+    near = F.filter(
+        near,
+        lambda p: (
+            F.array_position(
+                F.transform(
+                    masks, lambda m: p["x"].bitwiseAND(m) == 0
+                ),
+                F.lit(True),
             )
-            == this_table,
+            - 1
         )
+        == this_table,
+    )
     return (
         buckets.select(F.explode(near).alias("p"))
         .select(
@@ -564,23 +560,20 @@ def simhash_candidates(
     sigs: DataFrame,
     max_hamming: int = 7,
     max_bucket_size: int = DEFAULT_MAX_BUCKET,
-    prefix_bits: int = 20,
 ) -> DataFrame:
     """ALL pairs with hamming(simhash) ≤ max_hamming (≤ 7), blocked
-    by Manku-style permuted-prefix tables (``prefix_bits=20``, the
-    default) or the legacy masked 16-bit chunks (``prefix_bits=16``).
+    by Manku-style permuted-prefix tables on 20-bit prefixes.
 
-    Both arrangements give DETERMINISTIC (complete) blocking recall
-    for hamming ≤ 7 by pigeonhole — see _SIMHASH_TABLES for the
-    20-bit proof; the 16-bit variant zeroes one bit per 16-bit chunk
-    (some chunk differs in ≤ 1 bit when 7 errors spread over 4
-    chunks). That completeness is what lets dedup_simhash carry a
-    GROUND-TRUTH equality oracle (brute-force hamming in SQL) rather
-    than a blocking replay.
+    The blocking recall is DETERMINISTIC (complete) for hamming ≤ 7
+    by pigeonhole — see _SIMHASH_TABLES for the proof. That
+    completeness is what lets dedup_simhash carry a GROUND-TRUTH
+    equality oracle (brute-force hamming in SQL) rather than a
+    blocking replay.
 
-    Why 20 beats 16 at scale (the r8 superlinear_shuffle finding):
-    expected bucket occupancy is n / 2^prefix_bits, and intra-bucket
-    pair enumeration is T * n^2 / 2^(prefix_bits+1). At 16 bits the
+    Why 20-bit prefixes and not r8's masked 16-bit chunks (the r8
+    superlinear_shuffle finding): expected bucket occupancy is
+    n / 2^bits, and intra-bucket pair enumeration is
+    T * n^2 / 2^(bits+1). At 16 bits the
     key space saturates in the 10^5–10^6-doc range (measured bytes
     x46.8 at sf0.1->sf1, then silent recall decay once the bucket
     cap binds). At 20 bits the same corpus enumerates ~9x fewer
@@ -600,15 +593,8 @@ def simhash_candidates(
     """
     if max_hamming > 7:
         raise ValueError(
-            "prefix/masked blocking guarantees recall only to hamming 7; "
+            "prefix blocking guarantees recall only to hamming 7; "
             f"got max_hamming={max_hamming}"
-        )
-    if prefix_bits == 16:
-        return _simhash_candidates_masked(sigs, max_hamming, max_bucket_size)
-    if prefix_bits != 20:
-        raise ValueError(
-            f"supported prefix_bits: 16 (masked chunks), 20 (permuted "
-            f"prefixes); got {prefix_bits}"
         )
     # 16 subchunk nibbles, projected once so the signature UDF
     # subtree is evaluated exactly once beneath the posting explode.
@@ -648,60 +634,6 @@ def simhash_candidates(
     long = _drop_oversize_buckets(long, ["pk"], max_bucket_size)
     buckets = (
         long.groupBy("pk")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("doc", "simhash"))
-            ).alias("ds")
-        )
-        .where(F.size("ds") > 1)
-    )
-    return _bucket_pairs(buckets, max_hamming, canonical_tables=True)
-
-
-def _simhash_candidates_masked(
-    sigs: DataFrame,
-    max_hamming: int = 7,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Legacy 16-bit masked-chunk blocking (r8): each 16-bit chunk
-    posts 16 one-bit-zeroed variants; hamming ≤ 7 over 4 chunks ⇒
-    some chunk differs in ≤ 1 bit ⇒ masked-key collision. Same
-    deterministic-recall guarantee as the 20-bit prefix tables, 64
-    postings/doc instead of 112 — but the 2^16 key space saturates
-    past ~10^5 docs (measured superlinear shuffle at sf1); kept as
-    the small-corpus arrangement and for the knob's A/B tests.
-    """
-    chunks = sigs.select(
-        "doc",
-        "simhash",
-        *[
-            (F.shiftrightunsigned(F.col("simhash"), 16 * c).bitwiseAND(F.lit(0xFFFF))).alias(
-                f"c_{c}"
-            )
-            for c in range(4)
-        ],
-    )
-    # key = chunk*16 + masked bit; kv = chunk value with that bit
-    # zeroed. Built from the (cheap, already-projected) chunk ints so
-    # the signature UDF subtree is still evaluated exactly once.
-    masks = F.array(
-        *[
-            F.struct(
-                F.lit(16 * c + b).alias("k"),
-                F.col(f"c_{c}")
-                .bitwiseAND(F.lit(0xFFFF ^ (1 << b)))
-                .alias("kv"),
-            )
-            for c in range(4)
-            for b in range(16)
-        ]
-    )
-    long = chunks.select(
-        "doc", "simhash", F.explode(masks).alias("m")
-    ).select("doc", "simhash", F.col("m.k").alias("chunk"), F.col("m.kv").alias("cv"))
-    long = _drop_oversize_buckets(long, ["chunk", "cv"], max_bucket_size)
-    buckets = (
-        long.groupBy("chunk", "cv")
         .agg(
             F.array_sort(
                 F.collect_list(F.struct("doc", "simhash"))

@@ -45,7 +45,9 @@ def sf_scratch_dir(name: str, sf_dir: str) -> str:
     return path
 
 
-def get_spark(app_name: str = "etl-npl-pipeline-spark") -> SparkSession:
+def get_spark(
+    app_name: str = "etl-npl-pipeline-spark", warehouse: str | None = None
+) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate conf.
 
     - AQE on: runtime coalescing, skew-join splitting, dynamic
@@ -62,6 +64,11 @@ def get_spark(app_name: str = "etl-npl-pipeline-spark") -> SparkSession:
       SQLSTATE; their ``== DataFrame ==`` block names a JVM frame
       instead of the Python file:line. A static conf, so it only
       takes effect when this call starts the JVM.
+
+    ``warehouse`` is the session's warehouse dir (where the persisted
+    ANN indexes live); None keeps Spark's default, ``spark-warehouse``
+    under the working directory. Static too: only the call that
+    starts the JVM sets it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     master = f"local[{cpus}]" if cpus else "local[*]"
@@ -83,6 +90,8 @@ def get_spark(app_name: str = "etl-npl-pipeline-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
+    if warehouse is not None:
+        builder = builder.config("spark.sql.warehouse.dir", warehouse)
     return builder.getOrCreate()
 
 

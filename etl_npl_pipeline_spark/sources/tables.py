@@ -30,12 +30,6 @@ TABLES = (
 )
 
 
-# Opt-in hot-table pins (cache_table): load_table returns the pinned
-# plan when one exists so every consumer shares ONE materialized scan.
-# Nothing is pinned unless a harness (bench.py's events tier) asks —
-# tests and the driver always measure the raw scan path.
-_PINNED: dict[tuple[str, str], DataFrame] = {}
-
 # Inferred parquet schemas, per process (see read_parquet). Only
 # schemas are kept, never DataFrames: a shared DataFrame would hand
 # both sides of a self-join the same expression ids.
@@ -183,22 +177,6 @@ CANONICAL: dict[str, list[tuple[str, str]]] = {
 }
 
 
-def cache_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Pin one table in executor memory (spill-to-disk) and register
-    it so subsequent load_table calls reuse the materialized scan —
-    the production pattern for a hot dimension/fact every query in a
-    workload touches. Returns the pinned DataFrame after forcing
-    materialization."""
-    from pyspark import StorageLevel
-
-    df = load_table(spark, sf_dir, name).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    df.count()
-    _PINNED[(sf_dir.rstrip("/"), name)] = df
-    return df
-
-
 def _adapt_timestamps(name: str, df: DataFrame) -> DataFrame:
     """Per-vintage timestamp physical adaptations, applied before
     the canonical cast."""
@@ -280,13 +258,9 @@ def _read_mixed_vintage(
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one parquet table. No cache, no collect — a pure plan
-    (unless the table was explicitly pinned via cache_table)."""
+    """Scan one parquet table. No cache, no collect — a pure plan."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    pinned = _PINNED.get((sf_dir.rstrip("/"), name))
-    if pinned is not None:
-        return pinned
     # Self-sufficient under ANY SparkSession (not just session.get_spark()):
     # some generations of events.parquet store TIMESTAMP(NANOS), which Spark
     # only reads with nanosAsLong; timestamp literals in downstream plans

@@ -1,6 +1,6 @@
-"""run_with_metrics: the byte-level capture that backs the
-host-independent scale gates (shuffle-byte linearity at sf1, spill
-accounting in bench)."""
+"""run_with_metrics: the byte- and job-level capture that backs the
+host-independent gates (shuffle-byte linearity at sf1, spill
+accounting in bench, the per-contract job ledger)."""
 
 from __future__ import annotations
 
@@ -60,3 +60,20 @@ def test_no_spill_at_test_scale(spark, sf_dir):
     m = run_with_metrics(spark, df)
     assert m["memory_spill_bytes"] == 0
     assert m["disk_spill_bytes"] == 0
+
+
+def test_counts_stream_micro_batch_jobs(spark, sf_dir):
+    """A streaming drain runs its micro-batch jobs in the stream
+    query's own job group: the job count covers every group, so it
+    sees them where a count of group-less jobs does not."""
+    from etl_npl_pipeline_spark.streaming.events import (
+        DRAIN_PROGRESS,
+        stream_windowed_counts,
+    )
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    m = run_with_metrics(spark, lambda: stream_windowed_counts(spark, sf_dir))
+    groupless = len(set(tracker.getJobIdsForGroup()) - before)
+    batches = DRAIN_PROGRESS["stream_events_window"]["batches"]
+    assert m["jobs"] - groupless >= batches >= 1

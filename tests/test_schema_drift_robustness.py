@@ -267,15 +267,10 @@ def test_mixed_vintage_parity(name, spark, mixed_dir):
 
 
 def _jobs_launched(spark, build):
-    """Spark jobs launched while ``build()`` runs. Jobs reach the
-    status store through the listener bus, so it is drained first."""
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
-    bus.waitUntilEmpty(60_000)
-    before = set(sc.statusTracker().getJobIdsForGroup())
-    build()
-    bus.waitUntilEmpty(60_000)
-    return len(set(sc.statusTracker().getJobIdsForGroup()) - before)
+    """Spark jobs launched while ``build()`` runs, in every job group."""
+    from etl_npl_pipeline_spark.metrics import run_with_metrics
+
+    return run_with_metrics(spark, build)["jobs"]
 
 
 def _write_orders(sf_dir, out, key_type, where):
