@@ -135,7 +135,7 @@ def queries() -> dict[str, QueryFn]:
         "q_top_parts_per_brand": tpch_extra.q_top_parts_per_brand,
         "corpus_curation": corpus.corpus_curation,
         "dedup_components": llmdata.dedup_components,
-        "dedup_components_star": llmdata.dedup_components_star,
+        "dedup_components_star": llmdata.dedup_components,
         "dedup_embedding": llmdata.dedup_embedding,
         "stream_events_window": extras.stream_events_window,
         "stream_sessionize": extras.stream_sessionize_q,

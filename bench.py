@@ -19,10 +19,8 @@ SparkSession; wall-clock per query.
 
 from __future__ import annotations
 
-import atexit
 import json
 import os
-import shutil
 import sys
 import time
 
@@ -390,13 +388,13 @@ def main() -> None:
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     # r14 (VERDICT r13 #2a): no persisted ANN index at start, or the
     # timed ann_index_build adopts one (0.029 MB read in 0.57 s, the
-    # build never ran). A private warehouse, removed at exit: the COLD
-    # pass pays the real build, and no other process's index in the
-    # checkout's spark-warehouse is touched.
-    warehouse = scratch_dir(f"bench_warehouse_{os.getpid()}")
-    shutil.rmtree(warehouse, ignore_errors=True)
-    atexit.register(shutil.rmtree, warehouse, True)
-    spark = get_spark("etl-npl-pipeline-bench", warehouse=warehouse)
+    # build never ran). A private warehouse in this process's scratch
+    # root (removed at exit): the COLD pass pays the real build, and
+    # no other process's index in the checkout's spark-warehouse is
+    # touched.
+    spark = get_spark(
+        "etl-npl-pipeline-bench", warehouse=scratch_dir("warehouse")
+    )
     queries = entrymod.queries()
 
     # Warm the JVM/codegen path once on a trivial plan so query #1

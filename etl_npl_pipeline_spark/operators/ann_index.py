@@ -17,7 +17,7 @@ into
 
 Determinism contract: build and refresh run the same seeded
 trainers (`ivf._centroids`, `pq.train_pq_codebooks`, both fitting on
-`ivf._train_sample`, normalized by `ivf._unit_rows`) and write
+one `ivf._train_sample`, normalized by `ivf._unit_rows`) and write
 through the one encoder `_write_corpus_artifacts`: `ivf.cell_assigner`
 for the cell, `pq.pq_encode` for the codes, `_lsh_postings` (over
 `similarity._lsh_table_signatures`) for the buckets, and the Catalyst
@@ -66,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from etl_npl_pipeline_spark.operators.ivf import (
     _centroids,
     _sq_dists,
+    _train_sample,
     _unit_rows,
     cell_assigner,
 )
@@ -117,6 +118,12 @@ MANIFEST = "_MANIFEST.json"
 # exist as rows) — and keeps each query SHAPE on one strategy at
 # every measured sf, so decade byte ratios compare like with like.
 LARGE_QUERY_BATCH = 1_000
+
+# pq_query's ADC chunk grid: queries per query chunk, codes per code
+# chunk. The decomposition is exact for any grid, so these only set
+# block sizes.
+PQ_QUERY_CHUNK_ROWS = 10_000
+PQ_CODE_CHUNK_ROWS = 200_000
 
 
 def _content_fingerprint(corpus_key: str) -> str:
@@ -477,7 +484,8 @@ def build_ann_index(
     build_dir = root + f".build-{os.getpid()}"
     shutil.rmtree(build_dir, ignore_errors=True)
 
-    if corpus.isEmpty():
+    sample = _train_sample(corpus, vec_col, seed)
+    if sample.size == 0:
         # empty corpus -> EMPTY INDEX (r9 adversarial empty_tables
         # find): there is no dim to train centroids/codebooks on, so
         # every artifact is a schema'd 0-row relation and all query
@@ -485,9 +493,10 @@ def build_ann_index(
         for name in ARTIFACTS:
             _write_small_artifact(spark, os.path.join(build_dir, name), name)
     else:
-        # train once: IVF coarse quantizer + PQ per-subspace codebooks
-        cents = _centroids(corpus, vec_col, n_clusters, seed)
-        books = train_pq_codebooks(corpus, vec_col, pq_m, pq_k, seed)
+        # train once, both on one sample: IVF coarse quantizer + PQ
+        # per-subspace codebooks
+        cents = _centroids(sample, n_clusters, seed)
+        books = train_pq_codebooks(sample, pq_m, pq_k, seed)
         models = {
             "ivf_centroids": [(c, v.tolist()) for c, v in enumerate(cents)],
             "pq_codebooks": [
@@ -594,14 +603,14 @@ def refresh_ann_index(
 
     # stage: fresh segment dirs, invisible until the manifest commit.
     # An empty batch stages nothing and commits lineage only.
-    staged = not batch.isEmpty()
+    n_appended = batch.count()
+    staged = n_appended > 0
     if staged:
         _write_corpus_artifacts(
             batch, _load_centroids(spark, index_dir),
             _load_codebooks(spark, index_dir), man["knobs"], index_dir,
             suffix, id_col, vec_col,
         )
-    n_appended = batch.count() if staged else 0
     # commit: one atomic manifest replace publishes the staged
     # segments together with the lineage bump. Inside the lock the
     # manifest is RE-READ: a concurrent writer that committed first
@@ -902,8 +911,6 @@ def pq_query(
     rerank_factor: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_chunk_rows: int = 10_000,
-    code_chunk_rows: int = 200_000,
     allowed_ids: DataFrame | None = None,
     n_queries_hint: int | None = None,
 ) -> DataFrame:
@@ -926,7 +933,7 @@ def pq_query(
     nested-loop at CHUNK granularity — the standard distributed
     matmul decomposition:
 
-    - queries get a content-hashed chunk id qc (|Q|/query_chunk_rows
+    - queries get a content-hashed chunk id qc (|Q|/PQ_QUERY_CHUNK_ROWS
       chunks), codes a chunk id cc; each side is replicated across
       the other's chunk range (shuffle rows |Q|·Cc + |C|·Cq — the
       unavoidable all-pairs transfer, at chunk granularity instead
@@ -966,12 +973,12 @@ def pq_query(
         [F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv_raw")],
         id_col,
         n_q,
-        query_chunk_rows,
+        PQ_QUERY_CHUNK_ROWS,
         codes,
         ["neighbor_id", "codes"],
         "neighbor_id",
         n_codes,
-        code_chunk_rows,
+        PQ_CODE_CHUNK_ROWS,
     )
 
     def adc_block(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:

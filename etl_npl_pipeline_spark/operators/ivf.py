@@ -96,9 +96,9 @@ def _kmeans_lloyd(m: np.ndarray, k: int, seed: int, iters: int = 10) -> np.ndarr
     return cents
 
 
-def _centroids(corpus: DataFrame, vec_col: str, n_clusters: int, seed: int) -> np.ndarray:
+def _centroids(m: np.ndarray, n_clusters: int, seed: int) -> np.ndarray:
     """Coarse-quantizer training: numpy k-means on the bounded driver
-    sample (``_train_sample``).
+    sample ``m`` (``_train_sample``).
 
     Centroid quality saturates far below full-corpus size, so the
     sample cap (not the corpus) bounds the work: ≤100k × dim floats
@@ -111,7 +111,6 @@ def _centroids(corpus: DataFrame, vec_col: str, n_clusters: int, seed: int) -> n
     (on unit vectors ||a-b||² = 2-2cosθ). Training on raw vectors
     splits cells by magnitude, which cosine ignores — that mismatch
     cost ~12% recall@5."""
-    m = _train_sample(corpus, vec_col, seed)
     if m.size == 0:
         # empty corpus: there is nothing to train on and no dim to
         # derive — an empty (0, 0) centroid set; callers treat it as

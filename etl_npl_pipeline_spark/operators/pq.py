@@ -30,11 +30,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from etl_npl_pipeline_spark.operators.ivf import (
-    _kmeans_lloyd,
-    _train_sample,
-    _unit_rows,
-)
+from etl_npl_pipeline_spark.operators.ivf import _kmeans_lloyd, _unit_rows
 from etl_npl_pipeline_spark.operators.similarity import _matrix
 
 
@@ -43,19 +39,14 @@ def _norm_rows(vs: pd.Series) -> np.ndarray:
 
 
 def train_pq_codebooks(
-    corpus: DataFrame,
-    vec_col: str,
+    mat: np.ndarray,
     m_subspaces: int,
     k_codes: int,
     seed: int,
 ) -> np.ndarray:
-    """Per-subspace k-means codebooks, trained on a bounded
-    L2-normalized driver sample. Returns (m, k, d/m)."""
-    mat = _train_sample(corpus, vec_col, seed)
-    if mat.size == 0:
-        # empty corpus -> empty codebooks (no dim to subdivide);
-        # pq_encode over zero subspaces emits empty code arrays
-        return np.zeros((0, 0, 0))
+    """Per-subspace k-means codebooks, trained on the bounded
+    L2-normalized driver sample ``mat`` (``ivf._train_sample``).
+    Returns (m, k, d/m)."""
     dim = mat.shape[1]
     if dim % m_subspaces:
         raise ValueError(f"dim {dim} not divisible by m={m_subspaces}")

@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (array<double>).
 
-- ``dot(a, b)`` / ``cosine(a, b)``: zip_with product + left-to-right
-  aggregate sum. Deterministic element order ⇒ bit-identical to a
-  DuckDB list_reduce oracle (verified) — no UDF, stays on the JVM.
+- ``dot(a, b)``: zip_with product + left-to-right aggregate sum.
+  Deterministic element order ⇒ bit-identical to a DuckDB
+  list_reduce oracle (verified) — no UDF, stays on the JVM.
   ``dot`` scores every candidate pair held as a row (ANN re-rank,
   RAG, MMR): an Arrow UDF doing the same fold costs a Python-worker
   round trip per stage and was slower at every measured pair count.
@@ -51,18 +51,6 @@ def l2_normalize(v: F.Column) -> F.Column:
     # fail >= filters differently across engines.
     safe = F.when(norm == 0.0, F.lit(1.0)).otherwise(norm)
     return F.transform(v, lambda x: x / safe)
-
-
-def cosine(a: F.Column, b: F.Column) -> F.Column:
-    """Cosine similarity of two array<double> columns, computed in a
-    fixed order for cross-engine determinism."""
-    na = F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    nb = F.sqrt(
-        F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    return dot(a, b) / (na * nb)
 
 
 def _empty_result(spark: SparkSession) -> DataFrame:
@@ -197,14 +185,18 @@ def _block_topk(
     return _block_frame(parts)
 
 
+# brute_force_topk's chunk grid: queries per query chunk, corpus rows
+# per corpus chunk. Any grid is exact, so these only set block sizes.
+QUERY_CHUNK_ROWS = 1_000
+CORPUS_CHUNK_ROWS = 20_000
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_chunk_rows: int = 1_000,
-    corpus_chunk_rows: int = 20_000,
     n_q_hint: int | None = None,
     n_c_hint: int | None = None,
 ) -> DataFrame:
@@ -249,12 +241,12 @@ def brute_force_topk(
         [F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv_raw")],
         id_col,
         n_q,
-        query_chunk_rows,
+        QUERY_CHUNK_ROWS,
         corpus,
         [F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv_raw")],
         id_col,
         n_c,
-        corpus_chunk_rows,
+        CORPUS_CHUNK_ROWS,
     )
 
     def score_block(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
@@ -409,9 +401,14 @@ def semantic_near_dups(
     corpus/1000 at 100 TB scale.
     """
     # Deferred import: ivf imports this module at load time.
-    from etl_npl_pipeline_spark.operators.ivf import _centroids, cell_assigner
+    from etl_npl_pipeline_spark.operators.ivf import (
+        _centroids,
+        _train_sample,
+        cell_assigner,
+    )
 
-    assign_cell = cell_assigner(_centroids(df, vec_col, n_clusters, seed))
+    m = _train_sample(df, vec_col, seed)
+    assign_cell = cell_assigner(_centroids(m, n_clusters, seed))
     blocked = df.withColumn("__cell", assign_cell(F.col(vec_col)))
     return embedding_near_dups_blocked(
         blocked,

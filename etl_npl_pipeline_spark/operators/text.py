@@ -62,7 +62,7 @@ THAI_COMBINING = "\u0E31\u0E34-\u0E3A\u0E47-\u0E4E"
 UNSEGMENTED = SCRIPT_THAI + SCRIPT_HAN + SCRIPT_KANA
 # Union of every script class the dominance stage looks at — one
 # regexp over this class decides "any non-Latin script char at all?"
-# before the six per-class counts run (see lang_id).
+# before the six per-class counts run (see lang_id_from_counts).
 ALL_SCRIPTS = (
     SCRIPT_THAI + SCRIPT_HAN + SCRIPT_KANA
     + SCRIPT_HANGUL + SCRIPT_CYRILLIC + SCRIPT_ARABIC
@@ -82,7 +82,7 @@ def _class_count(col: Column | str, ranges: str) -> Column:
 
 def script_counts(col: Column | str) -> dict[str, Column]:
     """Per-script character counts plus the non-whitespace total —
-    the inputs of the script-dominance stage of lang_id."""
+    the inputs of the script-dominance stage of language ID."""
     c = F.col(col) if isinstance(col, str) else col
     return {
         "thai": _class_count(c, SCRIPT_THAI),
@@ -129,14 +129,38 @@ def lang_scores(col: Column | str) -> dict[str, Column]:
 def lang_id_from_counts(
     sc: dict[str, Column], s: dict[str, Column], any_script: Column
 ) -> Column:
-    """The lang_id decision tree over ALREADY-EVALUATED count
-    columns — see lang_id for semantics. Split out so DataFrame-level
-    callers (with_lang_id) can project the 11 regexp counts ONCE and
-    feed plain column references here: the inline form duplicates
-    each count subtree O(labels) times inside the argmax chain, and
-    Catalyst's per-plan work on that tree (subexpression-elimination
-    analysis, codegen) measured ~1.3 s of DRIVER time per fresh plan
-    at any data size — pure plan overhead, not execution."""
+    """Two-stage language ID over ALREADY-EVALUATED count columns:
+    script-class dominance first, stopword argmax as the Latin-script
+    fallback.
+
+    Stage 1 (script): count characters per script class; take the
+    sequential strict-greater argmax over (th, cjk, ko, ru, ar). If
+    the winning script covers at least HALF the non-whitespace
+    characters, the script decides: th/ko/ru/ar directly; the cjk
+    group splits ja-vs-zh by kana share (kana ≥ 20% of the han+kana
+    mass → 'ja' — Japanese prose is ~30-40% kana, Chinese has none).
+    This is what identifies the reference's own domain (Thai NPL
+    reports) and other unsegmented scripts, which have no whitespace
+    tokens for a stopword lexicon to hit.
+
+    Stage 2 (fallback): the stopword argmax over LANG_STOPWORDS;
+    'und' when no hits. A Latin document that merely QUOTES a Thai
+    phrase stays on this path (the quoted script is below
+    dominance), which is the behavior a corpus filter wants.
+
+    All counts are codegen regexp_replace+length integers; ties
+    break by fixed iteration order, so the result is deterministic
+    and exactly replicable in the DuckDB oracles.
+
+    Feed it column references (``with_lang_id``): inline count
+    expressions are duplicated O(labels) times in the argmax chain,
+    ~1.3 s of driver-side plan work per fresh plan."""
+    # Flat greatest()-form of the sequential strict-greater argmax:
+    # entry k wins iff strictly greater than every EARLIER entry
+    # (identical tie semantics to the fold form, but each count
+    # expression appears O(k) times instead of O(2^k) — the fold
+    # form's nested whens blow past janino's 64KB codegen method
+    # limit and knock the whole stage out of whole-stage codegen).
     th, ko = sc["thai"], sc["hangul"]
     ru, ar = sc["cyrillic"], sc["arabic"]
     cjk = sc["han"] + sc["kana"]
@@ -167,22 +191,19 @@ _LID_PREFIX = "__lid_"
 
 
 def with_lang_id(df, col: str, out: str = "lang"):
-    """Two-projection lang_id (r9, VERDICT r8 #6): stage the 11
-    regexp counts + the union-class gate as named columns, then run
-    the decision tree over plain references. CollapseProject leaves
-    non-cheap aliased expressions staged when referenced more than
-    once, so each regexp evaluates exactly once per row AND the plan
-    tree stays O(labels) small — the inline lang_id() form is kept
-    for expression-position callers, but every hot query
-    (corpus_filter_funnel, text_lang_id*, the confusion matrix)
-    should go through this."""
-    sc_names = list(script_counts(col).keys())
+    """Add column ``out``: the language ID of ``col``
+    (``lang_id_from_counts``). Two projections (r9, VERDICT r8 #6):
+    stage the 11 regexp counts + the union-class gate as named
+    columns, then run the decision tree over plain references.
+    CollapseProject leaves non-cheap aliased expressions staged when
+    referenced more than once, so each regexp evaluates exactly once
+    per row AND the plan tree stays O(labels) small. The union-class
+    gate changes no label: zero script chars ⇒ smax = 0 ⇒ dominance
+    false ⇒ stopword fallback."""
+    sc = script_counts(col)
     staged = df.select(
         "*",
-        *[
-            v.alias(f"{_LID_PREFIX}{k}")
-            for k, v in script_counts(col).items()
-        ],
+        *[v.alias(f"{_LID_PREFIX}{k}") for k, v in sc.items()],
         *[
             v.alias(f"{_LID_PREFIX}s_{k}")
             for k, v in lang_scores(col).items()
@@ -190,60 +211,14 @@ def with_lang_id(df, col: str, out: str = "lang"):
         (_class_count(col, ALL_SCRIPTS) > 0).alias(f"{_LID_PREFIX}any"),
     )
     label = lang_id_from_counts(
-        {k: F.col(f"{_LID_PREFIX}{k}") for k in sc_names},
+        {k: F.col(f"{_LID_PREFIX}{k}") for k in sc},
         {k: F.col(f"{_LID_PREFIX}s_{k}") for k in LANG_STOPWORDS},
         F.col(f"{_LID_PREFIX}any"),
     )
-    drop = [f"{_LID_PREFIX}{k}" for k in sc_names]
+    drop = [f"{_LID_PREFIX}{k}" for k in sc]
     drop += [f"{_LID_PREFIX}s_{k}" for k in LANG_STOPWORDS]
     drop.append(f"{_LID_PREFIX}any")
     return staged.withColumn(out, label).drop(*drop)
-
-
-def lang_id(col: Column | str) -> Column:
-    """Two-stage language ID: script-class dominance first, stopword
-    argmax as the Latin-script fallback.
-
-    Stage 1 (script): count characters per script class; take the
-    sequential strict-greater argmax over (th, cjk, ko, ru, ar). If
-    the winning script covers at least HALF the non-whitespace
-    characters, the script decides: th/ko/ru/ar directly; the cjk
-    group splits ja-vs-zh by kana share (kana ≥ 20% of the han+kana
-    mass → 'ja' — Japanese prose is ~30-40% kana, Chinese has none).
-    This is what identifies the reference's own domain (Thai NPL
-    reports) and other unsegmented scripts, which have no whitespace
-    tokens for a stopword lexicon to hit.
-
-    Stage 2 (fallback): the original stopword argmax over
-    LANG_STOPWORDS; 'und' when no hits. A Latin document that merely
-    QUOTES a Thai phrase stays on this path (the quoted script is
-    below dominance), which is the behavior a corpus filter wants.
-
-    All counts are codegen regexp_replace+length integers; ties
-    break by fixed iteration order, so the result is deterministic
-    and exactly replicable in the DuckDB oracles.
-    """
-    # Flat greatest()-form of the sequential strict-greater argmax:
-    # entry k wins iff strictly greater than every EARLIER entry
-    # (identical tie semantics to the fold form, but each count
-    # expression appears O(k) times instead of O(2^k) — the fold
-    # form's nested whens blow past janino's 64KB codegen method
-    # limit and knock the whole stage out of whole-stage codegen).
-    # The union-class `any_script` gate lets codegen skip the six
-    # per-class counts on pure-Latin documents (CaseWhen + And both
-    # short-circuit); semantics identical — zero script chars ⇒
-    # smax = 0 ⇒ dominance false ⇒ stopword fallback.
-    #
-    # NOTE this inline form duplicates count subtrees inside the
-    # argmax chain and costs ~1.3 s of driver-side plan processing
-    # per fresh plan — expression-position compatibility only. Hot
-    # DataFrame-level callers use with_lang_id (counts projected
-    # once, decision tree over references).
-    c = F.col(col) if isinstance(col, str) else col
-    return lang_id_from_counts(
-        script_counts(col), lang_scores(col),
-        _class_count(c, ALL_SCRIPTS) > 0,
-    )
 
 
 def token_count_ws(col: Column | str) -> Column:

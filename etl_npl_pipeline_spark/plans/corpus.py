@@ -22,12 +22,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_npl_pipeline_spark.operators import dedup as D
-from etl_npl_pipeline_spark.operators.components import connected_components
 from etl_npl_pipeline_spark.plans.llmdata import (
     JACCARD_THRESHOLD,
     MAX_SHINGLE_FREQ,
     _docs,
+    _dup_clusters,
 )
 
 MIN_WORDS, MAX_WORDS = 20, 120
@@ -41,11 +40,7 @@ def curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-space split diverges on runs of whitespace/newlines.
     n_words = F.size(F.split(F.trim("text"), r"\s+"))
     good = docs.where(n_words.between(MIN_WORDS, MAX_WORDS))
-    pairs = D.jaccard_pairs(
-        good, "text", "doc_id", n=3,
-        threshold=JACCARD_THRESHOLD, max_shingle_freq=MAX_SHINGLE_FREQ,
-    ).select("doc_a", "doc_b")
-    cc = connected_components(pairs, "doc_a", "doc_b")
+    cc = _dup_clusters(good)
     drop = cc.where(F.col("node") != F.col("component")).select("node")
     kept = good.join(
         F.broadcast(drop), good.doc_id == F.col("node"), "left_anti"

@@ -1605,38 +1605,27 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- L12: duplicate-cluster formation (connected components) -------
 
-def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group the near-duplicate PAIRS (3-gram jaccard, same edge set
-    as dedup_ngram_jaccard) into duplicate CLUSTERS via iterative
-    hash-min label propagation (operators/components.py) — the
-    distributed stand-in for single-node union-find. Output:
-    (doc, component=min doc id in cluster)."""
+def _dup_clusters(docs: DataFrame) -> DataFrame:
+    """Near-duplicate clusters of ``docs``: the 3-gram jaccard pairs
+    (same edge set as dedup_ngram_jaccard) grouped by connected
+    components (operators/components.py), ``(node, component=min
+    doc id in cluster)``. Docs without a near-duplicate are absent."""
     from etl_npl_pipeline_spark.operators.components import connected_components
 
-    docs = _docs(spark, sf_dir)
     pairs = D.jaccard_pairs(
         docs, "text", "doc_id", n=3,
         threshold=JACCARD_THRESHOLD, max_shingle_freq=MAX_SHINGLE_FREQ,
     ).select("doc_a", "doc_b")
-    return connected_components(pairs, "doc_a", "doc_b").orderBy("node")
+    return connected_components(pairs, "doc_a", "doc_b")
 
 
-def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same cluster formation as dedup_components but via the
-    skew-safe large-star/small-star rewrite — the variant for
-    hub-dominated duplicate graphs (boilerplate docs near-matching
-    thousands of others). Identical output contract, so it shares
-    dedup_components' oracle."""
-    from etl_npl_pipeline_spark.operators.components import (
-        connected_components_star,
-    )
-
-    docs = _docs(spark, sf_dir)
-    pairs = D.jaccard_pairs(
-        docs, "text", "doc_id", n=3,
-        threshold=JACCARD_THRESHOLD, max_shingle_freq=MAX_SHINGLE_FREQ,
-    ).select("doc_a", "doc_b")
-    return connected_components_star(pairs, "doc_a", "doc_b").orderBy("node")
+def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Group the near-duplicate PAIRS into duplicate CLUSTERS via the
+    large-star/small-star connected-components loop — the
+    distributed stand-in for single-node union-find. Output:
+    (doc, component=min doc id in cluster). Also served as
+    dedup_components_star, which shares this oracle."""
+    return _dup_clusters(_docs(spark, sf_dir)).orderBy("node")
 
 
 DEDUP_COMPONENTS_SQL = f"""
@@ -1767,14 +1756,8 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs → clusters → filtered corpus, all distributed; the anti
     join's right side is tiny (only docs inside clusters), so it
     broadcasts."""
-    from etl_npl_pipeline_spark.operators.components import connected_components
-
     docs = _docs(spark, sf_dir)
-    pairs = D.jaccard_pairs(
-        docs, "text", "doc_id", n=3,
-        threshold=JACCARD_THRESHOLD, max_shingle_freq=MAX_SHINGLE_FREQ,
-    ).select("doc_a", "doc_b")
-    cc = connected_components(pairs, "doc_a", "doc_b")
+    cc = _dup_clusters(docs)
     drop = cc.where(F.col("node") != F.col("component")).select("node")
     return (
         docs.join(

@@ -8,6 +8,7 @@ Arrow batching). Nothing here is machine-specific.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 from collections.abc import Iterator
@@ -20,23 +21,39 @@ from pyspark.sql import SparkSession
 # partitions at runtime, so a higher static number is safe at scale.
 _LOCAL_SHUFFLE_PARTITIONS = "32"
 
-# <checkout>/.tmp: resolved from the package location, so a checkout
-# anywhere writes its scratch files inside itself
+# <checkout>/.tmp/p<pid>: inside the checkout (resolved from the
+# package location) and private to the process, so two processes
+# driving one checkout never empty each other's entries. Nothing is
+# created here. A root left by a killed process with this pid is
+# emptied; the owner (not a forked child) removes the root at exit.
+_SCRATCH_PID = os.getpid()
 _SCRATCH_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".tmp",
+    f"p{_SCRATCH_PID}",
 )
 
 
+def _remove_scratch_root() -> None:
+    if os.getpid() == _SCRATCH_PID:
+        shutil.rmtree(_SCRATCH_ROOT, ignore_errors=True)
+
+
+_remove_scratch_root()
+atexit.register(_remove_scratch_root)
+
+
 def scratch_dir(name: str = "") -> str:
-    """Path of the scratch entry ``name`` under the checkout's ``.tmp``
-    dir (the dir itself when ``name`` is empty). Nothing is created."""
+    """Path of the scratch entry ``name`` under this process's scratch
+    root ``<checkout>/.tmp/p<pid>`` (the root itself when ``name`` is
+    empty). Nothing is created; the root is removed at exit."""
     return os.path.join(_SCRATCH_ROOT, name) if name else _SCRATCH_ROOT
 
 
 def sf_scratch_dir(name: str, sf_dir: str) -> str:
     """Scratch entry ``name/<sf dir name>``, emptied: contracts that
-    stage files per scale factor key them by the sf dir, so
-    concurrent drives at different scale factors never clobber each
+    stage files per scale factor key them by the sf dir, so drives
+    at different scale factors in one process never clobber each
     other's files."""
     path = os.path.join(
         scratch_dir(name), os.path.basename(os.path.realpath(sf_dir.rstrip("/")))

@@ -504,7 +504,9 @@ def test_refresh_onto_empty_base_parks_in_sentinel_cell(spark, sf_dir, tmp_path)
     shutil.rmtree(idx, ignore_errors=True)
 
 
-def test_pq_query_corpus_as_queries_grid_invariance(spark, sf_dir):
+def test_pq_query_corpus_as_queries_grid_invariance(
+    spark, sf_dir, monkeypatch
+):
     """The r9 distributed ADC is a pure block decomposition: running
     the WHOLE CORPUS as the query batch through a forced multi-chunk
     (query x code) grid must emit exactly the single-block result.
@@ -520,10 +522,11 @@ def test_pq_query_corpus_as_queries_grid_invariance(spark, sf_dir):
         spark, idx, emb, k=L.ANN_K,
         rerank_factor=L.PQ_KNOBS["rerank_factor"],
     ).orderBy("query_id", "rank")
+    monkeypatch.setattr(AI, "PQ_QUERY_CHUNK_ROWS", 60)
+    monkeypatch.setattr(AI, "PQ_CODE_CHUNK_ROWS", 70)
     grid = pq_query(
         spark, idx, emb, k=L.ANN_K,
         rerank_factor=L.PQ_KNOBS["rerank_factor"],
-        query_chunk_rows=60, code_chunk_rows=70,
     ).orderBy("query_id", "rank")
     got = [tuple(r) for r in grid.collect()]
     want = [tuple(r) for r in single.collect()]

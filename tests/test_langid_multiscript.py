@@ -18,7 +18,7 @@ def _predict(spark, rows):
     df = spark.createDataFrame(rows, schema="lang string, text string")
     return {
         r["text"]: r["p"]
-        for r in df.select("text", T.lang_id("text").alias("p")).collect()
+        for r in T.with_lang_id(df, "text", out="p").collect()
     }
 
 
@@ -82,8 +82,7 @@ def test_corpus_latin_path_unchanged(spark, sf_dir):
 
     script_langs = {"th", "zh", "ja", "ko", "ru", "ar"}
     n = (
-        _docs(spark, sf_dir)
-        .select(T.lang_id("text").alias("p"))
+        T.with_lang_id(_docs(spark, sf_dir), "text", out="p")
         .where(F.col("p").isin(*script_langs))
         .count()
     )

@@ -210,9 +210,9 @@ def test_scd2_apply_versions_changes(spark):
 
 
 def test_connected_components_long_chain_converges(spark):
-    """A 40-node chain has diameter 39 — pure edge relaxation would
-    need 39 rounds; pointer jumping must converge well inside the
-    default cap."""
+    """A 40-node chain has diameter 39 — one-hop label relaxation
+    would need 39 rounds; the star rewrite must converge well inside
+    the default cap."""
     from etl_npl_pipeline_spark.operators.components import connected_components
 
     edges = spark.createDataFrame(

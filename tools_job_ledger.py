@@ -18,9 +18,9 @@ Jobs of every job group are counted (``metrics.run_with_metrics``),
 so streaming micro-batches are in. The session always runs on
 ``local[4]``: the ``_spread`` users and emb_pca's build read
 ``defaultParallelism``, so their counts move with the core count.
-The ANN index is built into a private, empty warehouse, so an index
-another process left in the checkout's ``spark-warehouse`` never
-turns a build into an adoption. Data: the test suite's sf0.001
+The ANN index is built into a private, empty warehouse in the
+process's scratch root, so an index another process left in the
+checkout's ``spark-warehouse`` never turns a build into an adoption. Data: the test suite's sf0.001
 (``tests/conftest.py``'s ``SF_DIR``). About 6-8 minutes
 on 4 cores.
 
@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 
 # before the session starts: the counts are defined on local[4]
@@ -85,13 +84,10 @@ def render(sf_dir: str, rows: dict[str, dict[str, int]]) -> str:
 
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(HERE, "job_ledger.json")
-    warehouse = scratch_dir(f"ledger_warehouse_{os.getpid()}")
-    shutil.rmtree(warehouse, ignore_errors=True)
-    try:
-        spark = get_spark("etl-npl-pipeline-job-ledger", warehouse=warehouse)
-        rows = ledger(spark, SF_DIR)
-    finally:
-        shutil.rmtree(warehouse, ignore_errors=True)
+    spark = get_spark(
+        "etl-npl-pipeline-job-ledger", warehouse=scratch_dir("warehouse")
+    )
+    rows = ledger(spark, SF_DIR)
     with open(out_path, "w") as fh:
         fh.write(render(SF_DIR, rows))
     print(json.dumps({"contracts": len(rows), "out": out_path}))
